@@ -37,14 +37,15 @@ object GraphExport {
     * Same per-type 0..n-1 contiguous ids as calling [[denseIds]] per
     * type, but one sort + one zipWithIndex + one 10-row aggregate
     * instead of 2 jobs per type — the difference between ~30 and ~4
-    * Spark jobs when an export carries ten node types. */
-  /** The returned frame is CACHED and already materialized (callers scan
-    * it at least twice — src + dst side of every COO translation); the
-    * zipWithIndex intermediate is unpersisted before returning, so no
-    * hidden storage outlives the call. Callers own the returned cache and
-    * may `unpersist()` it when the export is consumed. */
+    * Spark jobs when an export carries ten node types.
+    *
+    * The returned frame is an already-materialized cache leaf
+    * (`GraftBridge.cacheLeaf`; callers scan it at least twice — src +
+    * dst side of every COO translation). Its cache lives as long as the
+    * session's cache does: `unpersist()` on the leaf releases nothing.
+    * The zipWithIndex intermediate is unpersisted before returning, so
+    * no other storage outlives the call. */
   def denseIdsByType(df: DataFrame, typeCol: String, orderCols: Seq[String]): DataFrame = {
-    if (sys.env.contains("GRAFT_DENSE_WINDOW")) return denseIdsByTypeWindow(df, typeCol, orderCols)
     val sorted = df.orderBy((typeCol +: orderCols).map(col): _*)
     // internal-row zip (r11): skips the catalyst→Row→catalyst double
     // conversion of every node row (feature arrays included) that
@@ -53,10 +54,10 @@ object GraphExport {
       .zipWithIndexColumn(sorted, "__gidx").cache()
     val offsets = zipped.groupBy(col(typeCol))
       .agg(min(col("__gidx")).as("__off"))
-    val out = zipped.join(broadcast(offsets), Seq(typeCol))
-      .withColumn("dense_id", col("__gidx") - col("__off"))
-      .drop("__gidx", "__off")
-      .cache()
+    val out = org.apache.spark.sql.GraftBridge.cacheLeaf(
+      zipped.join(broadcast(offsets), Seq(typeCol))
+        .withColumn("dense_id", col("__gidx") - col("__off"))
+        .drop("__gidx", "__off"))
     out.count() // fill the result cache while the zip intermediate is warm
     zipped.unpersist()
     out
@@ -64,8 +65,8 @@ object GraphExport {
 
   /** The SQL spelling of [[denseIdsByType]]: one per-type `row_number`
     * window, no RDD round-trip. Identical ids by construction. Tried per
-    * the round-5 review and MEASURED WORSE end-to-end, so it stays the
-    * non-default (GRAFT_DENSE_WINDOW=1 to flip for experiments). Numbers
+    * the round-5 review and MEASURED WORSE end-to-end, so it is kept only
+    * as the reference the zipWithIndex path is tested against. Numbers
     * (q64 full build, tmpfs, local[32]): at sf0.1 the dense-id stage
     * ties (4.4 s both) but the whole build degrades 19.1 s → 38.5 s; at
     * 10× sf0.1 the stage wins (11.4 s → 9.0 s) yet the build still loses

@@ -3,6 +3,7 @@ package graft.graph
 import graft.nba.{Edges, GamePipeline, Stints}
 import graft.ops.TimeKernel
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftBridge.cacheLeaf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,26 +37,24 @@ object PyGExport {
   /** (nodes, edges): nodes = (node_type, node_id, dense_id, feats);
     * edges = (rel_type, src_type, dst_type, src_id, dst_id, src_idx,
     * dst_idx). */
-  private def timed[T](label: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_PROFILE")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[profile]   pyg.$label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-      r
-    } else f
-
   def build(p: GamePipeline.Result, gameTeams: DataFrame): (DataFrame, DataFrame) = {
     val stints = p.lineupStints
     val ps = p.playerStints
     val ev = p.attributedEvents
 
+    // Caching rule: `actor` and `coo` live as long as the export (a
+    // SessionCache entry), so they are cache leaves
+    // (GraftBridge.cacheLeaf) — every branch below analyzes one
+    // InMemoryRelation node, not the pipeline DAG behind it. `nodeInput`
+    // is unpersisted once the dense ids exist, so it keeps a plain
+    // `.cache()`.
+    //
     // materialized eagerly: this frame feeds ~8 relation branches of one
     // final plan — a lazy cache would be recomputed concurrently by each
     // branch before any of them manages to populate it
-    val actor = Edges.actorEdges(ev, ps)
-      .filter(col("src_kind") === "player_stint")
-      .cache()
-    timed("actor.count")(actor.count())
+    val actor = cacheLeaf(Edges.actorEdges(ev, ps)
+      .filter(col("src_kind") === "player_stint"))
+    actor.count()
 
     // exported action-node sets: only actions with a resolved PlayerStint
     // actor (manager:519-653 query heads)
@@ -124,9 +123,9 @@ object PyGExport {
     val nodeInput = nodeParts
       .map { case (tpe, df) => df.withColumn("node_type", lit(tpe)) }
       .reduce(_ unionByName _).cache()
-    val nodes = timed("denseIdsByType")(GraphExport.denseIdsByType(
+    val nodes = GraphExport.denseIdsByType(
       nodeInput, "node_type", Seq("__ord", "node_id"))
-      .select(col("node_type"), col("node_id"), col("dense_id"), col("feats")))
+      .select(col("node_type"), col("node_id"), col("dense_id"), col("feats"))
     nodeInput.unpersist() // denseIdsByType materialized its result above
 
     // ---- edge relations (natural keys; COO translation below) ----
@@ -253,14 +252,6 @@ object PyGExport {
 
     val idx = nodes.select(col("node_type"), col("node_id"), col("dense_id"))
     val allEdges = edges.reduce(_ unionByName _)
-    if (sys.env.contains("GRAFT_PROFILE")) {
-      timed("stintEdges.count")(stintEdges.count())
-      timed("psEdges.count")(psEdges.count())
-      timed("actorEdges.count")(actorEdges.count())
-      timed("tookShotEdges.count")(tookShotEdges.count())
-      timed("psPeriodEdges.count")(psPeriodEdges.count())
-      timed("allEdges.count")(allEdges.count())
-    }
     val src = idx.select(col("node_type").as("src_type"), col("node_id").as("src_id"),
       col("dense_id").as("src_idx"))
     val dst = idx.select(col("node_type").as("dst_type"), col("node_id").as("dst_id"),
@@ -268,12 +259,11 @@ object PyGExport {
     // cached: the COO frame is the product of the whole edge assembly —
     // three consumers (edge export, node-feature query, BFS analytics)
     // each re-deriving it would pay the full union+distinct+join chain
-    val coo = allEdges
+    val coo = cacheLeaf(allEdges
       .join(src, Seq("src_type", "src_id"))
       .join(dst, Seq("dst_type", "dst_id"))
       .select(col("rel_type"), col("src_type"), col("dst_type"),
-        col("src_id"), col("dst_id"), col("src_idx"), col("dst_idx"))
-      .cache()
+        col("src_id"), col("dst_id"), col("src_idx"), col("dst_idx")))
     (nodes, coo)
   }
 }

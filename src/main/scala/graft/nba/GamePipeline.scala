@@ -2,6 +2,7 @@ package graft.nba
 
 import graft.nba.Model._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.GraftBridge.cacheLeaf
 import org.apache.spark.sql.functions._
 
 /** End-to-end game pipeline (reference §3.2 `load_game`, re-expressed as
@@ -28,6 +29,12 @@ object GamePipeline {
       starters: Dataset[Starter],
       gameTeams: DataFrame): Result = {
 
+    // Every cached frame here lives as long as the Result (a SessionCache
+    // entry), so each is a cache leaf (GraftBridge.cacheLeaf): downstream
+    // analysis and cache lookups see one InMemoryRelation node, not the
+    // DAG back to the source. Plain `.cache()` is only for frames that
+    // are later unpersisted.
+    //
     // the raw action stream is scanned by FOUR independent consumers
     // (periods, sub events, enrichment/attribution, rebound links /
     // timeline) — cache it once instead of re-deriving it from the
@@ -35,7 +42,7 @@ object GamePipeline {
     // enrichment is map-only (flag columns), so recomputing it over the
     // cached stream is a pipelined pass with no shuffle.
     import spark.implicits._
-    val pbpDf = pbp.toDF().cache()
+    val pbpDf = cacheLeaf(pbp.toDF())
     val pbpDs = pbpDf.as[PbpAction]
 
     // 0. periods pipeline (A1/A2): bounds derived from PBP period events —
@@ -43,26 +50,26 @@ object GamePipeline {
     //    a fixture input (reference manager:126-135)
     // cached: tiny (games × ~4 rows), but each uncached reference would
     // re-derive it from a full pbp scan (q66 + two export branches)
-    val periods = Periods.fromPbp(pbpDf).cache()
+    val periods = cacheLeaf(Periods.fromPbp(pbpDf))
     val gameEnd = Periods.gameBounds(periods)
       .select(col("game_id"), col("game_end_clock"))
 
     // 1. stint engine (W4 fold + W2 tiling + W3 sessionization)
     val subs = Stints.subEvents(spark, pbpDs)
     val snapshots = Stints.lineupSnapshots(spark, starters, subs)
-    val lineupStints = Stints.lineupStints(snapshots, gameEnd).cache()
-    val playerStints = Stints.playerStints(lineupStints).cache()
+    val lineupStints = cacheLeaf(Stints.lineupStints(snapshots, gameEnd))
+    val playerStints = cacheLeaf(Stints.playerStints(lineupStints))
 
     // 2. event extraction + attribution (F5 single pass, J5/J6 as-of)
     val events = Events.enriched(pbpDf)
-    val attributed = Events.attributeToOpponentStints(
+    val attributed = cacheLeaf(Events.attributeToOpponentStints(
       Events.attributeToStints(events, lineupStints),
-      lineupStints, gameTeams).cache()
+      lineupStints, gameTeams))
 
     // 3. scores + plus-minus (A6/W7 windows, A7/A8 roll-ups)
     // chain is consumed by the score query, the season invariant and the
     // streaming twin's oracle — cache the 1-row-per-score frame
-    val chain = Scores.scoreChain(attributed, gameTeams).cache()
+    val chain = cacheLeaf(Scores.scoreChain(attributed, gameTeams))
     val stintPm = Scores.stintPlusMinus(attributed, lineupStints)
     val playerPm = Scores.playerPlusMinus(playerStints, stintPm)
 

@@ -26,9 +26,9 @@ object Domain {
       // cached: the tiny game->teams dim is referenced by attribution, the
       // season invariant and four export branches — and Spark's cache
       // manager resolves every identical GameFeed.gameTeams plan to this
-      // one InMemoryRelation
+      // one InMemoryRelation (a cache leaf: it lives as long as this entry)
       GamePipeline.run(s, GameFeed.pbp(s, dir), GameFeed.starters(s, dir),
-        GameFeed.gameTeams(s, dir).cache())
+        org.apache.spark.sql.GraftBridge.cacheLeaf(GameFeed.gameTeams(s, dir)))
     }
 
   /** Shared oracle CTEs mirroring GameFeed's mapping: the derived event

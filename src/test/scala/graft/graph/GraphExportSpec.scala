@@ -39,7 +39,7 @@ class GraphExportSpec extends AnyFunSuite {
       .select("tp", "stint_id", "dense_id").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(m(zip) == m(win))
-    zip.unpersist(); win.unpersist()
+    win.unpersist() // zip is a cache leaf: unpersist() on it releases nothing
   }
 
   test("cooEdges: every (src,dst) index pair lands in range") {
@@ -83,6 +83,28 @@ class GraphExportSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
     expected.foreach { case (gid, idx) =>
       assert(depths(gid) == idx, s"vertex $gid depth ${depths(gid)} != stint_index $idx")
+    }
+  }
+
+  test("PyG export: nodes/coo sit on InMemoryRelation leaves; q64/q69 plans stay small") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val (nodes, coo) = PyGExport.build(result, Fixture.gameTeams(spark))
+    // coo is q64_graph_export's frame as registered
+    val cooPlan = coo.queryExecution.analyzed
+    assert(cooPlan.isInstanceOf[InMemoryRelation], cooPlan.treeString)
+    nodes.queryExecution.analyzed match {
+      case Project(_, _: InMemoryRelation) =>
+      case other => fail(s"nodes analyzes to\n${other.treeString}")
+    }
+    // q69_pyg_nodes' shape over the node table: a few nodes, not the
+    // export DAG back to the game feed
+    val q69 = nodes.select(col("node_type"), col("node_id"), col("dense_id"),
+      posexplode(col("feats")).as(Seq("feat_idx", "feat_value")))
+      .withColumn("feat_idx", col("feat_idx").cast("long"))
+    Seq("q64" -> cooPlan, "q69" -> q69.queryExecution.analyzed).foreach { case (q, plan) =>
+      val n = plan.collect { case p => p }.size
+      assert(n <= 8, s"$q analyzed plan has $n nodes")
     }
   }
 }

@@ -163,4 +163,34 @@ class GamePipelineSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     assert(a == b)
   }
+
+  test("every frame run caches is an InMemoryRelation leaf") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    Seq("periods" -> result.periods, "lineupStints" -> result.lineupStints,
+      "playerStints" -> result.playerStints, "attributedEvents" -> result.attributedEvents,
+      "scoreChain" -> result.scoreChain).foreach { case (name, df) =>
+      val root = df.queryExecution.analyzed
+      assert(root.isInstanceOf[InMemoryRelation], s"$name analyzes to\n${root.treeString}")
+    }
+  }
+
+  test("cacheLeaf: the leaf fills the original frame's cache entry, one fill") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val evals = spark.sparkContext.longAccumulator("cacheLeaf-evals")
+    val tick = udf { (x: Long) => evals.add(1); x }
+    val df = spark.range(0, 200, 1, 4).select(tick(col("id")).as("id"))
+    val leaf = org.apache.spark.sql.GraftBridge.cacheLeaf(df)
+    val entry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).get
+    val builder = entry.cachedRepresentation.cacheBuilder
+    assert(leaf.queryExecution.analyzed.asInstanceOf[InMemoryRelation].cacheBuilder eq builder)
+    assert(!builder.isCachedColumnBuffersLoaded)
+    assert(graft.Force(leaf) == 200L)
+    assert(builder.isCachedColumnBuffersLoaded)
+    // the original frame and a second leaf pass read that entry: no refill
+    assert(graft.Force(df) == 200L && graft.Force(leaf) == 200L)
+    assert(evals.value == 200L)
+    df.unpersist()
+  }
 }
