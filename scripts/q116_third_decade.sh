@@ -61,16 +61,16 @@ df -h /dev/shm | tail -1
 
 probe
 stamp "anchor: q116 at 100x, refined shape (32p + initialPartitionNum=512, 16g)"
-SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE_PARTITIONS=32 \
-  SPARK_GRAFT_INITIAL_PARTITIONS=512 \
-  java $AO -Xmx16g -cp "$CP" graft.Profile /dev/shm/graft-sf-x100 \
+SPARK_GRAFT_CPUS=32 java $AO -Xmx16g -Dspark.sql.shuffle.partitions=32 \
+  -Dspark.sql.adaptive.coalescePartitions.initialPartitionNum=512 \
+  -cp "$CP" graft.Profile /dev/shm/graft-sf-x100 \
   queries q116_corpus_build || exit 1
 
 probe
 stamp "leg: q116 at 1000x, same shape, same window"
-SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE_PARTITIONS=32 \
-  SPARK_GRAFT_INITIAL_PARTITIONS=512 \
-  java $AO -Xmx16g -cp "$CP" graft.Profile /dev/shm/graft-sf-x1000 \
+SPARK_GRAFT_CPUS=32 java $AO -Xmx16g -Dspark.sql.shuffle.partitions=32 \
+  -Dspark.sql.adaptive.coalescePartitions.initialPartitionNum=512 \
+  -cp "$CP" graft.Profile /dev/shm/graft-sf-x1000 \
   queries q116_corpus_build || exit 1
 
 probe

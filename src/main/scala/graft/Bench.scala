@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
@@ -291,28 +290,7 @@ object Bench {
     val sfDir = stageInput(sfDirRaw)
     System.err.println(
       f"[graft.Bench] scratch=${Scratch.root} staged=$sfDir io_calibration=$ioMbps%.1f MB/s")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE right-size partitions inside cached plans: small cached
-      // frames coalesce to few partitions, huge ones keep parallelism --
-      // the scale-adaptive alternative to hand-tuned coalesce() calls
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // coalesce post-shuffle partitions by byte size, not parallelism:
-      // tiny intermediate shuffles collapse to single-task stages while a
-      // 100 TB shuffle still fans out to thousands of partitions
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // same session semantics as Verify: TIMESTAMP_NTZ casts and epoch
-      // math are session-TZ dependent — bench must execute the verified plan
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // single-node harness: scratch I/O on tmpfs so host writeback
-      // throttling can't masquerade as engine time (see graft.Scratch)
-      .config("spark.local.dir", Scratch.root)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // warm up session machinery (codegen compiler, parquet reader, shuffle)
     // so the first measured query isn't billed for one-time init
     spark.read.parquet(s"$sfDir/region.parquet").count()

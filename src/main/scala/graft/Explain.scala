@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan inspector: prints the formatted physical plan (and optionally
-  * times) for named queries — the ".explain and iterate" loop.
+/** Plan inspector: prints the formatted physical plan Bench executes
+  * (same [[Session]] conf, so AQE settings, `FuseVectorOps` and the
+  * injected functions included) and times each named query through
+  * [[Force]] — the ".explain and iterate" loop.
   *
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
   * With no names, explains every registered query.
@@ -12,14 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build()
     Registry.all
       .filter(q => names.isEmpty || names.contains(q.name))
       .foreach { q =>
@@ -28,7 +21,7 @@ object Explain {
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
         val t0 = System.nanoTime()
-        val n = df.count()
+        val n = Force(df)
         println(f"rows=$n time=${(System.nanoTime() - t0) / 1e9}%.2fs")
       }
     spark.stop()

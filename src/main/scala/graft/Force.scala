@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Honest plan forcing for the timing harnesses (Bench / Profile /
-  * tools.DensityProfile).
+  * Explain / tools.DensityProfile).
   *
   * `df.count()` plans an Aggregate ON TOP of the query, and Catalyst's
   * column pruning then legally deletes any work that only feeds pruned

@@ -1,62 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Phase profiler for the domain pipeline + PyG export — breaks the
   * bench's heavy lines (q60/q61/q64) into their constituent actions so
   * optimization targets measurements, not guesses.
   *
   * Usage: runMain graft.Profile <sfDir>
+  *
+  * Shuffle fan-out must scale with the data, not the thread count: at a
+  * pinned 32 partitions q116 at 1000× outgrew an 8 GiB heap, and a
+  * blanket 512 made the iteration-scale stages crawl at 100×. Scaling
+  * runs therefore raise AQE's pre-coalesce count and let it coalesce the
+  * small stages back down, e.g.
+  * `-Dspark.sql.shuffle.partitions=32
+  * -Dspark.sql.adaptive.coalescePartitions.initialPartitionNum=512`
+  * (BASELINE.md "q116 third decade", scripts/q116_third_decade.sh).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle fan-out must scale with the DATA, not the thread count:
-    // the round-10 q116 1000× attempt OOM'd 81 min in (8 GiB heap, 32
-    // partitions) because per-partition shuffle volume grows 10× per
-    // decade when the partition count is pinned — the spill-merge
-    // working set (read-ahead buffers × spill-file count) outgrew the
-    // heap exactly as it would on a real cluster with too-few shuffle
-    // partitions. A cluster deployment provisions
-    // spark.sql.shuffle.partitions ∝ input size and lets AQE coalesce
-    // the small stages back down; SPARK_GRAFT_SHUFFLE_PARTITIONS is
-    // that knob for the scaling harness (default: thread count, the
-    // bench-session shape).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    // The refined (per-stage) form of the same knob: leave
-    // shuffle.partitions alone and raise AQE's pre-coalesce partition
-    // count instead, so every exchange right-sizes BY BYTES — corpus-
-    // scale shuffles keep a high fan-out while iteration-scale ones
-    // (the GraphX CC feeders that crawled at a blanket 512) coalesce
-    // back to a handful of tasks. Unset = Spark default (= the final
-    // shuffle.partitions value), i.e. behavior unchanged.
-    //
-    // ROUND-11 DEFAULT PROTOCOL for scaling runs (BASELINE.md "q116
-    // third decade"): SPARK_GRAFT_INITIAL_PARTITIONS=512 with 32
-    // shuffle partitions and SPARK_DRIVER_MEM=16g — the one shape that
-    // avoids both measured failure modes (the pinned-32p heap OOM at
-    // 1000×, the blanket-512p small-stage crawl at 100×). See
-    // scripts/q116_third_decade.sh for the committed campaign form.
-    val initialPartitions = sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-    val spark = initialPartitions.fold(spark0)(n => spark0
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", n))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // measurement toggle ONLY (never set in Bench/Verify): quantify how
-      // much of a heavy line is AQE per-stage job-scheduling overhead
-      .config("spark.sql.adaptive.enabled",
-        (!sys.env.contains("GRAFT_NO_AQE")).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.local.dir", Scratch.root)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     val sc = spark.sparkContext
     def time(label: String)(f: => Long): Unit = {
       val j0 = sc.statusTracker.getJobIdsForGroup(null).length

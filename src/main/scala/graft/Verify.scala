@@ -47,26 +47,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE right-size partitions inside cached plans: small cached
-      // frames coalesce to few partitions, huge ones keep parallelism --
-      // the scale-adaptive alternative to hand-tuned coalesce() calls
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // coalesce post-shuffle partitions by byte size, not parallelism:
-      // tiny intermediate shuffles collapse to single-task stages while a
-      // 100 TB shuffle still fans out to thousands of partitions
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // single-node harness: scratch I/O on tmpfs so host writeback
-      // throttling can't masquerade as engine time (see graft.Scratch)
-      .config("spark.local.dir", Scratch.root)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // record the scratch medium: a silent tmpfs→disk fallback would make
     // runs non-comparable across hosts with no visible signal
     System.err.println(s"[graft.Verify] scratch=${Scratch.root}")

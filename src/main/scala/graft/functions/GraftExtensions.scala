@@ -14,10 +14,10 @@ import org.apache.spark.sql.types.IntegerType
   *   SELECT dot_product(a.embedding, b.embedding)  -- fused codegen'd dot
   * }}}
   *
-  * Activated everywhere the engine builds a session via
-  * `spark.sql.extensions=graft.functions.GraftExtensions` (Bench,
-  * Verify, Profile, the test session) — the standard extension-injection
-  * path a user of the library would configure on their own cluster.
+  * Activated by `spark.sql.extensions=graft.functions.GraftExtensions`,
+  * which [[graft.Session]] sets on every session the engine builds — the
+  * standard extension-injection path a user of the library would
+  * configure on their own cluster.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -68,18 +68,7 @@ object DensityProfile {
     val factor = args(1).toInt
     val domain = math.round(1000000.0 * math.sqrt(factor.toDouble))
     val r = 50000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.local.dir", graft.Scratch.root)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement harness for the q95b IVF default (round-6 item): sweeps
   * the (k cells, nprobe) grid under the existing recall harness and
   * prints mean recall@5, the fraction of the corpus each probe scans
@@ -18,16 +16,7 @@ import org.apache.spark.sql.SparkSession
 object IvfSweep {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.local.dir", graft.Scratch.root)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build()
     println(s"[ivf-sweep] dir=$dir")
     println("k\tnprobe\trecall@5\tscan_frac\tsec")
     for (k <- Seq(8, 16, 32); np <- Seq(1, 2, 4) :+ k if np <= k) {

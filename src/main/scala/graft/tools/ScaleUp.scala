@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× blow-up of a driver sf directory into RAM scratch —
@@ -92,15 +92,7 @@ object ScaleUp {
     val dst = args.headOption
       .getOrElse(s"${graft.Scratch.root}/graft-sf-x$factor" +
         skew.map("-" + _).getOrElse(""))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", graft.Scratch.root)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
 
     def t(n: String): DataFrame = graft.Tables(spark, src, n)
     def reps(base: DataFrame)(shift: (DataFrame, Long) => DataFrame): DataFrame =

@@ -57,16 +57,12 @@ object StateStoreExperiment {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     for (provider <- Seq("hdfs", "rocksdb"); cohort <- Seq(true, false)) {
-      val b = SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.local.dir", graft.Scratch.root)
-        .config("spark.ui.enabled", "false")
-      if (provider == "rocksdb")
-        b.config("spark.sql.streaming.stateStore.providerClass", rocks)
-      val spark = b.getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      // 8 shuffle partitions = 8 state stores per operator, the fan-out
+      // the results in q100's scaladoc were measured at
+      val spark = graft.Session.build(overrides =
+        Map("spark.sql.shuffle.partitions" -> "8") ++
+          (if (provider == "rocksdb")
+            Map("spark.sql.streaming.stateStore.providerClass" -> rocks) else Map.empty))
       val ms = run(spark, dir, cohort)
       println(s"RESULT provider=$provider cohort=${if (cohort) "1/8" else "full"} ms=$ms")
       spark.stop()

@@ -15,27 +15,14 @@ import org.apache.spark.sql.streaming.Trigger
   * measured component (walCommit vs addBatch vs stateStoreCommit vs
   * queryPlanning) instead of guessing.
   *
-  * A/B lever: GRAFT_STREAM_CONFS="k=v;k=v" applies session-conf
-  * overrides before each run.
+  * A/B lever: pass session confs as `-Dspark.*` JVM properties.
   *
   *   SPARK_GRAFT_CPUS=32 scripts/jrun.sh graft.tools.StreamCostProbe
   */
 object StreamCostProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.local.dir", graft.Scratch.root)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("GRAFT_STREAM_CONFS").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    val spark = graft.Session.build()
     // session warm-up so run 1 isn't billed codegen/parquet init
     spark.read.parquet(s"$dir/region.parquet").count()
 

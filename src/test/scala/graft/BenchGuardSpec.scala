@@ -198,5 +198,9 @@ class BenchGuardSpec extends AnyFunSuite {
       "Profile queries mode must force via graft.Force")
     assert(!p.contains("q.run(spark, sfDir).count"),
       "no .count() timing on registered queries")
+    // Explain prints and times the same registered-query plans
+    val e = source("src/main/scala/graft/Explain.scala")
+    assert(e.contains("Force(df)"), "Explain must time via graft.Force")
+    assert(!e.contains("df.count"), "no .count() timing in Explain")
   }
 }

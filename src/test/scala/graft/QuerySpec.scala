@@ -1,32 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JobCountPinSpec reads statusTracker.getJobIdsForGroup(null),
-      // which is backed by the UI status store and evicts beyond
-      // spark.ui.retainedJobs (default 1000). The shared session runs
-      // the whole suite's jobs first, so at the default the store can
-      // saturate and the pins' deltas under-read — raise it far above
-      // any suite's job count so a delta of hundreds stays visible
-      .config("spark.ui.retainedJobs", "100000")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.local.dir", Scratch.root)
-      .config("spark.sql.warehouse.dir",
-        Scratch.tempDir("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
 
 /** Smoke-level checks on every registered query: runs at sf0.001, asserts
   * schema sanity and (where cheap) semantic invariants. Deep value
