@@ -31,6 +31,7 @@ object Bench {
     * `spark.local.dir`-on-tmpfs can't shield; one untimed copy (sf0.1 is
     * ~17 MB) makes every timed query's I/O RAM-backed. On a real cluster
     * inputs live on a distributed store and this staging step is moot.
+    * The copy is deleted at JVM exit ([[Scratch.tempDir]]).
     */
   def stageInput(sfDir: String): String = {
     val src = Paths.get(sfDir)
@@ -51,15 +52,6 @@ object Bench {
         children(s).foreach(c => copy(c, d.resolve(c.getFileName)))
       } else Files.copy(s, d)
     copy(src, dst.resolve(src.getFileName))
-    // staged copies live in RAM — reclaim on JVM exit so repeated bench
-    // runs can't accumulate into the tmpfs cap
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: Path): Unit = {
-        if (Files.isDirectory(p)) children(p).foreach(rm)
-        Files.deleteIfExists(p)
-      }
-      rm(dst)
-    }))
     dst.resolve(src.getFileName).toString
   }
 

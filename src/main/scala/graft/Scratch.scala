@@ -13,6 +13,10 @@ package graft
   * NVMe for `spark.local.dir`, and checkpoint locations go to durable
   * storage precisely because they must survive node loss — only the
   * single-JVM harness gets the RAM-backed shortcut.
+  *
+  * The one-shot streaming drains checkpoint here through
+  * [[streaming.LocalCheckpointFileManager]], which writes each checkpoint
+  * file without forking a process.
   */
 object Scratch {
   import java.nio.file.{Files, Path, Paths}
@@ -25,7 +29,19 @@ object Scratch {
     else sys.props("java.io.tmpdir")
   }
 
-  /** A fresh scratch directory under [[root]]. */
-  def tempDir(prefix: String): Path =
-    Files.createTempDirectory(Paths.get(root), prefix)
+  /** A fresh scratch directory under [[root]], deleted with everything
+    * in it when the JVM exits, so repeated runs don't fill the tmpfs. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(Paths.get(root), prefix)
+    sys.addShutdownHook(deleteTree(dir))
+    dir
+  }
+
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val paths = Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
 }

@@ -16,29 +16,14 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingQ {
 
-  /** Drive a streaming frame to completion once per (session, sfDir,
-    * tag): parquet sink + checkpoint live in JVM-scoped scratch (cleaned
-    * up on exit so repeated Verify/Bench runs don't accumulate under
-    * /tmp), `Trigger.AvailableNow` plus the trailing no-data batch drain
-    * the source AND any watermark-dependent state, and the sink is read
-    * back as a batch frame. Every streaming query shares this one
-    * scaffold — the tag keys the cache and names the scratch dir.
-    *
-    * Memoization lives in [[graft.SessionCache]] (memoized-future shape,
-    * weak session keying). The cached value is the sink PATH — a string
-    * that doesn't reference the session — held strongly (`onceStrong`):
-    * a weakly-held path could be GC-cleared between two specs and silently
-    * re-run a whole stream, while the strong path pins only bytes.
-    *
-    * Conf overrides (`shufflePartitions` sizes the state-store count for
-    * the join queries) are applied to a session CLONE (`newSession()`:
-    * same context, shared state, and injected extensions; fresh conf) and
-    * the stream is BUILT AND STARTED on that clone — the shared session's
-    * conf is never mutated, so a concurrent query build elsewhere in the
-    * JVM can't race a set/restore window and pin the wrong state-store
-    * count into a checkpoint. */
   /** Session-conf overlay applied to EVERY one-shot drain (round-11
-    * optimization, guide §1.1/§6): Spark 4.1's checkpoint file-checksum
+    * optimization, guide §1.1/§6). Both keys drop a safeguard durable
+    * checkpoints want, which is only right because each drain writes
+    * JVM-scoped tmpfs scratch, deleted on exit ([[graft.Scratch.tempDir]]),
+    * from one query at a time; production checkpoints on shared storage
+    * keep Spark's defaults, so the overlay is set for drains only.
+    *
+    * `fileChecksum.enabled=false`: Spark 4.1's checkpoint file-checksum
     * layer writes one `.checksum` sidecar per checkpoint file (state
     * deltas, offset/commit log entries, sink manifests) — measured at
     * ~HALF of every state-store commit at drain scale
@@ -47,50 +32,75 @@ object StreamingQ {
     * restart gates recover through the offset/commit logs with or
     * without sidecars (Spark 4.0 semantics — the pre-change log was
     * already full of "No checksum file found" warnings because mixed
-    * versions tolerate absence by design). Integrity sidecars belong on
-    * durability-critical production checkpoints on unreliable storage;
-    * these drains write JVM-scoped scratch that is deleted on exit. */
+    * versions tolerate absence by design).
+    *
+    * `checkpointFileManagerClass`: without Hadoop's native library the
+    * local filesystem starts a process for each permission call, and
+    * Spark's default `FileContext` manager makes ten per checkpoint file
+    * and its `.crc` (`chmod` on each create, `readlink` four times on
+    * each rename): ~45 ms per offset, commit, sink-log and state-store
+    * file. [[graft.streaming.LocalCheckpointFileManager]] writes the same
+    * files through `java.nio.file` with no fork. (Spark's `FileSystem`
+    * manager skips the `readlink`s but still forks `chmod`, and on the
+    * local filesystem it keeps the old file when asked to overwrite one,
+    * which state-store deltas and changelogs do on a replayed batch.)
+    * The Hadoop conf carries the setting to the stream thread's logs and
+    * to the executors' state stores (HDFS-backed deltas and RocksDB
+    * changelogs alike). */
   private val drainConfs = Map(
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
-  /** Default state-store fan-out for the one-shot drains (r12, guide
-    * §2.2/§1.2): every stateful operator commits ONE state store per
-    * shuffle partition per micro-batch, and at drain scale (≤ a few
-    * thousand rows of state) the per-store commit overhead — delta file
-    * create + fsync + manifest — dominates the actual state bytes, so 32
-    * stores cost ~4× the commit wall of 8 for identical results. Results
-    * are partition-count-invariant by construction AND by test: Verify
-    * has always driven these same drains at 4 partitions (local[4],
+  /** State-store fan-out of the one-shot drains (r12, guide §2.2/§1.2):
+    * every stateful operator commits ONE state store per shuffle
+    * partition per micro-batch, and at drain scale (≤ a few thousand rows
+    * of state) the per-store commit cost — creating and renaming its
+    * checkpoint files — dominates the actual state bytes, so 32 stores
+    * cost ~4× the commit wall of 8 for identical results. Results are
+    * partition-count-invariant by construction AND by test: Verify has
+    * always driven these same drains at 4 partitions (local[4],
     * shuffle=4) while Bench used 32, with every oracle green. Production
-    * sizes state fan-out to key cardinality × state bytes, not cores —
-    * that judgment stays env-tunable here; explicit per-drain overrides
-    * (the join drains' Some(8)) win over the default. */
-  private def drainShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(8)
+    * sizes state fan-out to key cardinality × state bytes, not cores. */
+  private val DrainShufflePartitions = 8
 
+  /** The session a drain is built and started on: a CLONE of `spark`
+    * (`newSession()`: same context, shared state, and injected
+    * extensions; fresh conf) carrying [[drainConfs]], `extraConfs` and
+    * `shufflePartitions`, which sizes the state-store count. The shared
+    * session's conf is never mutated, so a concurrent query build
+    * elsewhere in the JVM can't race a set/restore window and pin the
+    * wrong state-store count into a checkpoint. */
+  private[graft] def drainSession(spark: SparkSession,
+      shufflePartitions: Int = DrainShufflePartitions,
+      extraConfs: Map[String, String] = Map.empty): SparkSession = {
+    val sess = spark.newSession()
+    (drainConfs ++ extraConfs +
+      ("spark.sql.shuffle.partitions" -> shufflePartitions.toString))
+      .foreach { case (k, v) => sess.conf.set(k, v) }
+    sess
+  }
+
+  /** Drive a streaming frame to completion once per (session, sfDir,
+    * tag) on a [[drainSession]]: parquet sink + checkpoint live in
+    * JVM-scoped scratch ([[graft.Scratch.tempDir]]), `Trigger.AvailableNow`
+    * plus the trailing no-data batch drain the source AND any
+    * watermark-dependent state, and the sink is read back as a batch
+    * frame. Every streaming query shares this one scaffold — the tag
+    * keys the cache and names the scratch dir.
+    *
+    * Memoization lives in [[graft.SessionCache]] (memoized-future shape,
+    * weak session keying). The cached value is the sink PATH — a string
+    * that doesn't reference the session — held strongly (`onceStrong`):
+    * a weakly-held path could be GC-cleared between two specs and silently
+    * re-run a whole stream, while the strong path pins only bytes. */
   private def streamOnce(tag: String, spark: SparkSession, dir: String,
-      shufflePartitions: Option[Int] = None,
+      shufflePartitions: Int = DrainShufflePartitions,
       extraConfs: Map[String, String] = Map.empty)(
       build: SparkSession => DataFrame): DataFrame = {
     val path = graft.SessionCache.onceStrong(spark, s"stream#$dir#$tag") {
-      val overrides = drainConfs ++ extraConfs +
-        ("spark.sql.shuffle.partitions" ->
-          shufflePartitions.getOrElse(drainShufflePartitions).toString)
-      val sess = if (overrides.isEmpty) spark else {
-        val s2 = spark.newSession()
-        overrides.foreach { case (k, v) => s2.conf.set(k, v) }
-        s2
-      }
-      val tmpPath = graft.Scratch.tempDir(s"graft-$tag-")
-      val tmp = tmpPath.toString
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        if (Files.exists(tmpPath))
-          Files.walk(tmpPath).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-      }
+      val sess = drainSession(spark, shufflePartitions, extraConfs)
+      val tmp = graft.Scratch.tempDir(s"graft-$tag-").toString
       val q = build(sess)
         .writeStream.format("parquet")
         .option("path", s"$tmp/out")
@@ -118,10 +128,6 @@ object StreamingQ {
   private val styleList = sqlList(graft.nba.GameFeed.shotStyles)
   private val gf = graft.nba.GameFeed
 
-  /** Streaming ingestion parity: the full per-event pbp expansion (every
-    * family, actor ids, coordinates) as produced INCREMENTALLY by the
-    * file-source stream — period bracket rows excluded (they need
-    * end-of-game knowledge a live stream doesn't have). */
   /** The one-shot feed oracle, shared VERBATIM by q73 (single query
     * incarnation drains everything) and q117 (a checkpoint restart in
     * the middle): recovery has to be invisible in the output, so both
@@ -251,6 +257,10 @@ object StreamingQ {
       col("jumpball_won_person_id"), col("jumpball_lost_person_id"),
       col("jumpball_recovered_person_id"), col("x"), col("y"), col("dist"))
 
+  /** Streaming ingestion parity: the full per-event pbp expansion (every
+    * family, actor ids, coordinates) as produced INCREMENTALLY by the
+    * file-source stream — period bracket rows excluded (they need
+    * end-of-game knowledge a live stream doesn't have). */
   val q73StreamIngest: Q = Q.sql(
     "q73_stream_ingest",
     feedIngestSql,
@@ -258,37 +268,6 @@ object StreamingQ {
     (s, dir) => pbpCols(ingest(s, dir))
   }
 
-  /** Checkpoint-restart recovery, promoted from spec to the oracle gate:
-    * the feed is drained by TWO query incarnations. The first sees only
-    * the front half of the feed (published in (ts, event_id) arrival
-    * order), drains it with `AvailableNow`, and is discarded. The back
-    * half is then published and a BRAND-NEW query object — connected to
-    * the first only through the sink and checkpoint paths — picks up the
-    * per-game fold state and source offsets from the checkpoint and
-    * drains the rest. The sink union gates against [[feedIngestSql]],
-    * the UNCHANGED one-shot oracle: exactly-once recovery means no row
-    * is replayed (the driver's hash compare is a multiset — a duplicate
-    * fails rows_match) and no mid-game state is lost (a reset fold would
-    * mis-number every action after the cutoff). */
-  /** Two-incarnation restart scaffold shared by q117 (stateful fold) and
-    * q118 (full-outer join state): publishes the front half of the feed
-    * in (ts, event_id) arrival order, drains it with a query that is then
-    * DISCARDED, publishes the back half, and drains with a brand-new
-    * query connected to the first only through the sink and checkpoint
-    * paths. Conf overrides ride a session clone exactly like
-    * [[streamOnce]]. The staging split (a global window over the fixture)
-    * is harness work, never part of the measured streaming plan. */
-  /** `tearSinkCommit = true` simulates the worst crash point of the
-    * exactly-once file-sink protocol: after incarnation 1 finishes, the
-    * checkpoint's LAST `commits/<batchId>` marker is deleted — exactly
-    * the on-disk state left by a kill that landed AFTER the sink wrote
-    * its data files and `_spark_metadata/<batchId>` manifest but BEFORE
-    * the commit log recorded the batch. Incarnation 2 must then REPLAY
-    * that batch from the offset log, and the sink's manifest check is
-    * the only thing standing between the replay and duplicate output
-    * files; the re-read (which honors `_spark_metadata`) and the
-    * unchanged one-shot oracle prove neither a duplicate nor a lost row
-    * survived. */
   /** The two staged feed halves every restart scaffold publishes, built
     * ONCE per (session, sf dir, split predicate) — round-11 optimization
     * (guide §2.4, remove repeated work): 12 of the 13 restart gates use
@@ -304,14 +283,7 @@ object StreamingQ {
     graft.SessionCache.onceStrong(spark,
       s"stream#$dir#restart-stage#${splitPred.map(_.toString).getOrElse("half")}") {
       import org.apache.spark.sql.expressions.Window
-      import java.nio.file.{Files, Path}
       val stagePath = graft.Scratch.tempDir("graft-restart-stage-")
-      sys.addShutdownHook {
-        import java.util.Comparator
-        if (Files.exists(stagePath))
-          Files.walk(stagePath).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-      }
       val ev = graft.Tables(spark, dir, "events")
       val n = ev.count()
       val ranked = ev.withColumn("__rn",
@@ -327,30 +299,36 @@ object StreamingQ {
         stage(ranked.filter(!firstHalf).drop("__rn"), "slice2"))
     }
 
+  /** Two-incarnation restart scaffold shared by q117 (stateful fold) and
+    * q118 (full-outer join state): publishes the front half of the feed
+    * in (ts, event_id) arrival order, drains it with a query that is then
+    * DISCARDED, publishes the back half, and drains with a brand-new
+    * query connected to the first only through the sink and checkpoint
+    * paths. Both incarnations run on one [[drainSession]]. The staging
+    * split (a global window over the fixture) is harness work, never
+    * part of the measured streaming plan.
+    *
+    * `tearSinkCommit = true` simulates the worst crash point of the
+    * exactly-once file-sink protocol: after incarnation 1 finishes, the
+    * checkpoint's LAST `commits/<batchId>` marker is deleted — exactly
+    * the on-disk state left by a kill that landed AFTER the sink wrote
+    * its data files and `_spark_metadata/<batchId>` manifest but BEFORE
+    * the commit log recorded the batch. Incarnation 2 must then REPLAY
+    * that batch from the offset log, and the sink's manifest check is
+    * the only thing standing between the replay and duplicate output
+    * files; the re-read (which honors `_spark_metadata`) and the
+    * unchanged one-shot oracle prove neither a duplicate nor a lost row
+    * survived. */
   private def streamRestart(tag: String, spark: SparkSession, dir: String,
-      shufflePartitions: Option[Int] = None,
+      shufflePartitions: Int = DrainShufflePartitions,
       extraConfs: Map[String, String] = Map.empty,
       tearSinkCommit: Boolean = false,
       splitPred: Option[org.apache.spark.sql.Column] = None)(
       build: (SparkSession, String) => DataFrame): DataFrame = {
     val path = graft.SessionCache.onceStrong(spark, s"stream#$dir#$tag") {
-      import java.nio.file.{Files, Path, Paths}
-      val overrides = drainConfs ++ extraConfs +
-        ("spark.sql.shuffle.partitions" ->
-          shufflePartitions.getOrElse(drainShufflePartitions).toString)
-      val sess = if (overrides.isEmpty) spark else {
-        val s2 = spark.newSession()
-        overrides.foreach { case (k, v) => s2.conf.set(k, v) }
-        s2
-      }
-      val tmpPath = graft.Scratch.tempDir(s"graft-$tag-")
-      val tmp = tmpPath.toString
-      sys.addShutdownHook {
-        import java.util.Comparator
-        if (Files.exists(tmpPath))
-          Files.walk(tmpPath).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-      }
+      import java.nio.file.{Files, Paths}
+      val sess = drainSession(spark, shufflePartitions, extraConfs)
+      val tmp = graft.Scratch.tempDir(s"graft-$tag-").toString
       val watch = s"$tmp/watch"
       Files.createDirectories(Paths.get(watch))
       val (slice1, slice2) = stagedHalves(spark, dir, splitPred)
@@ -376,14 +354,9 @@ object StreamingQ {
             .filter(_.getName.forall(_.isDigit))
           require(commits.nonEmpty, "no committed batch to tear")
           val latest = commits.maxBy(_.getName.toLong)
+          // the drain's checkpoint manager writes no `.crc` sidecar, so
+          // the marker alone is the commit a crash would never have made
           require(latest.delete(), s"could not delete ${latest.getPath}")
-          // Hadoop's local ChecksumFileSystem keeps a hidden `.<name>.crc`
-          // beside every log file; a crash before the commit write leaves
-          // NEITHER file, and a lone stale checksum fails incarnation 2's
-          // rewrite as a concurrent-writer rename conflict
-          for (crc <- Seq(new java.io.File(latest.getParentFile, s".${latest.getName}.crc"),
-              new java.io.File(latest.getPath + ".crc")) if crc.exists())
-            require(crc.delete(), s"could not delete $crc")
           Some(latest)
         }
       publish(slice2, "slice2")
@@ -402,6 +375,18 @@ object StreamingQ {
       StreamingFeed.actions(StreamingFeed.eventsStream(sess, watch)).toDF()
     }
 
+  /** Checkpoint-restart recovery, promoted from spec to the oracle gate:
+    * the feed is drained by TWO query incarnations. The first sees only
+    * the front half of the feed (published in (ts, event_id) arrival
+    * order), drains it with `AvailableNow`, and is discarded. The back
+    * half is then published and a BRAND-NEW query object — connected to
+    * the first only through the sink and checkpoint paths — picks up the
+    * per-game fold state and source offsets from the checkpoint and
+    * drains the rest. The sink union gates against [[feedIngestSql]],
+    * the UNCHANGED one-shot oracle: exactly-once recovery means no row
+    * is replayed (the oracle's hash compare is a multiset — a duplicate
+    * fails rows_match) and no mid-game state is lost (a reset fold would
+    * mis-number every action after the cutoff). */
   val q117StreamRestart: Q = Q.sql(
     "q117_stream_restart",
     feedIngestSql,
@@ -638,7 +623,7 @@ object StreamingQ {
     // see fullJoinStream's rationale (fixed per-(partition, store,
     // batch) cost dominates at fixture scale); applied via streamOnce's
     // session clone, never the shared conf
-    streamOnce("stream-join", spark, dir, shufflePartitions = Some(8)) { sess =>
+    streamOnce("stream-join", spark, dir, shufflePartitions = 8) { sess =>
       val purchases = StreamingFeed
         .eventsStream(sess, dir, glob = "events.parquet").toDF()
         .filter(col("event_type") === "purchase")
@@ -900,7 +885,7 @@ object StreamingQ {
     import org.apache.spark.sql.functions._
     // state-store count sized to the join state — see fullJoinStream;
     // applied via streamOnce's session clone, never the shared conf
-    streamOnce("stream-outer-join", spark, dir, shufflePartitions = Some(8)) { sess =>
+    streamOnce("stream-outer-join", spark, dir, shufflePartitions = 8) { sess =>
       val purchases = StreamingFeed
         .eventsStream(sess, dir, glob = "events.parquet").toDF()
         .filter(col("event_type") === "purchase")
@@ -1046,7 +1031,7 @@ object StreamingQ {
     // state-store count sized to the state, not the CPU count (measured
     // at sf0.1: 32 partitions → 24 s fixed cost, 8 → ~1/4 of that);
     // both overrides ride streamOnce's session clone, never shared conf
-    streamOnce("stream-full-join", spark, dir, shufflePartitions = Some(4),
+    streamOnce("stream-full-join", spark, dir, shufflePartitions = 4,
       extraConfs = RocksDbConf)(
       sess => fullOuterJoinPlan(sess, dir, "events.parquet"))
   }
@@ -1139,7 +1124,7 @@ object StreamingQ {
     fullJoinOracleSql,
     "checkpoint restart mid-feed of the RocksDB full-outer join state") {
     (s, dir) =>
-      streamRestart("full-join-restart", s, dir, shufflePartitions = Some(4),
+      streamRestart("full-join-restart", s, dir, shufflePartitions = 4,
         extraConfs = RocksDbConf)(
         (sess, watch) => fullOuterJoinPlan(sess, watch, "*.parquet"))
         .select(col("user_id"), col("p_event_id"), col("c_event_id"),
@@ -1186,7 +1171,7 @@ object StreamingQ {
     // state is a few thousand signature keys: 8 state stores, same
     // right-sizing rationale as the join family (fixed per-store cost
     // dominates at fixture scale); rides streamOnce's session clone
-    streamOnce("stream-sig-dedup", s, dir, shufflePartitions = Some(8)) { sess =>
+    streamOnce("stream-sig-dedup", s, dir, shufflePartitions = 8) { sess =>
       StreamingFeed.fileSource(sess, dir, "documents.parquet")
         .select(col("doc_id"), Text.tokens(col("text")).as("t"))
         .filter(size(col("t")) >= 3)
@@ -1530,7 +1515,7 @@ object StreamingQ {
       import org.apache.spark.sql.functions._
       import graft.ops.Text
       val admitted = streamOnce("stream-ingest-gate", s, dir,
-        shufflePartitions = Some(8)) { sess =>
+        shufflePartitions = 8) { sess =>
         StreamingFeed.fileSource(sess, dir, "documents.parquet")
           .select(col("text"), Text.tokens(col("text")).as("toks"),
             length(regexp_replace(col("text"), "[^.,!?;:]", "")).as("np"))
@@ -1840,7 +1825,7 @@ object StreamingQ {
     cappedJoinOracle,
     "per-(user,hour)-capped stream-stream interval join: skew-safe q100") {
     (s, dir) =>
-      streamOnce("stream-capped-join", s, dir, shufflePartitions = Some(8))(
+      streamOnce("stream-capped-join", s, dir, shufflePartitions = 8)(
         sess => graft.streaming.StreamingCappedJoin(
           StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")))
         .select(col("user_id"), col("p_event_id"), col("c_event_id"),
@@ -1863,7 +1848,7 @@ object StreamingQ {
     cappedJoinOracle,
     "q201's capped-join state recovered across a mid-feed restart") {
     (s, dir) =>
-      streamRestart("capped-join-restart", s, dir, shufflePartitions = Some(8)) {
+      streamRestart("capped-join-restart", s, dir, shufflePartitions = 8) {
         (sess, watch) => graft.streaming.StreamingCappedJoin(
           StreamingFeed.eventsStream(sess, watch))
       }.select(col("user_id"), col("p_event_id"), col("c_event_id"),
@@ -2379,18 +2364,9 @@ object StreamingQ {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val path = graft.SessionCache.onceStrong(spark, s"stream#$dir#merge-sink") {
-      import java.nio.file.{Files, Path, Paths}
-      val sess = spark.newSession()
-      sess.conf.set("spark.sql.shuffle.partitions", "8")
-      drainConfs.foreach { case (k, v) => sess.conf.set(k, v) }
-      val tmpPath = graft.Scratch.tempDir("graft-merge-sink-")
-      val tmp = tmpPath.toString
-      sys.addShutdownHook {
-        import java.util.Comparator
-        if (Files.exists(tmpPath))
-          Files.walk(tmpPath).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-      }
+      import java.nio.file.{Files, Paths}
+      val sess = drainSession(spark)
+      val tmp = graft.Scratch.tempDir("graft-merge-sink-").toString
       val watch = s"$tmp/watch"
       val tableDir = s"$tmp/table"
       Files.createDirectories(Paths.get(watch))
@@ -2600,7 +2576,7 @@ object StreamingQ {
     * per-(user, hour) cap in front. */
   private def semiJoinStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    streamOnce("stream-semi-join", spark, dir, shufflePartitions = Some(8)) { sess =>
+    streamOnce("stream-semi-join", spark, dir, shufflePartitions = 8) { sess =>
       val purchases = StreamingFeed
         .eventsStream(sess, dir, glob = "events.parquet").toDF()
         .filter(col("event_type") === "purchase")

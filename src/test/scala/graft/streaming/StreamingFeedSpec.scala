@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import graft.SparkTestSession
 import graft.nba.GameFeed
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,11 +18,7 @@ class StreamingFeedSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def tmpDir(prefix: String): Path = {
-    val p = Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p
-  }
+  private def tmpDir(prefix: String): Path = graft.Scratch.tempDir(prefix)
 
   /** Copy the single parquet part file of a one-slice write into the
     * watched directory under a stable name. */
@@ -99,6 +95,14 @@ class StreamingFeedSpec extends AnyFunSuite {
   }
 
   test("stop + restart from checkpoint resumes the stateful fold exactly-once") {
+    // once on the suite's session (Spark's default checkpoint manager) and
+    // once on a drain clone, whose checkpoints go through
+    // LocalCheckpointFileManager: recovery must hold under both
+    for (sess <- Seq(spark, graft.queries.StreamingQ.drainSession(spark)))
+      assertRestartExactlyOnce(sess)
+  }
+
+  private def assertRestartExactlyOnce(sess: SparkSession): Unit = {
     import spark.implicits._
     val watch = tmpDir("feed-watch3-")
     val stage = tmpDir("feed-stage3-")
@@ -114,7 +118,7 @@ class StreamingFeedSpec extends AnyFunSuite {
     // each incarnation is a brand-new query object; only the sink +
     // checkpoint paths connect them — the recovery contract under test
     def runOnce(): Unit = {
-      val q = StreamingFeed.actions(StreamingFeed.eventsStream(spark, watch.toString))
+      val q = StreamingFeed.actions(StreamingFeed.eventsStream(sess, watch.toString))
         .writeStream.format("parquet")
         .option("path", s"$sink/out").option("checkpointLocation", s"$sink/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -125,7 +129,7 @@ class StreamingFeedSpec extends AnyFunSuite {
     publish(ranked.filter(col("__rn") > n / 2).drop("__rn"), stage, watch, "slice2")
     runOnce() // restores per-game fold state + source offsets from ckpt
 
-    val got = project(spark.read.parquet(s"$sink/out")).as[Row20].collect()
+    val got = project(sess.read.parquet(s"$sink/out")).as[Row20].collect()
     val want = project(GameFeed.pbp(spark, sfDir).toDF()
       .filter(col("action_type") =!= "period")).as[Row20].collect()
     // multiset compare: a Set would mask replayed (duplicated) rows,
