@@ -1,6 +1,14 @@
 package graft
+
+/** Full-surface timing record: every registered query (or the
+  * `SPARK_GRAFT_ONLY` subset) on the staged `SPARK_GRAFT_SF_DIR`, once
+  * cold and then [[Bench.WarmRuns]] times warm. Prints one JSON line and
+  * writes it, plus the per-query warm medians and spreads, to
+  * `SPARK_GRAFT_BENCH_OUT` (default `bench_last.json`). Host calibration
+  * probes are recorded, never used to accept or refuse a run. */
 object Bench {
   import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+  import org.apache.spark.sql.{DataFrame, SparkSession}
 
   /** Measured buffered-write+fsync throughput (MB/s) on the volume holding
     * `probeDir` — the in-JVM equivalent of `dd conv=fsync`. The harness
@@ -67,8 +75,7 @@ object Bench {
     var x = 0x9E3779B97F4A7C15L
     // untimed warm-up: the first (start-of-run) call otherwise bills
     // interpreter/OSR compilation of this very loop to the measurement,
-    // making start vs end Mops not like-for-like — and the ±15%
-    // normalization contract divides by exactly this field
+    // making start vs end Mops not like-for-like
     var w = 0L
     while (w < 10000000L) {
       x ^= x << 13; x ^= x >>> 7; x ^= x << 17
@@ -85,22 +92,14 @@ object Bench {
     (iters / 1e6) / dt + (x & 1) * 1e-9
   }
 
-  /** ALL-CORES calibration: the same xorshift yardstick run on 32
-    * threads at once, reported as summed M ops/s. The round-8 morning
-    * showed why the single-thread probe is not enough: two same-surface
-    * runs read 1.45-1.52× the healthy reference while single-thread
-    * calibration was FASTER than in the healthy window (514-520 vs
-    * 471-478 Mops) and io was borderline-fine — i.e. the host had lost
+  /** ALL-CORES calibration: the same xorshift yardstick run on one
+    * thread per host core at once, reported as summed M ops/s. The
+    * single-thread probe is not enough: in round 8 two same-surface runs
+    * read 1.45-1.52× the healthy reference while single-thread
+    * calibration was FASTER (514-520 vs 471-478 Mops) — the host had lost
     * parallel throughput (SMT neighbors / core allocation), which no
-    * per-thread or /proc/stat field shows. This probe measures exactly
-    * that axis. Promoted into the health envelope in round 9: the
-    * round-8 healthy-window baseline is 16,719/14,762 summed Mops at 32
-    * threads, and runs outside ±25% of that band quarantine (BASELINE.md
-    * contract §4). The band only means anything at the baseline's thread
-    * count, so the default derives from the live host and the envelope
-    * check applies the band only when the host shape matches — on any
-    * other shape the field reverts to record-only until a baseline for
-    * that shape is committed. */
+    * per-thread or /proc/stat field shows. Record-only: it describes the
+    * host next to the timings and gates nothing. */
   val parCalibrationThreads: Int = Runtime.getRuntime.availableProcessors
   def cpuCalibrationParMops(threads: Int = parCalibrationThreads,
       iters: Long = 100000000L): Double = {
@@ -141,75 +140,6 @@ object Bench {
       } finally f.close()
     }.toOption
 
-  /** One row of the committed host-tier envelope table (BASELINE.md
-    * "Health-envelope tiers"). A tier is a HOST FINGERPRINT: the
-    * (cpu band × io band) rectangle a known host's healthy windows
-    * occupy. cpu alone cannot identify the host — the builder box
-    * drifts into the driver's 430-470 Mops band during contention
-    * windows (r7 at 445 Mops read +20%, the round-11 first full-bench
-    * attempt at 454 Mops read +24%) — but those builder windows carry
-    * builder-volume io (300+ MB/s) while the driver host's volume
-    * steadily reads 130-140, so the joint reading separates "the
-    * driver's normal" from "the builder degraded". A probe matching no
-    * tier still runs; it is quarantined from promotion (round-11
-    * measure-and-quarantine contract). */
-  final case class EnvelopeTier(name: String, cpuLo: Double, cpuHi: Double,
-      ioLo: Double, ioHi: Double, parThreads: Int, parLo: Double, parHi: Double)
-
-  /** The committed tiers. `builder`: the round-8/9 reference host
-    * (cpu 470-525 Mops healthy; io 300-550 MB/s; 32-thread par band
-    * ±25% around the 16,719/14,762 Mops baseline). `driver`: the
-    * harness driver's measured steady state (r09 cpu 444, r10 probes
-    * 454 Mops ×4; io 130-140 MB/s steady vs 41 MB/s in its one genuine
-    * end-of-run collapse; par 12.6k within the same 32-thread band) —
-    * a host that ALWAYS reads degraded against the builder bars, which
-    * round 10's absolutist gate turned into a blanket refusal
-    * (BENCH_r10 = empty −1). Its io band spans its steady state with
-    * ~45% headroom, floored above its observed collapse (41) and capped
-    * below the builder volume's CONTENDED readings (the round-11
-    * evening's three degraded-window start probes read io 246/304/385
-    * at cpu 436-454 — the 246 must not fingerprint as the driver). */
-  val envelopeTiers: Seq[EnvelopeTier] = Seq(
-    EnvelopeTier("builder", 470, Double.MaxValue, 300, Double.MaxValue,
-      32, 11000, 21000),
-    EnvelopeTier("driver", 430, 470, 80, 200, 32, 11000, 21000),
-  )
-
-  def tierOf(cpuMops: Double, ioMbps: Double): Option[EnvelopeTier] =
-    envelopeTiers.find(t => cpuMops >= t.cpuLo && cpuMops < t.cpuHi &&
-      ioMbps >= t.ioLo && ioMbps < t.ioHi)
-
-  /** The three-axis health envelope, shared by the pre-flight probe and
-    * the end-of-run promotion decision (BASELINE.md contract §4), keyed
-    * by host tier: the (cpu, io) reading must land inside a committed
-    * tier's fingerprint rectangle, and — only when the probe ran at
-    * that tier's committed thread shape — the par band gates. Other
-    * host shapes keep the par axis record-only until a baseline for
-    * that shape is committed. */
-  def withinEnvelope(ioMbps: Double, cpuMops: Double, parMops: Double,
-      parThreads: Int): Boolean =
-    tierOf(cpuMops, ioMbps).exists { t =>
-      parThreads != t.parThreads || (parMops >= t.parLo && parMops <= t.parHi)
-    }
-
-  /** Promotion additionally requires the two bracketing probes to
-    * fingerprint the SAME tier: a host cannot change hardware identity
-    * mid-run, so a start=builder/end=driver bracket is a contention
-    * signature, not a window. Motivating record (probe 24 of the
-    * round-11 contention evening): the CONTENDED builder read
-    * (cpu 444, io 97.4) — inside the driver tier's rectangle — while
-    * its neighboring probes read builder-volume io 300+; only the
-    * collapsed par axis (10.1k) kept that reading from promotable, and
-    * par had crossed 11k repeatedly the same hour, so a throttle dip
-    * bracketing a run could false-promote a builder contention window
-    * as a healthy driver one. Tier agreement closes the path with no
-    * new constants. */
-  def sameTier(cpuA: Double, ioA: Double, cpuB: Double, ioB: Double): Boolean =
-    (tierOf(cpuA, ioA), tierOf(cpuB, ioB)) match {
-      case (Some(a), Some(b)) => a.name == b.name
-      case _ => false
-    }
-
   /** Locale-pinned double formatting for JSON fields: the `f`
     * interpolator is default-locale-sensitive (a de_DE JVM emits comma
     * decimal separators — invalid JSON). */
@@ -222,62 +152,31 @@ object Bench {
   def jstr(s: String): String =
     "\"" + s.map(c => if (c == '"' || c == '\\' || c < ' ') ' ' else c) + "\""
 
+  /** Warm repeats per query, run right after its cold run through the
+    * same timing; their median and spread are the query's noise bound. */
+  val WarmRuns = 3
+
+  /** (median, max − min) of one query's warm samples. A per-query change
+    * between two runs counts only when it moves beyond both spreads. */
+  def warmSummary(samples: Seq[Double]): (Double, Double) = {
+    val s = samples.sorted
+    val n = s.size
+    val median = if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+    (median, s.last - s.head)
+  }
+
+  /** One timed execution of a query. */
+  final case class Run(netSec: Double, rawSec: Double, err: Option[String])
+
   def main(args: Array[String]): Unit = {
     val sfDirRaw = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Pre-flight probe (round-10 gate, round-11 fallback): the driver's
-    // r09 bench burned 26 minutes inside a window that was ALREADY below
-    // envelope at the start, so round 10 added a probe-and-retry gate —
-    // but its failure mode was refusal (exit 2, empty BENCH_r10), which
-    // is strictly less information than a quarantined run. Round-11
-    // contract (VERDICT r10 item 1): probe the three axes BEFORE staging
-    // or starting Spark; if the window is degraded, retry a few times (a
-    // throttle window usually persists minutes-to-hours, but a brief
-    // neighbor burst shouldn't taint the round's bench); if STILL
-    // degraded, MEASURE ANYWAY — tag the output "window_degraded":true,
-    // keep the probe record in bench_preflight_abort.json, and let the
-    // end-of-run promotion logic route the full result to
-    // bench_unhealthy.json. Refuse to promote, never to measure; exit 0
-    // unless the run itself fails. SPARK_GRAFT_FORCE_RUN=1 skips the
-    // probe retries entirely (window-independence A/Bs run in
-    // deliberately degraded windows and shouldn't wait out the retry
-    // loop).
-    val forceRun = sys.env.get("SPARK_GRAFT_FORCE_RUN").contains("1")
-    val preflightRetries = sys.env.get("SPARK_GRAFT_PREFLIGHT_RETRIES")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(3)
-    val preflightSleepMs = sys.env.get("SPARK_GRAFT_PREFLIGHT_SLEEP_MS")
-      .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(60000L)
-    // calibrate the host volume BEFORE staging reads warm the page cache
-    def probe(): (Double, Double, Double) =
-      (ioCalibrationMbps(sys.props("java.io.tmpdir")),
-        cpuCalibrationMops(), cpuCalibrationParMops())
-    var (ioMbps, cpuMops, cpuParMops) = probe()
-    var attempts = 1
-    while (!forceRun &&
-        !withinEnvelope(ioMbps, cpuMops, cpuParMops, parCalibrationThreads) &&
-        attempts <= preflightRetries) {
-      System.err.println(
-        f"[graft.Bench] pre-flight axes below envelope (io $ioMbps%.0f MB/s, " +
-          f"cpu $cpuMops%.0f Mops, par $cpuParMops%.0f@$parCalibrationThreads) " +
-          f"— retry $attempts/$preflightRetries in ${preflightSleepMs / 1000} s")
-      Thread.sleep(preflightSleepMs)
-      val p = probe(); ioMbps = p._1; cpuMops = p._2; cpuParMops = p._3
-      attempts += 1
-    }
-    val preflightDegraded = !forceRun &&
-      !withinEnvelope(ioMbps, cpuMops, cpuParMops, parCalibrationThreads)
-    if (preflightDegraded) {
-      // durable probe record (same sidecar name the round-10 gate used,
-      // so round-over-round tooling keeps one place to look), but the
-      // run PROCEEDS — a quarantined full result beats an empty -1
-      val abort = s"""{"preflight_abort":true,"proceeding_degraded":true,"sf":${jstr(sfDirRaw)},"io_calibration_mbps":${num("%.1f", ioMbps)},"cpu_calibration_mops":${num("%.0f", cpuMops)},"cpu_calibration_par_mops":${num("%.0f", cpuParMops)},"cpu_calibration_par_threads":$parCalibrationThreads,"preflight_attempts":$attempts}"""
-      System.err.println(
-        "[graft.Bench] PRE-FLIGHT DEGRADED after " + attempts +
-          " probes — measuring anyway, result will be tagged " +
-          "window_degraded and quarantined from promotion " +
-          "(probe record: bench_preflight_abort.json)")
-      scala.util.Try(Files.write(Paths.get("bench_preflight_abort.json"),
-        (abort + "\n").getBytes("UTF-8")))
-    }
+    val selected = Registry.selector(sys.env.get("SPARK_GRAFT_ONLY"))
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
+    // Record-only host calibration at both ends of the run; the volume
+    // probe goes BEFORE staging reads warm the page cache
+    val ioMbps = ioCalibrationMbps(sys.props("java.io.tmpdir"))
+    val cpuMops = cpuCalibrationMops()
+    val cpuParMops = cpuCalibrationParMops()
     val cpu0 = cpuStatTicks()
     val sfDir = stageInput(sfDirRaw)
     System.err.println(
@@ -289,17 +188,7 @@ object Bench {
     spark.range(100)
       .groupBy((org.apache.spark.sql.functions.col("id") % 4).as("k"))
       .count().collect()
-    // SPARK_GRAFT_ONLY=q60,q64 — prefix-matched subset (same contract as
-    // Verify): lets a like-for-like surface re-run isolate in-session
-    // effects (the r6 regression hunt benched the r5 surface alone).
-    // SPARK_GRAFT_REVERSE=1 reverses the run order — the order-independence
-    // experiment's lever, nothing else changes.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered0 = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(kv => only.forall(_.exists(kv._1.startsWith)))
-    val ordered = if (sys.env.get("SPARK_GRAFT_REVERSE").contains("1"))
-      ordered0.reverse else ordered0
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => selected(kv._1))
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
@@ -328,7 +217,7 @@ object Bench {
       sum
     }
     drainBuilds() // warm-up-phase builds belong to no query
-    val results = ordered.map { case (name, fn) =>
+    def timed(name: String, fn: (SparkSession, String) => DataFrame): Run = {
       val t0 = System.nanoTime()
       val g0 = gcMillis()
       // a failed query must be visible as a failure, never as a timing;
@@ -352,35 +241,36 @@ object Bench {
           (if (ev.nonEmpty) s" cache: ${ev.reverse.mkString("; ")}" else ""))
       // per-query line = wall MINUS in-query shared-cache build time
       // (self-times sum ≤ wall by construction; clamp guards clock skew)
-      (name, math.max(0.0, dt - buildSec), err, dt)
+      Run(math.max(0.0, dt - buildSec), dt, err)
+    }
+    // (name, cold run, warm runs, first error): a failed cold run is not
+    // repeated; a failed warm run fails the query like a failed cold one
+    val results = ordered.map { case (name, fn) =>
+      val cold = timed(name, fn)
+      val warm = if (cold.err.isDefined) Nil else List.fill(WarmRuns)(timed(name, fn))
+      (name, cold, warm, cold.err.orElse(warm.flatMap(_.err).headOption))
+    }
+    val warmStats = results.collect { case (k, _, w, None) =>
+      k -> warmSummary(w.map(_.netSec))
     }
     // ms resolution: full double precision added ~2.5 KB of digits to a
     // line the driver is known to truncate (see sidecar note below)
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + num("%.3f", v) }
-      .mkString("{", ",", "}")
+    def qmap(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + num("%.3f", v) }.mkString("{", ",", "}")
+    val qs = qmap(results.map { case (k, c, _, _) => k -> c.netSec })
     val sessionBuildJson = sessionBuild
       .map { case (k, v) => jstr(k) + ":" + num("%.3f", v) }
       .mkString("{", ",", "}")
     val sessionBuildTotal = sessionBuild.values.sum
+    val failures = results.flatMap { case (k, _, _, err) => err.map(k -> _) }
     // escape like Verify.q(): ANY control char would invalidate the JSON
-    val errs = results.collect { case (k, _, Some(m), _) =>
-      "\"" + k + "\":" + jstr(m)
-    }.mkString("{", ",", "}")
-    val total = results.map(_._4).sum // RAW wall incl. builds
-    val nFail = results.count(_._3.isDefined)
-    // second calibration AFTER the queries: a throttle window that opens
-    // mid-run is invisible to the start-of-run sample (observed: run 1
-    // healthy at both ends = 148 s; run 2 started at 277 MB/s, ended
-    // throttled, total inflated 42%).
-    //
-    // Measured AFTER spark.stop() + a short settle, NOT inside the live
-    // session: three round-8 runs read io_end ≈ 120-128 MB/s while the
-    // host, probed seconds after JVM exit, measured 476 MB/s — the
-    // in-session end probe was reading the bench's OWN exhaust (executor
-    // pools winding down, streaming temp cleanup, GC) as a host throttle
-    // window, permanently quarantining healthy runs. Genuine windows
-    // persist for minutes-to-hours (recorded r4/r5/r7), so a 2 s settle
-    // cannot hide one.
+    val errs = failures.map { case (k, m) => "\"" + k + "\":" + jstr(m) }
+      .mkString("{", ",", "}")
+    val total = results.map(_._2.rawSec).sum // RAW cold wall incl. builds
+    val warmTotal = warmStats.map(_._2._1).sum
+    // End calibration after spark.stop() + a short settle: inside the live
+    // session the probes read the bench's own exhaust (executor pools
+    // winding down, streaming temp cleanup, GC), not the host.
     spark.stop()
     System.gc()
     Thread.sleep(2000)
@@ -389,40 +279,13 @@ object Bench {
     val cpuParMopsEnd = cpuCalibrationParMops()
     val stealPct = (for ((s0, t0) <- cpu0; (s1, t1) <- cpuStatTicks()
       if t1 > t0) yield 100.0 * (s1 - s0) / (t1 - t0)).getOrElse(-1.0)
-    // Tier + health verdicts feed both the JSON tags and the promotion
-    // decision below. window_degraded is the round-11 quarantine tag:
-    // true whenever either bracketing probe left the envelope. (A
-    // degraded pre-flight is subsumed: it IS the start probe failing —
-    // preflightDegraded only gates the sidecar write above.)
-    val healthy =
-      withinEnvelope(ioMbps, cpuMops, cpuParMops, parCalibrationThreads) &&
-      withinEnvelope(ioEnd, cpuMopsEnd, cpuParMopsEnd, parCalibrationThreads) &&
-      sameTier(cpuMops, ioMbps, cpuMopsEnd, ioEnd)
-    val tierName = tierOf(cpuMops, ioMbps).map(_.name).getOrElse("none")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"failed":$nFail,"sf":${jstr(sfDirRaw)},"staged_input":true,"window_degraded":${!healthy},"host_tier":${jstr(tierName)},"preflight_attempts":$attempts,"session_build_sec":$sessionBuildJson,"session_build_total_sec":${num("%.2f", sessionBuildTotal)},"io_calibration_mbps":${num("%.1f", ioMbps)},"io_calibration_end_mbps":${num("%.1f", ioEnd)},"cpu_steal_pct":${num("%.2f", stealPct)},"cpu_calibration_mops":${num("%.0f", cpuMops)},"cpu_calibration_end_mops":${num("%.0f", cpuMopsEnd)},"cpu_calibration_par_mops":${num("%.0f", cpuParMops)},"cpu_calibration_par_end_mops":${num("%.0f", cpuParMopsEnd)},"cpu_calibration_par_threads":$parCalibrationThreads,"gc_sec":${num("%.1f", gcTotal / 1000.0)},"cache_hits":${SessionCache.hits}}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"failed":${failures.size},"sf":${jstr(sfDirRaw)},"staged_input":true,"warm_runs":$WarmRuns,"warm_total_sec":${num("%.2f", warmTotal)},"session_build_sec":$sessionBuildJson,"session_build_total_sec":${num("%.2f", sessionBuildTotal)},"io_calibration_mbps":${num("%.1f", ioMbps)},"io_calibration_end_mbps":${num("%.1f", ioEnd)},"cpu_steal_pct":${num("%.2f", stealPct)},"cpu_calibration_mops":${num("%.0f", cpuMops)},"cpu_calibration_end_mops":${num("%.0f", cpuMopsEnd)},"cpu_calibration_par_mops":${num("%.0f", cpuParMops)},"cpu_calibration_par_end_mops":${num("%.0f", cpuParMopsEnd)},"cpu_calibration_par_threads":$parCalibrationThreads,"gc_sec":${num("%.1f", gcTotal / 1000.0)},"cache_hits":${SessionCache.hits}}"""
     println(json)
-    // Healthy-window guard (round-7 lesson: a degraded host window — io
-    // writeback throttled to 88 MB/s, cpu calibration 445 Mops — produced
-    // a +20% snapshot that read as a regression until a same-day A/B
-    // discounted it). A run whose OWN calibration says the window was
-    // degraded must never silently become the committed per-query
-    // reference, so it lands in bench_unhealthy.json instead. The
-    // envelope is the per-host-tier table above (BASELINE.md
-    // "Health-envelope tiers"), applied at BOTH ends of the run; the
-    // par axis (round 9 — the axis round 8 proved discriminating:
-    // 1.45-1.52× same-code swings while single-thread cpu read HEALTHY)
-    // gates only at a tier's committed thread shape.
-    if (!healthy) System.err.println(
-      f"[graft.Bench] UNHEALTHY window (io $ioMbps%.0f/$ioEnd%.0f MB/s, " +
-        f"cpu $cpuMops%.0f/$cpuMopsEnd%.0f Mops, " +
-        f"par $cpuParMops%.0f/$cpuParMopsEnd%.0f@$parCalibrationThreads) " +
-        "— writing bench_unhealthy.json")
     // sidecar: the driver's stdout capture truncates long lines (BENCH_r05
     // lost q01-q29), so round-over-round per-query diffs need the full map
-    // durable on disk too
-    scala.util.Try(Files.write(Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        if (healthy) "bench_last.json" else "bench_unhealthy.json")),
-      (json + "\n").getBytes("UTF-8")))
+    // durable on disk too; the per-query warm maps go only here
+    val sidecar = json.dropRight(1) +
+      s""","warm_sec":${qmap(warmStats.map { case (k, (m, _)) => k -> m })},"warm_spread_sec":${qmap(warmStats.map { case (k, (_, s)) => k -> s })}}"""
+    scala.util.Try(Files.write(Paths.get(outPath), (sidecar + "\n").getBytes("UTF-8")))
   }
 }

@@ -13,7 +13,7 @@ package graft
   * small stages back down, e.g.
   * `-Dspark.sql.shuffle.partitions=32
   * -Dspark.sql.adaptive.coalescePartitions.initialPartitionNum=512`
-  * (BASELINE.md "q116 third decade", scripts/q116_third_decade.sh).
+  * (BASELINE.md "q116 third decade").
   */
 object Profile {
   def main(args: Array[String]): Unit = {

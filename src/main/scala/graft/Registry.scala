@@ -13,4 +13,11 @@ object Registry {
       queries.Graphs.all ++
       queries.Domain.all ++
       queries.StreamingQ.all
+
+  /** The `SPARK_GRAFT_ONLY` query selection: a comma-separated list of
+    * name prefixes; blank entries are ignored and `None` selects all. */
+  def selector(only: Option[String]): String => Boolean = {
+    val prefixes = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    name => prefixes.forall(_.exists(name.startsWith))
+  }
 }

@@ -51,12 +51,8 @@ object Verify {
     // record the scratch medium: a silent tmpfs→disk fallback would make
     // runs non-comparable across hosts with no visible signal
     System.err.println(s"[graft.Verify] scratch=${Scratch.root}")
-    // SPARK_GRAFT_ONLY=q116,q117 — builder-side single-query iteration;
-    // unset (the driver's invocation) runs everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
+    // SPARK_GRAFT_ONLY=q116,q117 — single-query iteration; unset runs everything
+    val selected = Registry.selector(sys.env.get("SPARK_GRAFT_ONLY"))
     // failures are reported by dump's sidecar and summary line; the exit
     // code stays 0 either way, the oracle compare downstream is the gate
     dump(spark, sfDir, outDir, SparkEntry.queries.toSeq.filter(kv => selected(kv._1)))

@@ -33,6 +33,13 @@ class RegistrySpec extends AnyFunSuite {
     assert(Registry.all.size >= 235, s"registry shrank to ${Registry.all.size}")
   }
 
+  test("selector: SPARK_GRAFT_ONLY prefix-matches its comma-separated entries") {
+    val names = Seq("q6_a", "q60_b", "q7_c")
+    assert(names.filter(Registry.selector(None)) == names)
+    assert(names.filter(Registry.selector(Some("q60, q6"))) == Seq("q6_a", "q60_b"))
+    assert(names.filter(Registry.selector(Some(" ,q7,, "))) == Seq("q7_c"))
+  }
+
   test("no orphan queries: every qNNN_ name literal in queries/*.scala is registered") {
     // Round-6 lesson: q182 was written with a full oracle but never added
     // to Relational.all, so it was invisible to EVERY gate (correctness,
