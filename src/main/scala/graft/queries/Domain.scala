@@ -1294,12 +1294,14 @@ object Domain {
     * gate is exact — no float drift across iteration order). */
   private val PprScale = 1000000000000L
 
+  /** Teleport mass re-injected at each of the 3 seeds per round. */
+  private val PprRestart = PprScale * 15 / 100 / 3
+
   private def pprOracle: String = {
-    val restart = PprScale * 15 / 100 / 3 // teleport mass per seed
     val steps = (1 to PprIters).map { k =>
       s"""pr$k AS (
          |  SELECT v.id,
-         |    CAST(CASE WHEN sd.id IS NOT NULL THEN $restart ELSE 0 END
+         |    CAST(CASE WHEN sd.id IS NOT NULL THEN $PprRestart ELSE 0 END
          |      + COALESCE(m.inc, 0) AS BIGINT) AS s
          |  FROM verts v LEFT JOIN seeds sd ON sd.id = v.id
          |  LEFT JOIN (
@@ -1330,6 +1332,32 @@ object Domain {
          |FROM pr$PprIters p LEFT JOIN seeds sd ON sd.id = p.id""".stripMargin
   }
 
+  /** Left-joins the 3-row seed frame, broadcast, as an `sd` flag. */
+  private def pprWithSeed(v: DataFrame, seeds: DataFrame): DataFrame =
+    v.join(broadcast(seeds.select(col("id"), lit(1).as("sd"))), Seq("id"), "left")
+
+  /** One synchronous PPR round, pre-checkpoint: the edges⋈scores message
+    * equi-join, the partial-aggregated per-dst message sum, and the
+    * teleport re-injection at the seeds (the Pregelix superstep shape:
+    * vertex ⋈ message, then a group-by combine). `edges` carries
+    * (src, dst, w, tw), `scores` carries (id, s). Factored out so PlanSpec
+    * can pin the per-round physical shape, like [[lpaRound]]: the
+    * checkpointed composition is an opaque `Scan ExistingRDD`. */
+  private[graft] def pprRound(edges: DataFrame, verts: DataFrame,
+      seeds: DataFrame, scores: DataFrame): DataFrame = {
+    val inc = edges
+      .join(scores.select(col("id").as("src"), col("s")), Seq("src"))
+      .select(col("dst"),
+        expr("(s * 85 * w) div (100 * tw)").as("msg"))
+      .groupBy(col("dst"))
+      .agg(sum(col("msg")).cast("long").as("inc"))
+    pprWithSeed(verts, seeds)
+      .join(inc.select(col("dst").as("id"), col("inc")), Seq("id"), "left")
+      .select(col("id"),
+        (when(col("sd").isNotNull, lit(PprRestart)).otherwise(lit(0L))
+          + coalesce(col("inc"), lit(0L))).cast("long").as("s"))
+  }
+
   // ---------------------------------------------------------------- q207
   /** Personalized PageRank from a 3-seed restart set over the player
     * co-occurrence graph — the "who is structurally close to THESE
@@ -1345,12 +1373,13 @@ object Domain {
     * ≤1 unit per edge per round — a defined property of the operator,
     * not drift.)
     *
-    * Scale shape: each round is ONE equi-join of the edge frame against
-    * the O(V) score frame plus a partial-agg sum on dst; the edge frame
-    * and out-weights build once and cache. No driver-side iteration
-    * state (the loop composes a 3-deep plan), no windows, nothing
-    * quadratic: exactly GraphX Pregel's cost model expressed in
-    * DataFrames.
+    * Scale shape: each round ([[pprRound]]) is ONE equi-join of the edge
+    * frame against the O(V) score frame plus a partial-agg sum on dst;
+    * the edge frame and out-weights build once and cache. Each round's
+    * scores are `localCheckpoint`ed, so the composed plan is one round
+    * deep: a scan of the last round's scores plus the broadcast seed
+    * join. No windows, nothing quadratic: exactly GraphX Pregel's cost
+    * model expressed in DataFrames.
     */
   val q207PersonalizedPagerank: Q = Q.sql(
     "q207_personalized_pagerank",
@@ -1382,28 +1411,13 @@ object Domain {
       val seeds = verts.orderBy(col("id")).limit(3).localCheckpoint()
       val outw = co.groupBy(col("src")).agg(sum(col("w")).as("tw"))
       val edges = co.join(outw, Seq("src")).localCheckpoint()
-      val restart = PprScale * 15 / 100 / 3
-      def withSeed(v: DataFrame): DataFrame =
-        v.join(broadcast(seeds.select(col("id"), lit(1).as("sd"))), Seq("id"), "left")
-      var scores = withSeed(verts)
+      var scores = pprWithSeed(verts, seeds)
         .select(col("id"),
           when(col("sd").isNotNull, lit(PprScale / 3)).otherwise(lit(0L))
             .cast("long").as("s"))
-      for (_ <- 1 to PprIters) {
-        val inc = edges
-          .join(scores.select(col("id").as("src"), col("s")), Seq("src"))
-          .select(col("dst"),
-            expr("(s * 85 * w) div (100 * tw)").as("msg"))
-          .groupBy(col("dst"))
-          .agg(sum(col("msg")).cast("long").as("inc"))
-        scores = withSeed(verts)
-          .join(inc.select(col("dst").as("id"), col("inc")), Seq("id"), "left")
-          .select(col("id"),
-            (when(col("sd").isNotNull, lit(restart)).otherwise(lit(0L))
-              + coalesce(col("inc"), lit(0L))).cast("long").as("s"))
-          .localCheckpoint()
-      }
-      withSeed(scores)
+      for (_ <- 1 to PprIters)
+        scores = pprRound(edges, verts, seeds, scores).localCheckpoint()
+      pprWithSeed(scores, seeds)
         .select(col("id").as("person_id"), col("s").as("ppr"),
           col("sd").isNotNull.as("is_seed"))
   }

@@ -27,12 +27,17 @@ object Embeddings {
   private def duckCos(a: String, b: String, dim: Int = 64): String =
     s"${duckDot(a, b, dim)} / (sqrt(${duckDot(a, a, dim)}) * sqrt(${duckDot(b, b, dim)}))"
 
-  /** The embeddings table, spread across the session's cores: the
-    * fixture ships it as ONE parquet row group (single-task scans), and
-    * this family's per-row vector kernels would otherwise serialize —
-    * same unsplittable-input-skew fix as TextPipeline.docs. */
+  /** The embeddings table, read as is: no layout step. The fixtures ship
+    * it as one parquet row group (one task per scan); spreading is
+    * decided at the call sites that measured a win from it. */
   private def emb(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "embeddings").repartition(s.sparkContext.defaultParallelism)
+    Tables(s, dir, "embeddings")
+
+  /** [[emb]] hash-spread on `vec_id` over the session's cores: the
+    * explicit layout step of the queries whose per-row vector kernels
+    * measured a warm win from leaving the single scan task. */
+  private def spreadEmb(s: SparkSession, dir: String): DataFrame =
+    emb(s, dir).repartition(s.sparkContext.defaultParallelism, col("vec_id"))
 
   // ---------------------------------------------------------------- q30
   /** Brute-force cosine top-5 neighbors for each query vector
@@ -221,7 +226,7 @@ object Embeddings {
     // HOF spelling it replaced, which lives on in IntDotProduct's scaladoc)
     def intDot(a: Column, b: Column): Column =
       graft.functions.VectorExprs.intDot(a, b).cast("double")
-    val quant = emb(s, dir).select(col("vec_id"),
+    val quant = spreadEmb(s, dir).select(col("vec_id"),
       when(scale === 0.0, transform(col("embedding"), _ => lit(0)))
         .otherwise(transform(col("embedding"),
           x => floor(lit(127.0) * x.cast("double") / scale + lit(0.5)).cast("int")))
@@ -1568,7 +1573,7 @@ object Embeddings {
        |WHERE vr = 1""".stripMargin,
     "kNN neighborhood label vote flags probes whose label disagrees") {
     (s, dir) =>
-      val e = emb(s, dir)
+      val e = spreadEmb(s, dir)
       val qs = e.filter(col("vec_id") < 200)
         .select(col("vec_id").as("query_id"), col("label").as("own_label"),
           col("embedding").as("qe"))

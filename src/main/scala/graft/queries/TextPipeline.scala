@@ -19,18 +19,20 @@ import org.apache.spark.sql.functions._
   */
 object TextPipeline {
 
-  /** The documents corpus, spread across the session's cores. The
-    * fixture ships each table as ONE parquet row group, so every scan is
-    * a single task no matter how many cores the session has — and the
-    * text family's per-row kernels (shingle md5s, token HOFs, gram
-    * builds) then run serialized (q28: 10M md5s in one task, 3.5 s). A
-    * round-robin repartition immediately after the read is the guide's
-    * unsplittable-input-skew fix: one ~5 MB shuffle buys every
-    * downstream per-row kernel full parallelism. On a real deployment
-    * the corpus arrives as many files/row groups and this is a no-op
-    * cost; fan-out follows the session's parallelism, not a constant. */
+  /** The documents corpus, read as is: no layout step. The fixtures ship
+    * each table as one parquet row group, so a scan is one task; a query
+    * whose per-row kernel measured a win from spreading that task adds
+    * the step at its own call site ([[spreadDocs]]). */
   private def docs(s: SparkSession, dir: String): DataFrame =
-    Tables(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
+    Tables(s, dir, "documents")
+
+  /** [[docs]] hash-spread on `doc_id` over the session's cores: the
+    * explicit layout step of the queries whose per-row kernels (shingle
+    * md5s, token HOFs, gram builds) measured a warm win from leaving the
+    * single scan task. It hashes on `doc_id`, not round-robin, so where
+    * q116's funnel reuses such a stage (q88) it adds no new shuffle key. */
+  private def spreadDocs(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).repartition(s.sparkContext.defaultParallelism, col("doc_id"))
 
   private val stopEn = Seq("the", "of", "and", "to", "in", "is", "that", "it")
   private val stopDe = Seq("der", "die", "das", "und", "ist", "von", "mit", "nicht")
@@ -463,8 +465,8 @@ object TextPipeline {
       |                FROM documents))
       |    GROUP BY doc_id)""".stripMargin
 
-  private def simhashRows(s: SparkSession, dir: String): DataFrame = {
-    val hashed = docs(s, dir)
+  private def simhashRows(d: DataFrame): DataFrame = {
+    val hashed = d
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
       .select(col("doc_id"), Text.baseHash(col("tok")).as("hv"))
     val votes = (0 until 32).map(j =>
@@ -479,7 +481,9 @@ object TextPipeline {
   // ---------------------------------------------------------------- q26
   /** 32-bit SimHash signature per document: each token's md5-derived hash
     * votes ±1 on every bit position; bit set where votes are positive. */
-  val q26Simhash: Q = Q.sql("q26_simhash", simhashSql)(simhashRows)
+  val q26Simhash: Q = Q.sql("q26_simhash", simhashSql) { (s, dir) =>
+    simhashRows(docs(s, dir))
+  }
 
   // ---------------------------------------------------------------- q27
   /** SimHash near-dup pairs (hamming ≤ 2) via PIGEONHOLE segment
@@ -502,7 +506,7 @@ object TextPipeline {
       |FROM tagged a JOIN tagged b
       |  ON a.lang = b.lang AND a.doc_id < b.doc_id
       |WHERE bit_count(xor(a.simhash, b.simhash)) <= 2""".stripMargin) { (s, dir) =>
-    val sh = simhashRows(s, dir)
+    val sh = simhashRows(spreadDocs(s, dir))
     val tagged = docs(s, dir).select(col("doc_id"), col("lang"))
       .join(sh, Seq("doc_id"))
     // r12: materialized — both sides of the segment self-join read this
@@ -544,7 +548,7 @@ object TextPipeline {
       |  CAST(len(s) AS BIGINT) AS n_shingles
       |FROM sh""".stripMargin) { (s, dir) =>
     val sh = Text.charShingles(col("text"), 8)
-    docs(s, dir)
+    spreadDocs(s, dir)
       .filter(length(col("text")) >= 8)
       .select(col("doc_id"), sh.as("s"))
       .select(col("doc_id"),
@@ -579,7 +583,7 @@ object TextPipeline {
       |      / max(CASE WHEN rn = 16 THEN h END),
       |    CAST(count(*) AS DOUBLE)) AS kmv_estimate
       |FROM r GROUP BY lang""".stripMargin) { (s, dir) =>
-    val toks = docs(s, dir)
+    val toks = spreadDocs(s, dir)
       .select(col("lang"), explode(Text.tokens(col("text"))).as("tok"))
       .select(col("lang"), Text.baseHash(col("tok")).as("h"))
       .distinct()
@@ -845,7 +849,7 @@ object TextPipeline {
         i => concat_ws(" ", element_at(col("toks"), i),
           element_at(col("toks"), i + lit(1)))))
       .otherwise(array().cast("array<string>"))
-    val d = docs(s, dir)
+    val d = spreadDocs(s, dir)
     val agg = d
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(grams).as("gram"))
@@ -1192,7 +1196,7 @@ object TextPipeline {
       |SELECT DISTINCT doc_id, CAST(pk % 2147483648 AS BIGINT) AS pos,
       |  CAST(pk // 2147483648 AS BIGINT) AS fp
       |FROM sel""".stripMargin) { (s, dir) =>
-    docs(s, dir)
+    spreadDocs(s, dir)
       .filter(length(col("text")) >= 8)
       .select(col("doc_id"),
         explode(graft.functions.Winnow.fingerprints(col("text"))).as("pk"))
@@ -2607,7 +2611,7 @@ object TextPipeline {
       |FROM ex e JOIN agg a ON a.source = e.source""".stripMargin,
     "HLL distinct-count sketch per source: registers, exact twin, raw estimate") {
     (s, dir) =>
-      val toks = docs(s, dir)
+      val toks = spreadDocs(s, dir)
         .select(col("source"), explode(Text.tokens(col("text"))).as("tok"))
       toks
         .groupBy(col("source"))
@@ -2994,7 +2998,7 @@ object TextPipeline {
          |WHERE len(t.toks) >= $n""".stripMargin,
       "per-doc duplicated 8-gram span mass (Lee et al. exact-substring dedup shape)") {
       (s, dir) =>
-        val t = docs(s, dir)
+        val t = spreadDocs(s, dir)
           .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
           .where(size(col("toks")) >= n)
         val gram = (i: Column) =>
@@ -3929,7 +3933,7 @@ object TextPipeline {
       val isTrain =
         Text.baseHash(concat(lit("qf|"), col("doc_id").cast("string"))) %
           100 < 80
-      val d = docs(s, dir).select(col("doc_id"), col("lang"),
+      val d = spreadDocs(s, dir).select(col("doc_id"), col("lang"),
         isTrain.as("is_train"),
         explode(Text.tokens(col("text"))).as("w"))
         .withColumn("b", Text.baseHash(col("w")) % 256)
@@ -3994,7 +3998,7 @@ object TextPipeline {
       |FROM post LEFT JOIN novc ON novc.decile = post.decile""".stripMargin,
     "per-decile novel word-8-gram counts: the data-freshness decay curve") {
     (s, dir) =>
-      val t = docs(s, dir).select(col("doc_id"),
+      val t = spreadDocs(s, dir).select(col("doc_id"),
         Text.tokens(col("text")).as("toks"))
       val g = t.filter(size(col("toks")) >= 8)
         .select(col("doc_id"), explode(transform(

@@ -677,14 +677,31 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q207: PPR rounds are equi-joins with partial-agg message sums; seeds broadcast") {
-    val p = plan("q207_personalized_pagerank")
+    // each round's scores are localCheckpointed, so the composed q207
+    // plan is a Scan ExistingRDD of the last round and no round's
+    // aggregate shows in it; the round shape is pinned on one
+    // pre-checkpoint round over a synthetic graph, like q202's lpaRound
+    import spark.implicits._
+    val edges = Seq((1L, 2L, 3L, 3L), (2L, 1L, 3L, 4L), (2L, 3L, 1L, 4L))
+      .toDF("src", "dst", "w", "tw")
+    val verts = Seq(1L, 2L, 3L).toDF("id")
+    val seeds = Seq(1L).toDF("id")
+    val scores = Seq((1L, 100L), (2L, 0L), (3L, 0L)).toDF("id", "s")
+    val p = queries.Domain.pprRound(edges, verts, seeds, scores)
+      .queryExecution.explainString(FormattedMode)
+    // the message pass is a vertex ⋈ message equi-join, and each round's
+    // incoming-mass sum must map-side combine
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
-      s"PPR fell off the equi-join path:\n$p")
-    // each round's incoming-mass sum must map-side combine, and the
-    // 3-row seed frame must ride a broadcast, never a shuffle
+      s"PPR round fell off the equi-join path:\n$p")
     assert(p.contains("partial_sum"), s"message sum not partial-aggregated:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"seed join not broadcast:\n$p")
+    // the composed query stays off the non-equi paths end to end, and
+    // the 3-row seed frame rides a broadcast, never a shuffle
+    val pq = plan("q207_personalized_pagerank")
+    assert(!pq.contains("CartesianProduct") &&
+      !pq.contains("BroadcastNestedLoopJoin"),
+      s"PPR fell off the equi-join path:\n$pq")
+    assert(pq.contains("BroadcastHashJoin"), s"seed join not broadcast:\n$pq")
   }
 
   test("q211: NN-descent candidates are wedge equi-joins; ranking re-enters by key") {
