@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Honest plan forcing for the timing harnesses (Bench / Profile /
-  * Explain / tools.DensityProfile).
+  * Explain / tools.DensityProfile), and the one-job row count
+  * `graph.Superstep` takes of each checkpointed frontier.
   *
   * `df.count()` plans an Aggregate ON TOP of the query, and Catalyst's
   * column pruning then legally deletes any work that only feeds pruned

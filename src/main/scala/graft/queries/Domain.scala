@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Q
+import graft.graph.Superstep
 import graft.nba.{GameFeed, GamePipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1072,44 +1073,19 @@ object Domain {
          |  FROM mem),
          |$steps""".stripMargin
 
-  /** The shared LPA state, built once per (session, sf dir) and reused
-    * by q202 (reads the partition) and q256 (scores it):
+  /** The player co-occurrence graph that LPA (q202, q256) and PPR (q207)
+    * iterate over, built once per (session, sf dir) by this one builder
+    * so the cached layout does not depend on which query runs first:
     *
-    *  - `co` — weighted co-occurrence edges, cached AND hash-partitioned
-    *    on `src` before the cache fill: every one of the `LpaIters`
-    *    vote joins keys on `src`, so materializing the frame already in
-    *    the join's partitioning means the O(E) side never re-shuffles —
-    *    only the O(V) label frame moves each round (edges ≫ vertices at
-    *    every scale; this is the partitioning-reuse discipline the 100 TB
-    *    stance wants, same idea as bucketing the big side of a repeated
-    *    join).
-    *  - `labels` — the FOLDED 4-round fixed point, materialized. Without
-    *    this the label chain is an unmaterialized 4-join DAG that the
-    *    final expressions re-derive per reference: q202 referenced it
-    *    twice (sz + join) and q256 three times (ls/ld/sz), so one bench
-    *    execution re-ran the whole fold 2–3× (measured: the two queries
-    *    were the bench head at 22/31 s). Folding once into an O(V) frame
-    *    makes every downstream use a scan.
-    *
-    * The two frames are materialized differently, each for its own
-    * reason. `co` (O(E)) is `repartition(src).cache()`d: a cached plan
-    * replays from blocks already laid out on `src`, so every LPA round's
-    * edges⋈labels join reuses that hash layout shuffle-free. `labels`
-    * (O(V)) is `localCheckpoint`ed, not merely cached (q239's
-    * lineage-truncation discipline): the fold's ANALYZED tree inlines
-    * its whole upstream lineage (pipeline → stints → explode → edges)
-    * once per round and once per downstream reference, so round k's
-    * plan embeds rounds 1..k−1 and q256's three references walked a
-    * tree of thousands of nodes per execution — measurable driver-side
-    * analysis cost on every run. The checkpoint's LogicalRDD leaf is
-    * O(1) deep and pins only O(V) blocks; its partitioning is whatever
-    * the fold's last exchange produced (the `src`-layout reuse claim
-    * belongs to `co`, not to the checkpointed frame). Single-JVM
-    * truncated lineage is safe (no executor loss locally); a cluster
-    * deployment would use reliable checkpoint storage for the same
-    * plan shape. */
-  private def lpaState(s: SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    *  - `mem` — (stint_id, person_id) lineup memberships;
+    *  - `co` — weighted (src, dst, w) co-occurrence edges, cached AND
+    *    hash-partitioned on `src` before the cache fill. Every round's
+    *    edges⋈state join keys on `src`, and a cached plan replays from
+    *    blocks already laid out on `src`, so the O(E) side never
+    *    re-shuffles; only the O(V) state frame moves each round (the
+    *    same idea as bucketing the big side of a repeated join). */
+  private[graft] def coOccurrence(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
     val mem = graft.SessionCache.once(s, s"domain#$dir#lpa-mem") {
       pipeline(s, dir).lineupStints
         .select(col("stint_id"), explode(col("player_ids")).as("person_id"))
@@ -1124,38 +1100,35 @@ object Domain {
         .repartition(col("src"))
         .cache()
     }
+    (mem, co)
+  }
+
+  /** The shared LPA state, built once per (session, sf dir) and reused
+    * by q202 (reads the partition) and q256 (scores it): the edges and
+    * `labels`, the folded fixed point. Both queries read the labels 2–3
+    * times, so the fold is cached once as its checkpointed O(V) frame
+    * and every use is a scan (JobCountPinSpec pins q256's steady state;
+    * re-deriving it per reference made the pair the bench head at
+    * 22/31 s). */
+  private[graft] def lpaState(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val (mem, co) = coOccurrence(s, dir)
     val labels = graft.SessionCache.once(s, s"domain#$dir#lpa-labels") {
-      val verts = mem.select(col("person_id").cast("long").as("id")).distinct()
-      lpaFold(co, verts).localCheckpoint()
+      lpaFold(co, mem.select(col("person_id").cast("long").as("id")).distinct())
     }
     (co, labels)
   }
 
-  /** The synchronous LPA recurrence as a pure plan: `LpaIters` rounds of
-    * one edges⋈labels equi-join + one partial-aggregated (dst, lbl) vote
-    * sum + one per-dst `min(struct(−votes, lbl))` arg-min. Factored out
-    * of [[lpaState]] so PlanSpec can pin the fold's physical shape
-    * directly (the materialized LogicalRDD that q202/q256 consume is
-    * opaque to explain). */
-  private[graft] def lpaFold(co: DataFrame, verts: DataFrame): DataFrame = {
-    // Each round references `l` TWICE (vote source + update join left
-    // side), so left lazy the analyzed tree DOUBLES per round — 2^k
-    // subtree copies by round k, and AQE executes each copy as its own
-    // stage chain (measured r11: q202 cold = 39.2 s / 108 jobs at sf0.1
-    // for 40 output rows). Truncating per round with `localCheckpoint`
-    // (the q85/q239/q259 frontier discipline) makes every round O(V)
-    // work over an O(1)-deep plan: 26.0 s / 50 jobs cold (the residue
-    // is the shared game-pipeline build), same output.
-    var l = verts.select(col("id"), col("id").as("lbl")).localCheckpoint()
-    for (_ <- 1 to LpaIters)
-      l = lpaRound(co, l).localCheckpoint()
-    l
-  }
+  /** The synchronous LPA recurrence: `LpaIters` rounds of [[lpaRound]]
+    * (one edges⋈labels equi-join + one partial-aggregated (dst, lbl)
+    * vote sum + one per-dst `min(struct(−votes, lbl))` arg-min). The
+    * initial labels are materialized because every round reads its
+    * input twice (vote source and update side). */
+  private[graft] def lpaFold(co: DataFrame, verts: DataFrame): DataFrame =
+    Superstep.fold(verts.select(col("id"), col("id").as("lbl")).localCheckpoint(),
+      LpaIters)(lpaRound(co, _))
 
-  /** One synchronous LPA round, pre-checkpoint (factored out so PlanSpec
-    * can pin the per-round physical shape — the checkpointed composition
-    * is an opaque `Scan ExistingRDD` by design, exactly like q85's
-    * `relaxRound`). */
+  /** One synchronous LPA round, pre-checkpoint (PlanSpec pins its plan). */
   private[graft] def lpaRound(co: DataFrame, l: DataFrame): DataFrame = {
     val votes = co
       .join(l.select(col("id").as("src"), col("lbl")), Seq("src"))
@@ -1340,9 +1313,7 @@ object Domain {
     * equi-join, the partial-aggregated per-dst message sum, and the
     * teleport re-injection at the seeds (the Pregelix superstep shape:
     * vertex ⋈ message, then a group-by combine). `edges` carries
-    * (src, dst, w, tw), `scores` carries (id, s). Factored out so PlanSpec
-    * can pin the per-round physical shape, like [[lpaRound]]: the
-    * checkpointed composition is an opaque `Scan ExistingRDD`. */
+    * (src, dst, w, tw), `scores` carries (id, s). PlanSpec pins its plan. */
   private[graft] def pprRound(edges: DataFrame, verts: DataFrame,
       seeds: DataFrame, scores: DataFrame): DataFrame = {
     val inc = edges
@@ -1375,48 +1346,28 @@ object Domain {
     *
     * Scale shape: each round ([[pprRound]]) is ONE equi-join of the edge
     * frame against the O(V) score frame plus a partial-agg sum on dst;
-    * the edge frame and out-weights build once and cache. Each round's
-    * scores are `localCheckpoint`ed, so the composed plan is one round
-    * deep: a scan of the last round's scores plus the broadcast seed
-    * join. No windows, nothing quadratic: exactly GraphX Pregel's cost
-    * model expressed in DataFrames.
-    */
+    * the edge frame and out-weights build once and cache, and the
+    * composed plan is a scan of the last round's checkpointed scores
+    * plus the broadcast seed join. No windows, nothing quadratic:
+    * exactly GraphX Pregel's cost model expressed in DataFrames. */
   val q207PersonalizedPagerank: Q = Q.sql(
     "q207_personalized_pagerank",
     pprOracle,
     "3-seed personalized PageRank, exact-integer, over player co-occurrence") {
     (s, dir) =>
-      val mem = graft.SessionCache.once(s, s"domain#$dir#lpa-mem") {
-        pipeline(s, dir).lineupStints
-          .select(col("stint_id"), explode(col("player_ids")).as("person_id"))
-      }
-      val co = graft.SessionCache.once(s, s"domain#$dir#lpa-co") {
-        val a = mem.select(col("stint_id"), col("person_id").as("src"))
-        val b = mem.select(col("stint_id"), col("person_id").as("dst"))
-        a.join(b, Seq("stint_id"))
-          .filter(col("src") =!= col("dst"))
-          .groupBy(col("src"), col("dst"))
-          .agg(count(lit(1)).as("w"))
-          .cache()
-      }
-      // r12 (guide §2.4): verts, the seed frame and the weighted edge
-      // frame are referenced once per round (verts twice), and
-      // unmaterialized each reference re-derived them from `co` — the
-      // out-weight aggregation and distinct re-ran every iteration.
-      // Materialize each once; per-round scores are checkpointed so the
-      // composed plan stays one round deep (the q202/q256 lineage
-      // discipline). Same integer recurrence, same results.
+      // verts, seeds and the weighted edges are read by every round
+      // (verts twice), so each is materialized once instead of being
+      // re-derived from `co` per round
+      val (mem, co) = coOccurrence(s, dir)
       val verts = mem.select(col("person_id").cast("long").as("id"))
         .distinct().localCheckpoint()
       val seeds = verts.orderBy(col("id")).limit(3).localCheckpoint()
       val outw = co.groupBy(col("src")).agg(sum(col("w")).as("tw"))
       val edges = co.join(outw, Seq("src")).localCheckpoint()
-      var scores = pprWithSeed(verts, seeds)
+      val scores = Superstep.fold(pprWithSeed(verts, seeds)
         .select(col("id"),
           when(col("sd").isNotNull, lit(PprScale / 3)).otherwise(lit(0L))
-            .cast("long").as("s"))
-      for (_ <- 1 to PprIters)
-        scores = pprRound(edges, verts, seeds, scores).localCheckpoint()
+            .cast("long").as("s")), PprIters)(pprRound(edges, verts, seeds, _))
       pprWithSeed(scores, seeds)
         .select(col("id").as("person_id"), col("s").as("ppr"),
           col("sd").isNotNull.as("is_seed"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.graph.Superstep
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -229,8 +230,9 @@ object Graphs {
 
   // ---------------------------------------------------------------- q85
   /** Relaxation steps for the Bellman-Ford shortest path (the graph is a
-    * 4-level DAG, so 4 rounds reach the fixpoint; the oracle unrolls the
-    * identical recurrence). */
+    * 4-level DAG, so 4 rounds reach the fixpoint and the probe round
+    * after them, whose frontier is the region sinks, comes back empty;
+    * the oracle unrolls the identical recurrence). */
   val BellmanFordIters = 4
 
   private def shortestPathOracle: String = {
@@ -266,6 +268,20 @@ object Graphs {
        |SELECT id AS node_id, dist FROM r$BellmanFordIters""".stripMargin
   }
 
+  /** One Bellman-Ford frontier round, pre-checkpoint (PlanSpec pins its
+    * plan): relax edges out of the frontier, keep only vertices the
+    * round strictly improved (or reached for the first time) — everything
+    * already settled stays out of the next relax join. */
+  private[graft] def relaxRound(
+      edges: DataFrame, dists: DataFrame, frontier: DataFrame): DataFrame =
+    edges
+      .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
+      .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
+      .groupBy("id").agg(min(col("cand")).as("cand"))
+      .join(dists.withColumnRenamed("dist", "old"), Seq("id"), "left_outer")
+      .filter(col("old").isNull || col("cand") < col("old"))
+      .select(col("id"), col("cand").as("dist"))
+
   /** Single-source-set weighted shortest paths (Bellman-Ford) — the
     * min-plus complement to q78's sum-semiring iteration: distances from
     * the customer set through order (hop cost 1), lineitem (hop cost =
@@ -283,31 +299,13 @@ object Graphs {
     * graph the non-delta form re-relaxes the entire settled prefix every
     * round — quadratic in rounds×reached). Each round is one shuffle
     * join (edges ⋈ frontier on src) + one partial-aggregated min per
-    * dst; `localCheckpoint` truncates the per-iteration lineage so the
-    * plan stays O(1) deep at any diameter (without it round k's plan
-    * nests k copies of the join tree and the optimizer re-walks all of
-    * them). The id space uses 1e12 type offsets so key ranges stay
-    * disjoint at any realistic scale factor. Multi-edges (an order with
+    * dst ([[relaxRound]], driven by `graph.Superstep`). The id space
+    * uses 1e12 type offsets so key ranges stay disjoint at any
+    * realistic scale factor. Multi-edges (an order with
     * many lineitems to one supplier) need no dedup — min absorbs them.
     * The fixpoint is identical to the dense form (a vertex re-enters the
     * frontier whenever it improves), so the unrolled oracle is
     * unchanged. */
-  /** One Bellman-Ford frontier round, pre-checkpoint (factored out so
-    * PlanSpec can assert the per-round plan shape — after
-    * `localCheckpoint` the composed plan is an opaque `Scan ExistingRDD`
-    * by design): relax edges out of the frontier, keep only vertices the
-    * round strictly improved (or reached for the first time) — everything
-    * already settled stays out of the next relax join. */
-  private[graft] def relaxRound(
-      edges: DataFrame, dists: DataFrame, frontier: DataFrame): DataFrame =
-    edges
-      .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
-      .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
-      .groupBy("id").agg(min(col("cand")).as("cand"))
-      .join(dists.withColumnRenamed("dist", "old"), Seq("id"), "left_outer")
-      .filter(col("old").isNull || col("cand") < col("old"))
-      .select(col("id"), col("cand").as("dist"))
-
   val q85ShortestPath: Q = Q.sql("q85_shortest_path", shortestPathOracle) { (s, dir) =>
     // floor() before the long cast on BOTH sides: DuckDB's CAST(double ->
     // BIGINT) rounds half away from zero while Spark's cast truncates —
@@ -329,19 +327,17 @@ object Graphs {
             (col("n_regionkey").cast("long") + lit(1000L)).as("dst"),
             lit(1L).as("w")))
     }
-    var dists = Tables(s, dir, "customer")
+    val sources = Tables(s, dir, "customer")
       .select((col("c_custkey") + lit(1000000000000L)).as("id"),
         lit(0L).as("dist"))
       .localCheckpoint()
-    var frontier = dists
-    for (_ <- 1 to BellmanFordIters) {
-      val improved = relaxRound(edges, dists, frontier).localCheckpoint()
-      frontier = improved
-      dists = dists.unionByName(frontier)
-        .groupBy("id").agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-    }
-    dists.select(col("id").as("node_id"), col("dist"))
+    Superstep.frontier("q85_shortest_path", BellmanFordIters, sources, sources) {
+      (dists, frontier, _) =>
+        Superstep.Round(relaxRound(edges, dists, frontier), improved =>
+          dists.unionByName(improved)
+            .groupBy("id").agg(min(col("dist")).as("dist"))
+            .localCheckpoint())
+    }.select(col("id").as("node_id"), col("dist"))
   }
 
   // ---------------------------------------------------------------- q114
@@ -353,13 +349,14 @@ object Graphs {
     * vertices with fewer than 2 surviving distinct neighbours. Output is
     * every surviving vertex with its degree inside the core.
     *
-    * Rounds are FIXED at [[KCoreRounds]], not run to a data-dependent
-    * fixpoint, so the unrolled DuckDB recurrence is exact parity by
-    * construction; 4 is past the measured fixpoint at every shipped
-    * scale factor (the fringe is 2 levels deep: sf0.01 converges
-    * 16,630 → 16,371 in 2 rounds, sf0.1 in 3 — peel depth tracks the
-    * fringe's chain length, not corpus size, because every round strips
-    * ALL current degree-<2 vertices at once).
+    * The oracle unrolls [[KCoreRounds]] rounds; the engine peels until
+    * a round removes nothing and throws if that takes more than
+    * [[KCoreRounds]] rounds plus a probe (`Superstep.frontier`), so the
+    * two agree whenever the cap is past the fixpoint. 4 is past it at
+    * every shipped scale factor (the fringe is 2 levels deep: sf0.01
+    * converges 16,630 → 16,371 in 2 rounds, sf0.1 in 3 — peel depth
+    * tracks the fringe's chain length, not corpus size, because every
+    * round strips ALL current degree-<2 vertices at once).
     *
     * Scale shape: DELTA peeling, the q85 frontier discipline — degrees
     * are counted over the full edge frame exactly ONCE; every
@@ -367,8 +364,7 @@ object Graphs {
     * broadcastable) set of vertices REMOVED last round and subtracts
     * their contributions, so round cost is proportional to the fringe
     * being stripped, not the surviving graph (a full recount per round
-    * measured 6.5 s vs 3 s at sf0.1). `localCheckpoint` truncates the
-    * per-round lineage exactly as q85 does. The delta recurrence
+    * measured 6.5 s vs 3 s at sf0.1). The delta recurrence
     * produces the identical survivor set per round as the recount the
     * oracle unrolls: deg_within(s_r) = deg_within(s_{r-1}) − edges into
     * the round's removals, by induction from s_0 = all vertices. */
@@ -404,8 +400,28 @@ object Graphs {
        |GROUP BY 1""".stripMargin
   }
 
+  /** One peeling round, pre-checkpoint: drop the `dead` vertices from
+    * `deg` and subtract the edges they take with them. The removal set
+    * is small on this schema-shaped graph, but its size is data-dependent
+    * (a leaf-heavy power-law graph can strip a large share of all
+    * vertices in round 1), so the broadcast hint is gated on its counted
+    * size `nDead`; past the cutoff AQE picks the join from measured sizes. */
+  private[graft] def kcoreRound(ue: DataFrame, deg: DataFrame, dead: DataFrame,
+      nDead: Long): DataFrame = {
+    val hint: DataFrame => DataFrame =
+      if (nDead <= 1000000L) broadcast(_) else identity
+    val lost = ue.join(hint(dead.withColumnRenamed("id", "b")), Seq("b"))
+      .groupBy("a").agg(count(lit(1)).as("lost"))
+      .withColumnRenamed("a", "id")
+    deg
+      .join(hint(dead.withColumnRenamed("id", "rm")),
+        col("id") === col("rm"), "left_anti")
+      .join(lost, Seq("id"), "left_outer")
+      .select(col("id"), (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
+  }
+
   val q114KCore: Q = Q.sql("q114_kcore", kcoreOracle,
-    "2-core by iterative peeling: fixed rounds past the measured fixpoint") {
+    "2-core by iterative peeling to the fixpoint, capped loudly") {
     (s, dir) =>
       val ue = cachedOnce(s, dir, "kcore-edges") {
         val de = Tables(s, dir, "orders")
@@ -424,46 +440,19 @@ object Graphs {
         de.unionByName(de.select(col("b").as("a"), col("a").as("b")))
       }
       // deg = degrees within the current survivor set, for survivors;
-      // dead = the vertices the NEXT round removes. One full count, then
-      // per-round broadcast-join subtractions against the removals only.
-      var deg = ue.groupBy("a").agg(count(lit(1)).as("d"))
+      // the frontier = the vertices the next round removes. One full
+      // count, then per-round subtractions against the removals only.
+      val deg0 = ue.groupBy("a").agg(count(lit(1)).as("d"))
         .withColumnRenamed("a", "id").localCheckpoint()
-      var dead = deg.filter(col("d") < 2).select("id").localCheckpoint()
-      // r12: an empty removal fringe is the fixpoint — every remaining
-      // round would rebuild deg against an empty dead set (identical deg,
-      // two wasted O(V) shuffles + checkpoints per round). The count is
-      // already on hand for the broadcast gate; reuse it to stop.
-      var live = true
-      for (_ <- 1 to KCoreRounds if live) {
-        // One count per round serves both decisions below; the frame is
-        // localCheckpoint-materialized so this is a cheap cached-RDD scan.
-        val nDead = dead.count()
-        if (nDead == 0L) { live = false }
-        else {
-        // The removal fringe is SMALL on this schema-shaped graph, but its
-        // size is data-dependent: on a leaf-heavy power-law graph round 1
-        // can strip a large fraction of ALL vertices, and a hard-coded
-        // broadcast() of an O(V) frame is an executor OOM no AQE re-plan
-        // can undo. Gate the hint on the fringe's actual count; past the
-        // cutoff, leave the join unhinted and let AQE pick from measured
-        // sizes.
-        val hint: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-          if (nDead <= 1000000L) broadcast(_) else identity
-        val lost = ue.join(hint(dead.withColumnRenamed("id", "b")), Seq("b"))
-          .groupBy("a").agg(count(lit(1)).as("lost"))
-          .withColumnRenamed("a", "id")
-        deg = deg
-          .join(hint(dead.withColumnRenamed("id", "rm")),
-            col("id") === col("rm"), "left_anti")
-          .join(lost, Seq("id"), "left_outer")
-          .select(col("id"), (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
-          .localCheckpoint()
-        dead = deg.filter(col("d") < 2).select("id").localCheckpoint()
-        }
+      def dying(deg: DataFrame): DataFrame = deg.filter(col("d") < 2).select("id")
+      val core = Superstep.frontier("q114_kcore", KCoreRounds, deg0,
+          dying(deg0).localCheckpoint()) { (deg, dead, nDead) =>
+        val next = kcoreRound(ue, deg, dead, nDead).localCheckpoint()
+        Superstep.Round(dying(next), _ => next)
       }
       // a fixpoint survivor always has d >= 2; the >= 1 guard mirrors the
       // oracle's final join, which omits vertices with no surviving edge
-      deg.filter(col("d") >= 1)
+      core.filter(col("d") >= 1)
         .select(col("id").as("node_id"), col("d").cast("long").as("core_degree"))
   }
 
@@ -724,11 +713,59 @@ object Graphs {
     }
   }
 
+  // ----------------------------------------------------- q239 and q259
+  /** The undirected customer↔part purchase graph that q239 and q259
+    * walk, as (src, dst) in both directions; the distinct pairs are
+    * cached once per session. */
+  private def purchaseEdges(s: SparkSession, dir: String): DataFrame = {
+    val ep = cachedOnce(s, dir, "closeness-edges") {
+      Tables(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+        .join(Tables(s, dir, "lineitem")
+          .select(col("l_orderkey"), col("l_partkey")),
+          col("l_orderkey") === col("o_orderkey"))
+        .select((col("o_custkey") + lit(1000000000000L)).as("c"),
+          (col("l_partkey") + lit(2000000000000L)).as("p"))
+        .distinct()
+    }
+    ep.select(col("c").as("src"), col("p").as("dst"))
+      .unionByName(ep.select(col("p").as("src"), col("c").as("dst")))
+  }
+
+  /** One unit-weight BFS round, pre-checkpoint: expand the frontier one
+    * hop and keep first reaches only. A round-k candidate (dist = k) can
+    * never beat a reached entry (dist ≤ k−1), so "improved" is "not yet
+    * reached", an anti-join, and successive frontiers are disjoint.
+    * `by` names the columns a multi-source BFS carries (q239's seed). */
+  private[graft] def bfsRound(edges: DataFrame, dists: DataFrame,
+      frontier: DataFrame, by: Seq[String]): DataFrame = {
+    val key = by :+ "id"
+    edges
+      .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
+      .select(by.map(col) ++ Seq(col("dst").as("id"),
+        (col("dist") + 1L).as("dist")): _*)
+      .groupBy(key.map(col): _*).agg(min(col("dist")).as("dist"))
+      .join(dists.select(key.map(col): _*), key, "left_anti")
+  }
+
+  /** BFS from `seed` (by…, id, dist = 0) to its fixpoint: every reached
+    * (by…, id) with its hop distance. Disjoint frontiers make the state
+    * a plain union, with no per-round re-aggregation of the O(V) frame. */
+  private def bfs(query: String, cap: Int, edges: DataFrame, seed: DataFrame,
+      by: Seq[String]): DataFrame = {
+    val start = seed.localCheckpoint()
+    Superstep.frontier(query, cap, start, start) { (dists, frontier, _) =>
+      Superstep.Round(bfsRound(edges, dists, frontier, by), dists.unionByName(_))
+    }
+  }
+
   // ---------------------------------------------------------------- q239
-  /** BFS rounds for the harmonic-closeness seeds (the bipartite graph's
-    * diameter from any seed is ≤ 4 hops on the fixture; absent rows stay
-    * the infinities, exactly q85's discipline). */
-  val ClosenessRounds = 4
+  /** BFS rounds for the harmonic-closeness seeds: the farthest vertex is
+    * 5 hops from a seed at sf0.01 and at sf0.1, so 5 rounds reach the
+    * fixpoint and the probe round after them reaches nothing; a deeper
+    * graph throws instead of truncating (`Superstep.frontier`). The
+    * oracle unrolls the same count; absent rows stay the infinities,
+    * exactly q85's discipline. */
+  val ClosenessRounds = 5
 
   private def closenessOracle: String = {
     val steps = (1 to ClosenessRounds).map { k =>
@@ -794,50 +831,11 @@ object Graphs {
     closenessOracle,
     "seed-sampled harmonic closeness over the purchase bipartite graph") {
     (s, dir) =>
-      val ep = cachedOnce(s, dir, "closeness-edges") {
-        Tables(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-          .join(Tables(s, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_partkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") + lit(1000000000000L)).as("c"),
-            (col("l_partkey") + lit(2000000000000L)).as("p"))
-          .distinct()
-      }
-      val edges = ep.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(ep.select(col("p").as("src"), col("c").as("dst")))
       val seeds = Seq(2000000000001L, 2000000000002L, 2000000000003L)
-      var dists = s.createDataFrame(
-          s.sparkContext.parallelize(seeds.map(x =>
-            org.apache.spark.sql.Row(x, x, 0L))),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("seed",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("dist",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-        .localCheckpoint()
-      var frontier = dists
-      // r12: same restructure as q259's sweep (anti-join first-reach,
-      // disjoint-frontier union instead of the per-round O(V·seeds)
-      // re-min + checkpoint, early exit on an exhausted frontier) — per
-      // (seed, id) instead of per id. Same BFS levels, fewer shuffles.
-      var live = true
-      for (_ <- 1 to ClosenessRounds if live) {
-        val next = edges
-          .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
-          .select(col("seed"), col("dst").as("id"),
-            (col("dist") + 1L).as("dist"))
-          .groupBy(col("seed"), col("id")).agg(min(col("dist")).as("dist"))
-          .join(dists.select(col("seed"), col("id")), Seq("seed", "id"),
-            "left_anti")
-          .localCheckpoint()
-        if (next.isEmpty) live = false
-        else {
-          frontier = next
-          dists = dists.unionByName(frontier)
-        }
-      }
+      val dists = bfs("q239_harmonic_closeness", ClosenessRounds,
+        purchaseEdges(s, dir),
+        s.createDataFrame(seeds.map(x => (x, x, 0L))).toDF("seed", "id", "dist"),
+        Seq("seed"))
       def term(d: Column): Column =
         when(d.isNull || d === 0, lit(0).cast("double"))
           .otherwise(lit(1).cast("double") / d)
@@ -854,8 +852,9 @@ object Graphs {
   }
 
   // ---------------------------------------------------------------- q259
-  /** Sweep depth: the bipartite graph alternates part/customer levels,
-    * so 6 rounds bound any eccentricity the fixture exhibits. */
+  /** Sweep depth cap: the bipartite graph alternates part/customer
+    * levels, and each sweep reaches its fixpoint in at most 4 rounds at
+    * sf0.01 and 5 at sf0.1; a deeper graph throws at the cap. */
   val SweepRounds = 6
 
   private def diameterOracle: String = {
@@ -917,48 +916,13 @@ object Graphs {
     diameterOracle,
     "double-BFS sweep: farthest vertex then certified diameter lower bound") {
     (s, dir) =>
-      val ep = cachedOnce(s, dir, "closeness-edges") {
-        Tables(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-          .join(Tables(s, dir, "lineitem")
-            .select(col("l_orderkey"), col("l_partkey")),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("o_custkey") + lit(1000000000000L)).as("c"),
-            (col("l_partkey") + lit(2000000000000L)).as("p"))
-          .distinct()
-      }
-      val edges = ep.select(col("c").as("src"), col("p").as("dst"))
-        .unionByName(ep.select(col("p").as("src"), col("c").as("dst")))
-      // r12 (guide §2.4, remove shuffles outright): on unit-weight BFS a
-      // round-k candidate (dist = k) can never beat an entry already in
-      // `dists` (dist ≤ k-1), so "improved" ≡ first-reach — the
-      // left_outer+filter is an anti-join, the per-round
-      // union→groupBy-min over O(V) dists was a semantic no-op (frontiers
-      // are disjoint), and its re-checkpoint job is gone with it. An
-      // empty frontier ends the sweep early: every later round would
-      // produce nothing (same result, fewer jobs).
-      def sweep(seed: DataFrame): DataFrame = {
-        var dists = seed.localCheckpoint()
-        var frontier = dists
-        var live = true
-        for (_ <- 1 to SweepRounds if live) {
-          val next = edges
-            .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
-            .select(col("dst").as("id"), (col("dist") + 1L).as("dist"))
-            .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-            .join(dists.select(col("id")), Seq("id"), "left_anti")
-            .localCheckpoint()
-          if (next.isEmpty) live = false
-          else {
-            frontier = next
-            dists = dists.unionByName(frontier)
-          }
-        }
-        dists
-      }
+      val edges = purchaseEdges(s, dir)
+      def sweep(seed: DataFrame): DataFrame =
+        bfs("q259_diameter_sweep", SweepRounds, edges, seed, Nil)
       def argmaxFar(dists: DataFrame): DataFrame =
         dists.agg(min(struct((-col("dist")).as("nd"), col("id"))).as("m"))
           .select(col("m.id").as("id"), (-col("m.nd")).as("dist"))
-      val seed1 = ep.sparkSession.range(1)
+      val seed1 = s.range(1)
         .select(lit(2000000000001L).as("id"), lit(0L).as("dist"))
       val d1 = sweep(seed1)
       val uStar = argmaxFar(d1)

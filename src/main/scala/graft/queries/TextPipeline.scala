@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.graph.Superstep
 import graft.ops.Text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -3534,6 +3535,24 @@ object TextPipeline {
        |WHERE rn <= 10""".stripMargin
   }
 
+  /** One TextRank round, pre-checkpoint: each word's rank flows to its
+    * neighbours in proportion to edge weight over its out-weight, summed
+    * per (lang, word), then damped. All bigint, the oracle's recurrence. */
+  private[graft] def textRankRound(e: DataFrame, outw: DataFrame,
+      verts: DataFrame, rank: DataFrame): DataFrame = {
+    val contrib = e
+      .join(outw, Seq("lang", "src"))
+      .join(rank.withColumnRenamed("word", "src"), Seq("lang", "src"))
+      .select(col("lang"), col("dst").as("word"),
+        expr("(rank * w) div ow").as("share"))
+      .groupBy(col("lang"), col("word"))
+      .agg(sum(col("share")).as("s"))
+    verts.join(contrib, Seq("lang", "word"), "left_outer")
+      .select(col("lang"), col("word"),
+        (lit(150000L) + expr("(850000 * coalesce(s, 0)) div 1000000"))
+          .cast("long").as("rank"))
+  }
+
   /** TextRank keyword extraction (Mihalcea–Tarau '04) — per-language
     * top-10 keywords by PageRank over the word co-occurrence graph
     * (adjacent-token edges, symmetrized, co-occurrence-count weighted).
@@ -3574,22 +3593,8 @@ object TextPipeline {
         .agg(sum(col("w")).cast("long").as("ow"))
       val verts = e.select(col("lang"), col("src").as("word")).distinct()
         .localCheckpoint()
-      var rank = verts.select(col("lang"), col("word"),
-        lit(1000000L).as("rank"))
-      for (_ <- 1 to TextRankIters) {
-        val contrib = e
-          .join(outw, Seq("lang", "src"))
-          .join(rank.withColumnRenamed("word", "src"), Seq("lang", "src"))
-          .select(col("lang"), col("dst").as("word"),
-            expr("(rank * w) div ow").as("share"))
-          .groupBy(col("lang"), col("word"))
-          .agg(sum(col("share")).as("s"))
-        rank = verts.join(contrib, Seq("lang", "word"), "left_outer")
-          .select(col("lang"), col("word"),
-            (lit(150000L) + expr("(850000 * coalesce(s, 0)) div 1000000"))
-              .cast("long").as("rank"))
-          .localCheckpoint()
-      }
+      val rank = Superstep.fold(verts.select(col("lang"), col("word"),
+        lit(1000000L).as("rank")), TextRankIters)(textRankRound(e, outw, verts, _))
       val wTop = Window.partitionBy(col("lang"))
         .orderBy(col("rank").desc, col("word"))
       rank.withColumn("rn", row_number().over(wTop))

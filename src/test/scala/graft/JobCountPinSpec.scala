@@ -64,6 +64,10 @@ class JobCountPinSpec extends AnyFunSuite {
   // lineage-truncated state; steady state is a handful of scans
   pin("q256_modularity", 30)
   pin("q202_label_propagation", 60)
+  // frontier iteratives on Superstep: a port that adds jobs per round
+  // trips these (parent steady state at sf0.01/local[4]: q85 30, q259 66)
+  pin("q85_shortest_path", 90)
+  pin("q259_diameter_sweep", 198)
   // the audited multi-stage composites (session-cached corpus frames
   // referenced by several downstream stages)
   pin("q104_dedup_retrieval", 60)

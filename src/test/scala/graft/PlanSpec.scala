@@ -704,6 +704,27 @@ class PlanSpec extends AnyFunSuite {
     assert(pq.contains("BroadcastHashJoin"), s"seed join not broadcast:\n$pq")
   }
 
+  test("q207 and LPA share one co-occurrence layout, hash-partitioned on src") {
+    // a new session starts with an empty SessionCache, so q207 is the
+    // first to build the shared `co` edges; LPA must still get them laid
+    // out on its vote-join key
+    val fresh = spark.newSession()
+    Force(Registry.all.find(_.name == "q207_personalized_pagerank").get
+      .run(fresh, dir))
+    val (co, _) = queries.Domain.lpaState(fresh, dir)
+    // the partitioning the consuming joins plan against (AQE may have
+    // coalesced the cached shuffle; that keeps the hash layout)
+    import org.apache.spark.sql.catalyst.plans.physical._
+    val part = co.queryExecution.sparkPlan.outputPartitioning
+    val hashed = part match {
+      case h: HashPartitioning => Some(h)
+      case c: CoalescedHashPartitioning => Some(c.from)
+      case _ => None
+    }
+    assert(hashed.exists(_.expressions.flatMap(_.references.map(_.name)) == Seq("src")),
+      s"co is not hash-partitioned on src: $part")
+  }
+
   test("q211: NN-descent candidates are wedge equi-joins; ranking re-enters by key") {
     val p = plan("q211_nn_descent")
     // candidate generation must be the adjacency self-join on the shared

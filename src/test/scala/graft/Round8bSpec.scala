@@ -148,4 +148,11 @@ class Round8bSpec extends AnyFunSuite {
       assert(h >= 0 && h <= 3.0, s"harmonic $h out of range")
     }
   }
+
+  test("q239: BFS runs to its fixpoint, 5 hops from a seed at sf0.01") {
+    // a cap of 4 silently dropped the fifth level (4 vertices scored wrong)
+    val d = Graphs.q239HarmonicCloseness.run(spark, dir.replace("sf0.001", "sf0.01"))
+      .selectExpr("greatest(d1, d2, d3) AS far").collect().map(_.getLong(0))
+    assert(d.max == 5L, s"farthest seed distance ${d.max}, expected 5")
+  }
 }
