@@ -39,8 +39,9 @@ object Superstep {
 
   /** What one frontier round hands back: the next frontier, still lazy
     * (the driver checkpoints and counts it), and how the state absorbs
-    * that checkpointed frontier. */
-  final case class Round[S](next: DataFrame, absorb: DataFrame => S)
+    * that checkpointed frontier given its row count (q85 skips
+    * re-aggregating an empty one). */
+  final case class Round[S](next: DataFrame, absorb: (DataFrame, Long) => S)
 
   /** Runs `round` exactly `rounds` (≥ 1) times from `init`, checkpointing
     * each round's output. The caller materializes `init` if rounds read
@@ -51,7 +52,8 @@ object Superstep {
   /** Runs frontier rounds from (`state`, `seed`) until a round yields an
     * empty frontier. `seed` must already be materialized; it is counted
     * once. Each call of `round` gets the state, the live frontier and
-    * that frontier's row count. The state always absorbs the last round,
+    * that frontier's row count; the frontier it yields is counted before
+    * the state absorbs it. The state always absorbs the last round,
     * so a round whose effect lands in the state rather than in the
     * frontier (q114's removals) is never dropped. Throws when `cap`
     * rounds and a probe round still leave a live frontier. */
@@ -66,7 +68,8 @@ object Superstep {
       else {
         val r = round(st, live, n)
         val next = r.next.localCheckpoint()
-        go(done + 1, r.absorb(next), next, graft.Force(next))
+        val m = graft.Force(next)
+        go(done + 1, r.absorb(next, m), next, m)
       }
     go(0, state, seed, graft.Force(seed))
   }

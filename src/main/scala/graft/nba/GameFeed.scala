@@ -56,9 +56,9 @@ import org.apache.spark.sql.functions._
   *     regulation quarters, 300 s OT); the last period ends at
   *     game_end = max event clock + 45.
   *
-  * Scale shape: one window pass over events partitioned by game (and one
-  * by (game, team) for the swap ordinal), then a single generator explode
-  * — no joins, no driver loops; at 100 TB this is a scan + two windows.
+  * Scale shape: the numbering is one window pass over events partitioned
+  * by game, the expansion a single generator explode, the period rows one
+  * per-game aggregate — no joins, no driver loops.
   */
 object GameFeed {
 
@@ -91,55 +91,45 @@ object GameFeed {
 
   private def person(team: Column, i: Column): Column = team * 100 + i
 
-  /** One row per raw event with the derived game/clock/team/ordinal
-    * columns every family mapping needs. */
-  def base(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = graft.Tables(spark, sfDir, "events")
+  /** The numbering: one row per raw event with its 1-based ordinal `n`
+    * within the game in (ts, event_id) order and its swap ordinal `k`,
+    * the running count (inclusive) of signups by the event's team. Each
+    * game has exactly two teams (home = even event ids), so the
+    * per-(game, team) count rides the per-GAME window as two conditional
+    * running sums instead of a second full shuffle of the events table
+    * on (game_id, team_id). All three window functions share one window
+    * spec, so the numbering is a single Exchange + Sort + WindowExec at
+    * any scale (PlanSpec). */
+  private def numbered(events: DataFrame): DataFrame = {
     val wGame = Window.partitionBy(col("game_id")).orderBy(col("ts"), col("event_id"))
-    ev.select(
-        col("user_id").as("game_id"), col("event_id"), col("event_type"),
-        col("value"), col("ts"))
-      .withColumn("home_team_id", col("game_id") % 4 + 1)
-      .withColumn("away_team_id", (col("game_id") + 1) % 4 + 1)
-      .withColumn("team_id",
-        when(col("event_id") % 2 === 0, col("home_team_id"))
-          .otherwise(col("away_team_id")))
-      .withColumn("opp_id",
-        when(col("event_id") % 2 === 0, col("away_team_id"))
-          .otherwise(col("home_team_id")))
-      // 45 s steps put long games (>64 events) past the 2880 s regulation
-      // horizon, so the OT tiling is exercised at every scale factor;
-      // rebounds land 5 s after the previous event (clock - 40) so the
-      // reference's 10 s rebound->missed-shot window has real matches
-      .withColumn("clock",
-        row_number().over(wGame).cast("double") * 45.0 -
-          when(col("event_type") === "error" && col("value") < 100.0, 40.0)
-            .otherwise(0.0))
-      // running count of this team's signups, inclusive: the swap ordinal
-      // k. Each game has exactly two teams (home = even event ids), so
-      // the per-(game, team) count rides the per-GAME window as two
-      // conditional running sums — same trick as the streaming twin's
-      // (kHome, kAway) state — instead of a second full shuffle of the
-      // events table on (game_id, team_id). All three window functions in
-      // this frame (clock row_number + the two sums) share one window
-      // spec, so the whole derivation is a single Exchange + Sort +
-      // WindowExec at any scale.
-      .withColumn("k",
-        when(col("event_id") % 2 === 0,
-          sum(when(col("event_type") === "signup" && col("event_id") % 2 === 0,
-            1L).otherwise(0L)).over(wGame))
-          .otherwise(
-            sum(when(col("event_type") === "signup" && col("event_id") % 2 =!= 0,
-              1L).otherwise(0L)).over(wGame)))
+    val home = col("event_id") % 2 === 0
+    def signups(side: Column): Column =
+      sum(when(col("event_type") === "signup" && side, 1L).otherwise(0L)).over(wGame)
+    events.select(col("game_id"), col("event_id"), col("event_type"), col("value"),
+      row_number().over(wGame).cast("long").as("n"),
+      when(home, signups(home)).otherwise(signups(!home)).as("k"))
   }
+
+  /** The clock of the `n`-th event: 45 s steps put long games (>64
+    * events) past the 2880 s regulation horizon, so the OT tiling is
+    * exercised at every scale factor; rebounds land 5 s after the
+    * previous event (clock - 40) so the reference's 10 s
+    * rebound->missed-shot window has real matches. Each step adds at
+    * least 5 s, so clocks rise strictly with `n`. */
+  private def clockOf(n: Column, eventType: Column, value: Column): Column =
+    n.cast("double") * 45.0 -
+      when(eventType === "error" && value < 100.0, 40.0).otherwise(0.0)
 
   private def periodOf(clock: Column): Column =
     graft.ops.TimeKernel.periodOfClock(clock)
 
-  /** The derived play-by-play stream (see object doc for the mapping). */
-  def pbp(spark: SparkSession, sfDir: String): Dataset[PbpAction] = {
-    import spark.implicits._
-    val b = base(spark, sfDir)
+  /** The expansion: numbered events (`game_id`, `event_id`,
+    * `event_type`, `value`, `n`, `k`, as [[numbered]] gives them) to
+    * their play-by-play rows, the 20 [[PbpAction]] columns (see the
+    * object doc for the mapping). One projection plus one explode, so
+    * the batch feed and its streaming twin
+    * ([[graft.streaming.StreamingFeed.actions]]) run the same program. */
+  def expand(numbered: DataFrame): DataFrame = {
     val e = col("event_id")
     val aid = e * 4
     val team = col("team_id")
@@ -213,8 +203,14 @@ object GameFeed {
         .when(col("value") < 160.0, array(turnover))
         .otherwise(array(timeout))
 
-    val actionRows = b
-      .select(col("game_id"), col("clock"), explode(rows).as("r"))
+    val home = col("game_id") % 4 + 1
+    val away = (col("game_id") + 1) % 4 + 1
+    numbered
+      .withColumn("team_id", when(e % 2 === 0, home).otherwise(away))
+      .withColumn("opp_id", when(e % 2 === 0, away).otherwise(home))
+      .select(col("game_id"),
+        clockOf(col("n"), col("event_type"), col("value")).as("clock"),
+        explode(rows).as("r"))
       .select(
         col("game_id"), col("r.action_id"),
         periodOf(col("clock")).as("period"),
@@ -226,13 +222,29 @@ object GameFeed {
         col("r.jumpball_won_person_id"), col("r.jumpball_lost_person_id"),
         col("r.jumpball_recovered_person_id"),
         col("r.x"), col("r.y"), col("r.dist"))
+  }
+
+  /** The derived play-by-play stream (see object doc for the mapping):
+    * the expansion of the numbered events, plus two period bracket rows
+    * per period. */
+  def pbp(spark: SparkSession, sfDir: String): Dataset[PbpAction] = {
+    import spark.implicits._
+    val events = graft.Tables(spark, sfDir, "events")
+      .select(col("user_id").as("game_id"), col("event_id"), col("event_type"),
+        col("value"), col("ts"))
 
     // period bracket rows: two per period (start/end), last ends at
-    // game_end = max clock + 45 — Periods.fromPbp derives bounds from these
+    // game_end = max clock + 45 — Periods.fromPbp derives bounds from these.
+    // The max clock is the last event's, so a per-game aggregate (count +
+    // last event) finds it without a second pass of the numbering window
     val tileStart = graft.ops.TimeKernel.periodStartOffset(col("p"))
     val tileEnd = graft.ops.TimeKernel.periodStartOffset(col("p") + 1)
-    val periodRows = b.groupBy(col("game_id"))
-      .agg(max(col("clock")).as("max_clock"))
+    val periodRows = events.groupBy(col("game_id"))
+      .agg(count(lit(1)).as("n"),
+        max(struct(col("ts"), col("event_id"), col("event_type"), col("value")))
+          .as("last"))
+      .select(col("game_id"),
+        clockOf(col("n"), col("last.event_type"), col("last.value")).as("max_clock"))
       .withColumn("game_end", col("max_clock") + 45.0)
       .withColumn("n_periods", periodOf(col("max_clock")))
       .withColumn("p", explode(sequence(lit(1), col("n_periods"))))
@@ -261,7 +273,7 @@ object GameFeed {
         nulL.as("jumpball_recovered_person_id"),
         nulD.as("x"), nulD.as("y"), nulD.as("dist"))
 
-    actionRows.unionByName(periodRows).as[PbpAction]
+    expand(numbered(events)).unionByName(periodRows).as[PbpAction]
   }
 
   /** (game_id, home_team_id, away_team_id) for every derived game. */

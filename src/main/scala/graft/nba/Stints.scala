@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * substitution stream, which 5 players were on court for every instant of
   * the game; then derive per-player on-court runs.
   *
-  * Spark shape: the stateful set-fold (SURVEY W4) is a typed
-  * `flatMapGroups` over `(game_id, team_id)` — one shuffle on the group
+  * Spark shape: the stateful set-fold (SURVEY W4) is a typed `cogroup`
+  * of starters and subs over `(game_id, team_id)` — one shuffle on the group
   * key, then a pure in-memory replay of that team's subs (a few hundred
   * rows per group). Groups are independent games, so a 1,230-game season —
   * or a 100 TB season archive — parallelizes embarrassingly across
@@ -23,13 +23,77 @@ import org.apache.spark.sql.functions._
   */
 object Stints {
 
-  /** The reference's fold (`src/managers/game.py:147-193`), faithfully:
+  /** State of the W4 fold for one (game, team). */
+  case class StintState(
+      onCourt: Seq[Long],          // current set (sorted)
+      lastEmitted: Seq[Long],      // last emitted lineup (sorted)
+      pendingClock: Double,        // clock of the buffered same-clock batch
+      pendingIn: Seq[Long],
+      pendingOut: Seq[Long],
+      emittedStarters: Boolean)
+
+  /** Seed state from starters (5 on court at clock 0). */
+  def initial(starters: Seq[Long]): StintState =
+    StintState(starters.distinct.sorted, Seq.empty, -1.0, Seq.empty, Seq.empty,
+      emittedStarters = false)
+
+  /** Apply the buffered same-clock batch — its outs as one set, then its
+    * ins — and emit the lineup if it has 5 players and differs from the
+    * last emitted one. */
+  private def flush(gameId: Long, teamId: Long, s: StintState): (StintState, Option[LineupSnapshot]) = {
+    if (s.pendingClock < 0) (s, None)
+    else {
+      val next = (s.onCourt.toSet -- s.pendingOut ++ s.pendingIn).toSeq.sorted
+      val changed = next.size == 5 && next != s.lastEmitted
+      val snap = if (changed) Some(LineupSnapshot(gameId, teamId, s.pendingClock, next)) else None
+      (s.copy(onCourt = next,
+        lastEmitted = if (changed) next else s.lastEmitted,
+        pendingClock = -1.0, pendingIn = Seq.empty, pendingOut = Seq.empty), snap)
+    }
+  }
+
+  /** The W4 fold, the reference's (`src/managers/game.py:147-193`):
     * iterate substitutions in clock order keeping a running player set;
     * same-clock events are applied as one batch BEFORE the emit check
     * (the double-substitution rule, manager:173-181); emit a snapshot
     * whenever the set has exactly 5 players and differs from the last
     * emitted lineup. Starters seed the set at clock 0.
-    */
+    *
+    * The newest clock's batch stays buffered in the state until an event
+    * with a strictly later clock arrives, so a batch split across
+    * streaming micro-batches is still applied whole; `finalize` applies
+    * the buffered batch at the end of the input. The batch path
+    * ([[lineupSnapshots]]) and the streaming one
+    * ([[graft.streaming.StreamingStints]]) both run this fold. */
+  def step(
+      gameId: Long, teamId: Long,
+      events: Seq[SubEvent],
+      start: StintState,
+      finalize: Boolean): (StintState, Seq[LineupSnapshot]) = {
+    val out = Seq.newBuilder[LineupSnapshot]
+    var st = start
+    if (!st.emittedStarters && st.onCourt.size == 5) {
+      out += LineupSnapshot(gameId, teamId, 0.0, st.onCourt)
+      st = st.copy(lastEmitted = st.onCourt, emittedStarters = true)
+    }
+    for (e <- events.sortBy(_.global_clock)) {
+      if (st.pendingClock >= 0 && e.global_clock > st.pendingClock) {
+        val (s2, snap) = flush(gameId, teamId, st)
+        st = s2; snap.foreach(out += _)
+      }
+      st = st.copy(pendingClock = e.global_clock,
+        pendingIn = if (e.is_in) st.pendingIn :+ e.person_id else st.pendingIn,
+        pendingOut = if (!e.is_in) st.pendingOut :+ e.person_id else st.pendingOut)
+    }
+    if (finalize) {
+      val (s2, snap) = flush(gameId, teamId, st)
+      st = s2; snap.foreach(out += _)
+    }
+    (st, out.result())
+  }
+
+  /** The batch lineup snapshots: [[step]] over each (game, team)'s whole
+    * substitution stream, seeded by its starters. */
   def lineupSnapshots(
       spark: SparkSession,
       starters: Dataset[Starter],
@@ -39,25 +103,8 @@ object Stints {
       .groupByKey(s => (s.game_id, s.team_id))
       .cogroup(subs.groupByKey(s => (s.game_id, s.team_id))) {
         case ((gameId, teamId), starterRows, subRows) =>
-          var cur = starterRows.map(_.person_id).toSet
-          val out = Seq.newBuilder[LineupSnapshot]
-          if (cur.size == 5)
-            out += LineupSnapshot(gameId, teamId, 0.0, cur.toSeq.sorted)
-          var lastEmitted = cur
-          // same-clock batch rule: group by clock, apply whole batch, then check
-          val batches = subRows.toSeq
-            .sortBy(s => (s.global_clock, s.person_id))
-            .groupBy(_.global_clock).toSeq.sortBy(_._1)
-          for ((clock, batch) <- batches) {
-            batch.foreach { s =>
-              cur = if (s.is_in) cur + s.person_id else cur - s.person_id
-            }
-            if (cur.size == 5 && cur != lastEmitted) {
-              out += LineupSnapshot(gameId, teamId, clock, cur.toSeq.sorted)
-              lastEmitted = cur
-            }
-          }
-          out.result().iterator
+          step(gameId, teamId, subRows.toSeq,
+            initial(starterRows.map(_.person_id).toSeq), finalize = true)._2.iterator
       }
   }
 

@@ -333,8 +333,9 @@ object Graphs {
       .localCheckpoint()
     Superstep.frontier("q85_shortest_path", BellmanFordIters, sources, sources) {
       (dists, frontier, _) =>
-        Superstep.Round(relaxRound(edges, dists, frontier), improved =>
-          dists.unionByName(improved)
+        Superstep.Round(relaxRound(edges, dists, frontier), (improved, n) =>
+          if (n == 0L) dists
+          else dists.unionByName(improved)
             .groupBy("id").agg(min(col("dist")).as("dist"))
             .localCheckpoint())
     }.select(col("id").as("node_id"), col("dist"))
@@ -448,7 +449,7 @@ object Graphs {
       val core = Superstep.frontier("q114_kcore", KCoreRounds, deg0,
           dying(deg0).localCheckpoint()) { (deg, dead, nDead) =>
         val next = kcoreRound(ue, deg, dead, nDead).localCheckpoint()
-        Superstep.Round(dying(next), _ => next)
+        Superstep.Round(dying(next), (_, _) => next)
       }
       // a fixpoint survivor always has d >= 2; the >= 1 guard mirrors the
       // oracle's final join, which omits vertices with no surviving edge
@@ -754,7 +755,7 @@ object Graphs {
       by: Seq[String]): DataFrame = {
     val start = seed.localCheckpoint()
     Superstep.frontier(query, cap, start, start) { (dists, frontier, _) =>
-      Superstep.Round(bfsRound(edges, dists, frontier, by), dists.unionByName(_))
+      Superstep.Round(bfsRound(edges, dists, frontier, by), (f, _) => dists.unionByName(f))
     }
   }
 

@@ -5,7 +5,7 @@ import graft.streaming.StreamingFeed
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, row_number}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming queries under the oracle gate: the Structured Streaming feed
   * ingestion (§2.9) is driven to completion over the sf directory with
@@ -99,18 +99,25 @@ object StreamingQ {
       extraConfs: Map[String, String] = Map.empty)(
       build: SparkSession => DataFrame): DataFrame = {
     val path = graft.SessionCache.onceStrong(spark, s"stream#$dir#$tag") {
-      val sess = drainSession(spark, shufflePartitions, extraConfs)
       val tmp = graft.Scratch.tempDir(s"graft-$tag-").toString
-      val q = build(sess)
-        .writeStream.format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainTo(tmp, build(drainSession(spark, shufflePartitions, extraConfs)))
       s"$tmp/out"
     }
     spark.read.parquet(path)
+  }
+
+  /** Runs the streaming frame `df` to completion under
+    * `Trigger.AvailableNow`: parquet sink at `$tmp/out`, checkpoint at
+    * `$tmp/ckpt`. Returns the finished query, whose progress stays
+    * readable (tools.StreamCostProbe). */
+  private[graft] def drainTo(tmp: String, df: DataFrame): StreamingQuery = {
+    val q = df.writeStream.format("parquet")
+      .option("path", s"$tmp/out")
+      .option("checkpointLocation", s"$tmp/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
   }
 
   /** The feed ingestion: the events parquet streamed through the
@@ -334,15 +341,7 @@ object StreamingQ {
       val (slice1, slice2) = stagedHalves(spark, dir, splitPred)
       def publish(src: String, name: String): Unit =
         Files.copy(Paths.get(src), Paths.get(s"$watch/$name.parquet"))
-      def drainOnce(): Unit = {
-        val q = build(sess, watch)
-          .writeStream.format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      def drainOnce(): Unit = drainTo(tmp, build(sess, watch))
       publish(slice1, "slice1")
       drainOnce() // incarnation 1 drains the front half, then is GONE
       val torn: Option[java.io.File] =

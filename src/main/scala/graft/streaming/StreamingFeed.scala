@@ -9,10 +9,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Streaming feed ingestion — the reference's poll-fetch-normalize loop
   * (`/root/reference/src/fetcher.py:12,100-115`) as a real Structured
   * Streaming source: event files land in a directory, `readStream` picks
-  * them up, and a stateful per-game fold assigns each event its ordinal
-  * clock and expands it into typed play-by-play actions — the incremental
-  * twin of [[graft.nba.GameFeed.pbp]] (period bracket rows excluded: they
-  * need end-of-game knowledge a live stream doesn't have).
+  * them up, a stateful per-game fold numbers each event, and the batch
+  * feed's own expansion ([[GameFeed.expand]]) turns the numbered events
+  * into typed play-by-play actions — the incremental twin of
+  * [[GameFeed.pbp]] (period bracket rows excluded: they need end-of-game
+  * knowledge a live stream doesn't have).
   *
   * State per game is O(1) — the event ordinal plus one substitution
   * counter per side — so the operator shards to any game cardinality the
@@ -31,123 +32,42 @@ object StreamingFeed {
   /** Per-game fold state: events seen, substitutions per side. */
   case class FeedState(n: Long, kHome: Long, kAway: Long)
 
+  /** A raw event with its ordinals, the input columns of
+    * [[GameFeed.expand]]: `n` is the 1-based event ordinal within the
+    * game, `k` the running count (inclusive) of signups by the event's
+    * team. */
+  case class NumberedEvent(
+      game_id: Long, event_id: Long, event_type: String, value: Double,
+      n: Long, k: Long)
+
   private def us(t: java.sql.Timestamp): Long =
     t.getTime * 1000 + (t.getNanos / 1000) % 1000
 
-  private def periodOf(clock: Double): Int =
-    if (clock < 2880.0) (clock / 720.0).toInt + 1
-    else 5 + ((clock - 2880.0) / 300.0).toInt
-
-  /** Expand one event into its pbp actions — the row form of the column
-    * mapping in [[GameFeed.pbp]] (change both or neither). `n` is the
-    * 1-based event ordinal within the game, `k` the 1-based substitution
-    * ordinal within (game, team) when the event is a signup. */
-  private[streaming] def actionsOf(e: RawEvent, n: Long, k: Long): Seq[PbpAction] = {
-    val g = e.user_id
-    val home = g % 4 + 1
-    val away = (g + 1) % 4 + 1
-    val isHome = e.event_id % 2 == 0
-    val team = if (isHome) home else away
-    val opp = if (isHome) away else home
-    val ev = e.event_id
-    val aid = ev * 4
-    val clock = n * 45.0 -
-      (if (e.event_type == "error" && e.value < 100.0) 40.0 else 0.0)
-    val p = periodOf(clock)
-
-    def pa(a: Long, typ: String, sub: Option[String], desc: Option[String],
-        res: Option[String], tm: Option[Long], person: Option[Long],
-        assist: Option[Long] = None, block: Option[Long] = None,
-        steal: Option[Long] = None, drawn: Option[Long] = None,
-        jbWon: Option[Long] = None, jbLost: Option[Long] = None,
-        jbRec: Option[Long] = None, x: Option[Double] = None,
-        y: Option[Double] = None): PbpAction =
-      PbpAction(g, a, p, clock, typ, sub, desc, res, tm, person,
-        assist, block, steal, drawn, jbWon, jbLost, jbRec,
-        x, y, x.map(xv => math.sqrt(xv * xv + y.get * y.get)))
-
-    e.event_type match {
-      case "signup" =>
-        Seq(
-          pa(aid, "substitution", Some("out"), None, None, Some(team),
-            Some(team * 100 + (k - 1) % 10)),
-          pa(aid + 1, "substitution", Some("in"), None, None, Some(team),
-            Some(team * 100 + (k + 4) % 10)))
-      case "click" | "purchase" =>
-        val made = e.value >= 100.0
-        Seq(pa(aid, if (e.event_type == "click") "2pt" else "3pt", None,
-          Some(GameFeed.shotStyles((ev % 14).toInt)),
-          Some(if (made) "Made" else "Missed"),
-          Some(team), Some(team * 100 + ev % 10),
-          assist = if (made && ev % 3 == 0) Some(team * 100 + (ev + 1) % 10) else None,
-          block = if (!made && ev % 5 == 0) Some(opp * 100 + (ev + 2) % 10) else None,
-          x = Some((ev % 50 - 25).toDouble), y = Some((ev % 35).toDouble)))
-      case "error" =>
-        if (e.value < 100.0)
-          Seq(pa(aid, "rebound",
-            Some(if (ev % 2 == 0) "defensive" else "offensive"), None, None,
-            Some(team), Some(team * 100 + ev % 10)))
-        else if (e.value < 180.0)
-          Seq(pa(aid, "violation",
-            Some(GameFeed.violationSubs((ev % 7).toInt)), None, None,
-            Some(team), Some(team * 100 + ev % 10)))
-        else
-          Seq(pa(aid, "jumpball", Some("recovered"),
-            Some(GameFeed.jumpballDescs((ev % 3).toInt)), None,
-            Some(team), Some(team * 100 + ev % 10),
-            jbWon = Some(team * 100 + ev % 10),
-            jbLost = Some(opp * 100 + (ev + 1) % 10),
-            jbRec = Some(team * 100 + (ev + 7) % 10)))
-      case _ =>
-        if (e.value < 80.0) {
-          val drawn = opp * 100 + (ev + 3) % 10
-          pa(aid, "foul",
-            Some(GameFeed.foulSubs((ev % 4).toInt)),
-            Some(GameFeed.foulDescs((ev % 5).toInt)), None,
-            Some(team), Some(team * 100 + ev % 10), drawn = Some(drawn)) +:
-            (1 to 2).map(a => pa(aid + a, "freethrow", Some(s"$a of 2"), None,
-              Some(if ((ev + a) % 2 == 0) "Made" else "Missed"),
-              Some(opp), Some(drawn)))
-        } else if (e.value < 160.0)
-          Seq(pa(aid, "turnover",
-            Some(GameFeed.turnoverSubs((ev % 6).toInt)),
-            Some(GameFeed.turnoverDescs((ev % 3).toInt)), None,
-            Some(team), Some(team * 100 + ev % 10),
-            steal = if (ev % 4 == 0) Some(opp * 100 + (ev + 5) % 10) else None))
-        else
-          Seq(pa(aid, "timeout",
-            Some(if (ev % 2 == 0) "full" else "short"), None, None,
-            Some(team), None))
-    }
-  }
-
-  /** Streaming entry: raw events in, typed pbp actions out. */
+  /** Streaming entry: raw events in, typed pbp actions out. The fold
+    * only numbers events; the expansion runs after it as a stateless
+    * projection. */
   def actions(events: Dataset[RawEvent]): Dataset[PbpAction] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
+    val numbered = events
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FeedState, PbpAction](
+      .flatMapGroupsWithState[FeedState, NumberedEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (gameId: Long, it: Iterator[RawEvent], state: GroupState[FeedState]) =>
           var st = state.getOption.getOrElse(FeedState(0L, 0L, 0L))
-          val out = Seq.newBuilder[PbpAction]
+          val out = Seq.newBuilder[NumberedEvent]
           for (e <- it.toSeq.sortBy(e => (us(e.ts), e.event_id))) {
-            val n = st.n + 1
-            val isSub = e.event_type == "signup"
-            val isHome = e.event_id % 2 == 0
-            val k =
-              if (!isSub) 0L
-              else if (isHome) st.kHome + 1
-              else st.kAway + 1
-            st = FeedState(n,
-              if (isSub && isHome) k else st.kHome,
-              if (isSub && !isHome) k else st.kAway)
-            out ++= actionsOf(e, n, k)
+            val home = e.event_id % 2 == 0
+            val sub = if (e.event_type == "signup") 1L else 0L
+            st = if (home) FeedState(st.n + 1, st.kHome + sub, st.kAway)
+              else FeedState(st.n + 1, st.kHome, st.kAway + sub)
+            out += NumberedEvent(gameId, e.event_id, e.event_type, e.value,
+              st.n, if (home) st.kHome else st.kAway)
           }
           state.update(st)
           out.result().iterator
       }
+    GameFeed.expand(numbered.toDF()).as[PbpAction]
   }
 
   /** Streaming scan of a directory of driver-schema event parquet files —

@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.nba.Model.{LineupSnapshot, SubEvent}
+import graft.nba.Stints
+import graft.nba.Stints.StintState
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -11,64 +13,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (`src/fetcher.py:12`) into a true incremental pipeline: substitution
   * events stream in per (game, team); 5-player snapshots stream out.
   *
-  * Same-clock batching across micro-batch boundaries is handled by
-  * buffering the newest clock's events in state: a batch is applied only
-  * once an event with a strictly later clock arrives (or the caller
-  * finalizes). State per key is O(roster size).
+  * The fold is [[Stints.step]], the one the batch path runs, here with
+  * `finalize = false`: the newest clock's events stay buffered in state
+  * until an event with a strictly later clock arrives, so same-clock
+  * batching holds across micro-batch boundaries. State per key is
+  * O(roster size).
   */
 object StreamingStints {
-
-  case class StintState(
-      onCourt: Seq[Long],          // current set (sorted)
-      lastEmitted: Seq[Long],      // last emitted lineup (sorted)
-      pendingClock: Double,        // clock of the buffered same-clock batch
-      pendingIn: Seq[Long],
-      pendingOut: Seq[Long],
-      emittedStarters: Boolean)
-
-  /** Seed state from starters (5 on court at clock 0). */
-  def initial(starters: Seq[Long]): StintState =
-    StintState(starters.sorted, Seq.empty, -1.0, Seq.empty, Seq.empty, emittedStarters = false)
-
-  /** Apply the buffered batch; returns (newState, snapshotOpt). */
-  private def flush(gameId: Long, teamId: Long, s: StintState): (StintState, Option[LineupSnapshot]) = {
-    if (s.pendingClock < 0) (s, None)
-    else {
-      val next = (s.onCourt.toSet -- s.pendingOut ++ s.pendingIn).toSeq.sorted
-      val changed = next.size == 5 && next != s.lastEmitted
-      val snap = if (changed) Some(LineupSnapshot(gameId, teamId, s.pendingClock, next)) else None
-      (s.copy(onCourt = next,
-        lastEmitted = if (changed) next else s.lastEmitted,
-        pendingClock = -1.0, pendingIn = Seq.empty, pendingOut = Seq.empty), snap)
-    }
-  }
-
-  private[streaming] def step(
-      gameId: Long, teamId: Long,
-      events: Seq[SubEvent],
-      start: StintState,
-      finalize: Boolean): (StintState, Seq[LineupSnapshot]) = {
-    val out = Seq.newBuilder[LineupSnapshot]
-    var st = start
-    if (!st.emittedStarters && st.onCourt.size == 5) {
-      out += LineupSnapshot(gameId, teamId, 0.0, st.onCourt)
-      st = st.copy(lastEmitted = st.onCourt, emittedStarters = true)
-    }
-    for (e <- events.sortBy(e => (e.global_clock, e.person_id))) {
-      if (st.pendingClock >= 0 && e.global_clock > st.pendingClock) {
-        val (s2, snap) = flush(gameId, teamId, st)
-        st = s2; snap.foreach(out += _)
-      }
-      st = st.copy(pendingClock = e.global_clock,
-        pendingIn = if (e.is_in) st.pendingIn :+ e.person_id else st.pendingIn,
-        pendingOut = if (!e.is_in) st.pendingOut :+ e.person_id else st.pendingOut)
-    }
-    if (finalize) {
-      val (s2, snap) = flush(gameId, teamId, st)
-      st = s2; snap.foreach(out += _)
-    }
-    (st, out.result())
-  }
 
   /** Streaming entry: subs in, snapshots out. `starters` is the static
     * (game, team) → starting-five side input, broadcast-joined in the
@@ -84,10 +35,8 @@ object StreamingStints {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: (Long, Long), it: Iterator[SubEvent], state: GroupState[StintState]) =>
           val st0 = state.getOption.getOrElse(
-            initial(starters.getOrElse(key, Seq.empty)))
-          // within a game feed, a later micro-batch implies later clocks:
-          // flush the pending batch on entry if new events moved past it
-          val (st1, snaps) = step(key._1, key._2, it.toSeq, st0, finalize = false)
+            Stints.initial(starters.getOrElse(key, Seq.empty)))
+          val (st1, snaps) = Stints.step(key._1, key._2, it.toSeq, st0, finalize = false)
           state.update(st1)
           snaps.iterator
       }

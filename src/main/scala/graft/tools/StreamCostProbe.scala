@@ -1,23 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.queries.StreamingQ
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-/** Round-11 optimization probe: ~40 of the bench's session-cache builds
-  * are one-shot Structured Streaming drains (`streamOnce` /
-  * `streamRestart`), together ~210 s of the 667 s round-11 baseline —
-  * but a drain moves only a few MB, so the cost is scaffold overhead,
-  * not data. This main runs two representative drain shapes (the
-  * stateful flatMapGroupsWithState feed expansion and the watermarked
-  * tumbling-window aggregation) and prints the per-batch `durationMs`
-  * breakdown from `StreamingQueryProgress`, so conf A/Bs target the
-  * measured component (walCommit vs addBatch vs stateStoreCommit vs
-  * queryPlanning) instead of guessing.
+/** Per-batch cost of the one-shot streaming drains. Runs two
+  * representative drain shapes (the stateful feed fold plus its
+  * expansion, and the watermarked tumbling-window aggregation) the way
+  * the engine runs a drain: on `StreamingQ.drainSession` (the drain
+  * confs, the fork-free checkpoint manager and the drain state-store
+  * fan-out) through `StreamingQ.drainTo`. Prints each batch's
+  * `durationMs` breakdown from `StreamingQueryProgress`, so conf A/Bs
+  * target the measured component (walCommit vs addBatch vs
+  * stateStoreCommit vs queryPlanning) instead of guessing.
   *
-  * A/B lever: pass session confs as `-Dspark.*` JVM properties.
+  * A/B lever: pass session confs the drain session does not set as
+  * `-Dspark.*` JVM properties.
   *
-  *   SPARK_GRAFT_CPUS=32 scripts/jrun.sh graft.tools.StreamCostProbe
+  *   SPARK_GRAFT_CPUS=4 scripts/jrun.sh graft.tools.StreamCostProbe
   */
 object StreamCostProbe {
   def main(args: Array[String]): Unit = {
@@ -25,16 +25,13 @@ object StreamCostProbe {
     val spark = graft.Session.build()
     // session warm-up so run 1 isn't billed codegen/parquet init
     spark.read.parquet(s"$dir/region.parquet").count()
+    // a fresh drain clone per drain, as `StreamingQ.streamOnce` builds one
+    def events = graft.streaming.StreamingFeed.eventsStream(
+      StreamingQ.drainSession(spark), dir, glob = "events.parquet")
 
-    def drain(tag: String)(build: SparkSession => org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = graft.Scratch.tempDir(s"scp-$tag-").toString
+    def drain(tag: String)(df: DataFrame): Unit = {
       val t0 = System.nanoTime()
-      val q = build(spark).writeStream.format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val q = StreamingQ.drainTo(graft.Scratch.tempDir(s"scp-$tag-").toString, df)
       val wall = (System.nanoTime() - t0) / 1e9
       println(f"== $tag wall=$wall%.2fs")
       q.recentProgress.foreach { p =>
@@ -50,13 +47,11 @@ object StreamCostProbe {
 
     val reps = sys.env.getOrElse("GRAFT_PROBE_REPS", "2").toInt
     for (i <- 1 to reps) {
-      drain(s"feed-ingest-$i") { s =>
-        graft.streaming.StreamingFeed.actions(
-          graft.streaming.StreamingFeed.eventsStream(s, dir, glob = "events.parquet")).toDF()
+      drain(s"feed-ingest-$i") {
+        graft.streaming.StreamingFeed.actions(events).toDF()
       }
-      drain(s"window-agg-$i") { s =>
-        graft.streaming.StreamingFeed.eventsStream(s, dir, glob = "events.parquet")
-          .toDF()
+      drain(s"window-agg-$i") {
+        events.toDF()
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n_events"),

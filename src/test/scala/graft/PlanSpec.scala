@@ -164,6 +164,28 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("Window"), s"expected window-based as-of:\n$p")
   }
 
+  test("GameFeed.pbp: the numbering is one Window over events") {
+    // the analyzed plan: a suite that already cached the feed would
+    // substitute the cache into the optimized one
+    val p = nba.GameFeed.pbp(spark, dir).queryExecution.analyzed
+    val windows = p.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }
+    assert(windows.size == 1, s"expected one Window:\n$p")
+  }
+
+  test("q73: the feed expansion runs after the stateful fold, not inside it") {
+    import org.apache.spark.sql.catalyst.plans.logical.{FlatMapGroupsWithState, Generate}
+    val sess = queries.StreamingQ.drainSession(spark)
+    val p = streaming.StreamingFeed.actions(
+      streaming.StreamingFeed.eventsStream(sess, dir, glob = "events.parquet"))
+      .queryExecution.analyzed
+    val gens = p.collect { case g: Generate => g }
+    assert(gens.size == 1 &&
+      gens.head.child.exists(_.isInstanceOf[FlatMapGroupsWithState]),
+      s"expected the explode above FlatMapGroupsWithState:\n$p")
+  }
+
   test("q79: top-3 terms per doc uses the WindowGroupLimit pushdown") {
     val p = plan("q79_tfidf")
     assert(p.contains("WindowGroupLimit"), s"top-k not pushed into window:\n$p")

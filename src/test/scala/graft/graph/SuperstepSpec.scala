@@ -30,7 +30,7 @@ class SuperstepSpec extends AnyFunSuite {
   private def bfs(cap: Int): DataFrame = {
     val start = source
     Superstep.frontier("path_bfs", cap, start, start) { (d, f, _) =>
-      Superstep.Round(Graphs.bfsRound(path, d, f, Nil), d.unionByName(_))
+      Superstep.Round(Graphs.bfsRound(path, d, f, Nil), (next, _) => d.unionByName(next))
     }
   }
 
@@ -46,19 +46,33 @@ class SuperstepSpec extends AnyFunSuite {
     assert(dists(bfs(Hops + 3)) == exact)
   }
 
+  /** Relaxation over the path as q85 runs it; `seen` gets the count
+    * each absorb is handed. */
+  private def relax(cap: Int, seen: Long => Unit = _ => ()): DataFrame = {
+    val start = source
+    Superstep.frontier("path_relax", cap, start, start) { (d, f, _) =>
+      Superstep.Round(Graphs.relaxRound(path, d, f), (improved, n) => {
+        seen(n)
+        if (n == 0L) d
+        else d.unionByName(improved).groupBy("id").agg(min(col("dist")).as("dist"))
+          .localCheckpoint()
+      })
+    }
+  }
+
   test("a cap equal to the depth with a sink frontier returns normally") {
     // q85's shape: the frontier after the last round is the sink, still
     // live, so a probe round runs; relaxing out of a sink yields nothing
-    def relax(cap: Int): DataFrame = {
-      val start = source
-      Superstep.frontier("path_relax", cap, start, start) { (d, f, _) =>
-        Superstep.Round(Graphs.relaxRound(path, d, f), improved =>
-          d.unionByName(improved).groupBy("id").agg(min(col("dist")).as("dist"))
-            .localCheckpoint())
-      }
-    }
     assert(dists(relax(Hops)) == (0L to Hops).map(v => v -> v).toMap)
     intercept[IllegalStateException](relax(Hops - 1))
+  }
+
+  test("absorb is handed each frontier's count, 0 on the final round") {
+    // one vertex improves per round, then the probe out of the sink
+    // improves none: q85 returns its state unchanged on that count
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    assert(dists(relax(Hops, seen += _)) == (0L to Hops).map(v => v -> v).toMap)
+    assert(seen.toSeq == Seq.fill(Hops)(1L) :+ 0L, seen)
   }
 
   test("a round whose effect lands in the state is absorbed even when its frontier is empty") {
@@ -76,7 +90,7 @@ class SuperstepSpec extends AnyFunSuite {
       Superstep.frontier("path_kcore", cap, deg0, dying(deg0).localCheckpoint()) {
         (deg, dead, n) =>
           val next = Graphs.kcoreRound(ue, deg, dead, n).localCheckpoint()
-          Superstep.Round(dying(next), _ => next)
+          Superstep.Round(dying(next), (_, _) => next)
       }
     assert(peel(5).count() == 0L)
     intercept[IllegalStateException](peel(4))

@@ -71,4 +71,38 @@ class StintPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a same-clock batch applies its outs, then its ins, whatever the row order") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val (g, t) = (1L, 100L)
+    def player(i: Long): Long = t * 100 + i
+    val starters = (1L to 5L).map(i => Starter(g, t, player(i)))
+    // at 50 s player 5 goes out and back in while player 1 makes way for
+    // player 6; applied row by row, the in-then-out order would bench 5
+    val batch = Seq(
+      SubEvent(g, t, player(5), 50.0, is_in = false),
+      SubEvent(g, t, player(5), 50.0, is_in = true),
+      SubEvent(g, t, player(1), 50.0, is_in = false),
+      SubEvent(g, t, player(6), 50.0, is_in = true))
+    val want = Seq(0.0 -> (1L to 5L).map(player), 50.0 -> (2L to 6L).map(player))
+    def snaps(ds: org.apache.spark.sql.Dataset[LineupSnapshot]) =
+      ds.collect().map(s => s.global_clock -> s.player_ids).toSeq.sortBy(_._1)
+
+    for (rows <- Seq(batch, batch.reverse)) {
+      assert(snaps(Stints.lineupSnapshots(spark, starters.toDS(), rows.toDS())) == want,
+        s"batch fold on $rows")
+      val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SubEvent]
+      val q = graft.streaming.StreamingStints(input.toDS(), Map((g, t) -> (1L to 5L).map(player)))
+        .writeStream.outputMode("append").format("memory")
+        .queryName("stint_same_clock").start()
+      try {
+        input.addData(rows); q.processAllAvailable()
+        // a later clock flushes the buffered batch
+        input.addData(SubEvent(g, t, 99L, 99999.0, is_in = true)); q.processAllAvailable()
+        assert(snaps(spark.table("stint_same_clock").as[LineupSnapshot]
+          .filter(_.global_clock < 99999.0)) == want, s"streaming fold on $rows")
+      } finally q.stop()
+    }
+  }
 }
