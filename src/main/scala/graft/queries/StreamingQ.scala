@@ -3,7 +3,7 @@ package graft.queries
 import graft.Q
 import graft.streaming.StreamingFeed
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -81,13 +81,41 @@ object StreamingQ {
     sess
   }
 
+  /** What a drain's builder is handed: the drain session and the events
+    * feed the scaffold drains. The scaffold decides where the feed lives,
+    * so a builder is one frame for the one-shot drain and the restart
+    * alike. `events` opens a fresh file-source stream on every call (a
+    * join reads one per side). Document streams and static reads use
+    * `sess` with the sf directory of their query. */
+  private[graft] trait Feed {
+    def sess: SparkSession
+    def events: Dataset[StreamingFeed.RawEvent]
+  }
+
+  private[graft] object Feed {
+    private def over(s: SparkSession, dir: String, glob: String): Feed =
+      new Feed {
+        val sess = s
+        def events = StreamingFeed.eventsStream(s, dir, glob)
+      }
+
+    /** The sf directory's `events.parquet`: the whole feed in one go. */
+    def oneShot(sess: SparkSession, dir: String): Feed =
+      over(sess, dir, "events.parquet")
+
+    /** Every slice published into a restart scaffold's watch directory. */
+    def watched(sess: SparkSession, watch: String): Feed =
+      over(sess, watch, "*.parquet")
+  }
+
   /** Drive a streaming frame to completion once per (session, sfDir,
     * tag) on a [[drainSession]]: parquet sink + checkpoint live in
     * JVM-scoped scratch ([[graft.Scratch.tempDir]]), `Trigger.AvailableNow`
     * plus the trailing no-data batch drain the source AND any
     * watermark-dependent state, and the sink is read back as a batch
-    * frame. Every streaming query shares this one scaffold — the tag
-    * keys the cache and names the scratch dir.
+    * frame. The builder's [[Feed]] reads `events.parquet` of `dir`
+    * ([[Feed.oneShot]]). The tag keys the cache and names the scratch
+    * dir.
     *
     * Memoization lives in [[graft.SessionCache]] (memoized-future shape,
     * weak session keying). The cached value is the sink PATH — a string
@@ -97,10 +125,11 @@ object StreamingQ {
   private def streamOnce(tag: String, spark: SparkSession, dir: String,
       shufflePartitions: Int = DrainShufflePartitions,
       extraConfs: Map[String, String] = Map.empty)(
-      build: SparkSession => DataFrame): DataFrame = {
+      build: Feed => DataFrame): DataFrame = {
     val path = graft.SessionCache.onceStrong(spark, s"stream#$dir#$tag") {
       val tmp = graft.Scratch.tempDir(s"graft-$tag-").toString
-      drainTo(tmp, build(drainSession(spark, shufflePartitions, extraConfs)))
+      drainTo(tmp, build(
+        Feed.oneShot(drainSession(spark, shufflePartitions, extraConfs), dir)))
       s"$tmp/out"
     }
     spark.read.parquet(path)
@@ -120,13 +149,10 @@ object StreamingQ {
     q
   }
 
-  /** The feed ingestion: the events parquet streamed through the
-    * stateful per-game fold (see [[StreamingFeed.actions]]). */
-  private def ingest(spark: SparkSession, dir: String): DataFrame =
-    streamOnce("feed-ingest", spark, dir) { sess =>
-      StreamingFeed.actions(
-        StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")).toDF()
-    }
+  /** The feed ingestion: the events streamed through the stateful
+    * per-game fold (see [[StreamingFeed.actions]]). */
+  private def feedActions(feed: Feed): DataFrame =
+    StreamingFeed.actions(feed.events).toDF()
 
   private def sqlList(xs: Seq[String]): String =
     xs.map(x => s"'$x'").mkString(", ")
@@ -272,7 +298,7 @@ object StreamingQ {
     "q73_stream_ingest",
     feedIngestSql,
     "streaming file-source feed ingestion driven to completion (§2.9)") {
-    (s, dir) => pbpCols(ingest(s, dir))
+    (s, dir) => pbpCols(streamOnce("feed-ingest", s, dir)(feedActions))
   }
 
   /** The two staged feed halves every restart scaffold publishes, built
@@ -313,7 +339,9 @@ object StreamingQ {
     * query connected to the first only through the sink and checkpoint
     * paths. Both incarnations run on one [[drainSession]]. The staging
     * split (a global window over the fixture) is harness work, never
-    * part of the measured streaming plan.
+    * part of the measured streaming plan. The builder's [[Feed]] reads
+    * every parquet file of the scaffold's watch directory
+    * ([[Feed.watched]]), where the two halves are published.
     *
     * `tearSinkCommit = true` simulates the worst crash point of the
     * exactly-once file-sink protocol: after incarnation 1 finishes, the
@@ -331,17 +359,18 @@ object StreamingQ {
       extraConfs: Map[String, String] = Map.empty,
       tearSinkCommit: Boolean = false,
       splitPred: Option[org.apache.spark.sql.Column] = None)(
-      build: (SparkSession, String) => DataFrame): DataFrame = {
+      build: Feed => DataFrame): DataFrame = {
     val path = graft.SessionCache.onceStrong(spark, s"stream#$dir#$tag") {
       import java.nio.file.{Files, Paths}
-      val sess = drainSession(spark, shufflePartitions, extraConfs)
       val tmp = graft.Scratch.tempDir(s"graft-$tag-").toString
       val watch = s"$tmp/watch"
       Files.createDirectories(Paths.get(watch))
+      val feed = Feed.watched(
+        drainSession(spark, shufflePartitions, extraConfs), watch)
       val (slice1, slice2) = stagedHalves(spark, dir, splitPred)
       def publish(src: String, name: String): Unit =
         Files.copy(Paths.get(src), Paths.get(s"$watch/$name.parquet"))
-      def drainOnce(): Unit = drainTo(tmp, build(sess, watch))
+      def drainOnce(): Unit = drainTo(tmp, build(feed))
       publish(slice1, "slice1")
       drainOnce() // incarnation 1 drains the front half, then is GONE
       val torn: Option[java.io.File] =
@@ -369,11 +398,6 @@ object StreamingQ {
     spark.read.parquet(path)
   }
 
-  private def restartIngest(spark: SparkSession, dir: String): DataFrame =
-    streamRestart("feed-restart", spark, dir) { (sess, watch) =>
-      StreamingFeed.actions(StreamingFeed.eventsStream(sess, watch)).toDF()
-    }
-
   /** Checkpoint-restart recovery, promoted from spec to the oracle gate:
     * the feed is drained by TWO query incarnations. The first sees only
     * the front half of the feed (published in (ts, event_id) arrival
@@ -390,16 +414,15 @@ object StreamingQ {
     "q117_stream_restart",
     feedIngestSql,
     "checkpoint restart mid-feed: two query incarnations, one exact output") {
-    (s, dir) => pbpCols(restartIngest(s, dir))
+    (s, dir) => pbpCols(streamRestart("feed-restart", s, dir)(feedActions))
   }
 
   /** The watermarked tumbling-window aggregation: append mode, so only
     * FINALIZED windows (end past the watermark) reach the sink. */
   private def windowedAgg(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    streamOnce("stream-window", spark, dir) { sess =>
-      StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")
-        .toDF()
+    streamOnce("stream-window", spark, dir) { feed =>
+      feed.events.toDF()
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -452,8 +475,8 @@ object StreamingQ {
     * over a documents file-stream. */
   private def dedupStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    streamOnce("stream-dedup", spark, dir) { sess =>
-      StreamingFeed.fileSource(sess, dir, "documents.parquet")
+    streamOnce("stream-dedup", spark, dir) { feed =>
+      StreamingFeed.fileSource(feed.sess, dir, "documents.parquet")
         .select(md5(col("text")).as("content_hash"))
         .dropDuplicates("content_hash")
     }
@@ -484,16 +507,15 @@ object StreamingQ {
     * dimension attributes inside each micro-batch. */
   private def enrichStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    streamOnce("stream-enrich", spark, dir) { sess =>
-      val nation = sess.read.parquet(s"$dir/nation.parquet")
+    streamOnce("stream-enrich", spark, dir) { feed =>
+      val nation = feed.sess.read.parquet(s"$dir/nation.parquet")
         .select(col("n_nationkey").cast("long").as("nkey"),
           col("n_name"), col("n_regionkey"))
-      val region = sess.read.parquet(s"$dir/region.parquet")
+      val region = feed.sess.read.parquet(s"$dir/region.parquet")
         .select(col("r_regionkey").as("n_regionkey"), col("r_name"))
       val dim = nation.join(region, Seq("n_regionkey"))
         .select(col("nkey"), col("n_name"), col("r_name"))
-      StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")
-        .toDF()
+      feed.events.toDF()
         .withColumn("nkey", col("user_id") % 25)
         .join(dim, Seq("nkey"))
         .select(col("event_id"), col("user_id"), col("n_name"), col("r_name"))
@@ -519,15 +541,11 @@ object StreamingQ {
       col("event_id"), col("user_id"), col("n_name"), col("r_name"))
   }
 
-  /** The session-window aggregation: merging-window state, append mode. */
-  /** The watermarked merging-session-window plan against whatever
-    * source directory/glob it is handed — shared by q86 (one-shot) and
-    * q121 (checkpoint restart). */
-  private def sessionWindowPlan(sess: SparkSession, dir: String,
-      glob: String): DataFrame = {
+  /** The watermarked merging-session-window aggregation (append mode),
+    * shared by q86 (one-shot) and q121 (checkpoint restart). */
+  private def sessionWindowPlan(feed: Feed): DataFrame = {
     import org.apache.spark.sql.functions._
-    StreamingFeed.eventsStream(sess, dir, glob = glob)
-      .toDF()
+    feed.events.toDF()
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "1 hour"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
@@ -537,10 +555,6 @@ object StreamingQ {
         unix_micros(col("session_window.end")).as("session_end_us"),
         col("n_events"), col("sv").cast("double").as("sum_value"))
   }
-
-  private def sessionStream(spark: SparkSession, dir: String): DataFrame =
-    streamOnce("stream-session", spark, dir)(
-      sess => sessionWindowPlan(sess, dir, "events.parquet"))
 
   /** Streaming sessionization with the BUILT-IN `session_window` (gap =
     * 1 hour) under the oracle gate — the merging-window stateful operator
@@ -587,7 +601,7 @@ object StreamingQ {
     "q86_stream_sessions",
     sessionOracleSql,
     "streaming session_window aggregation (§2.9 merging-window state)") { (s, dir) =>
-    sessionStream(s, dir).select(
+    streamOnce("stream-session", s, dir)(sessionWindowPlan).select(
       col("user_id"), col("session_start_us"), col("session_end_us"),
       col("n_events"), col("sum_value"))
   }
@@ -607,44 +621,51 @@ object StreamingQ {
     sessionOracleSql,
     "checkpoint restart mid-feed of merging session_window state") {
     (s, dir) =>
-      streamRestart("session-restart", s, dir)(
-        (sess, watch) => sessionWindowPlan(sess, watch, "*.parquet"))
+      streamRestart("session-restart", s, dir)(sessionWindowPlan)
         .select(col("user_id"), col("session_start_us"),
           col("session_end_us"), col("n_events"), col("sum_value"))
   }
 
-  /** The stream-stream interval join: two independent file-source streams
-    * over the events table — purchases on one side, clicks on the other —
-    * joined per user within a two-hour attribution band. */
-  private def joinStream(spark: SparkSession, dir: String): DataFrame = {
+  /** The purchase–click interval join every stream-stream join query
+    * shares (q90 inner, q99 left outer, q100/q118 full outer, q279 left
+    * semi): two independent file-source streams over the events feed —
+    * purchases on one side, clicks on the other, each watermarked 10
+    * minutes — joined per user within a two-hour attribution band
+    * (`p_ts − 2h ≤ c_ts ≤ p_ts`). `how` is the join type. Columns:
+    * p_event_id, user_id, p_value, p_ts from the purchase side,
+    * c_event_id, c_user_id, c_value, c_ts from the click side. */
+  private[graft] def purchaseClickJoin(feed: Feed, how: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    // state-store count sized to the join state, not the CPU count —
-    // see fullJoinStream's rationale (fixed per-(partition, store,
-    // batch) cost dominates at fixture scale); applied via streamOnce's
-    // session clone, never the shared conf
-    streamOnce("stream-join", spark, dir, shufflePartitions = 8) { sess =>
-      val purchases = StreamingFeed
-        .eventsStream(sess, dir, glob = "events.parquet").toDF()
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_event_id"), col("user_id"),
-          col("value").as("p_value"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val clicks = StreamingFeed
-        .eventsStream(sess, dir, glob = "events.parquet").toDF()
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("c_event_id"),
-          col("user_id").as("c_user_id"),
-          col("value").as("c_value"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      purchases.join(clicks,
-        col("user_id") === col("c_user_id") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 2 HOURS") &&
-          col("c_ts") <= col("p_ts"))
-        .select(col("user_id"), col("p_event_id"), col("c_event_id"),
-          unix_micros(col("p_ts")).as("p_ts_us"),
-          unix_micros(col("c_ts")).as("c_ts_us"),
-          col("p_value"), col("c_value"))
-    }
+    val purchases = feed.events.toDF()
+      .filter(col("event_type") === "purchase")
+      .select(col("event_id").as("p_event_id"), col("user_id"),
+        col("value").as("p_value"), col("ts").as("p_ts"))
+      .withWatermark("p_ts", "10 minutes")
+    val clicks = feed.events.toDF()
+      .filter(col("event_type") === "click")
+      .select(col("event_id").as("c_event_id"),
+        col("user_id").as("c_user_id"),
+        col("value").as("c_value"), col("ts").as("c_ts"))
+      .withWatermark("c_ts", "10 minutes")
+    purchases.join(clicks,
+      col("user_id") === col("c_user_id") &&
+        col("c_ts") >= col("p_ts") - expr("INTERVAL 2 HOURS") &&
+        col("c_ts") <= col("p_ts"),
+      how)
+  }
+
+  /** [[purchaseClickJoin]] as the 7-column pair rows q90, q99, q100 and
+    * q118 emit. `user_id` is the purchase's user, or the click's on a
+    * click-only full-outer row (on inner and left-outer rows the two
+    * agree or the click side is null). */
+  private def bandPairs(how: String)(feed: Feed): DataFrame = {
+    import org.apache.spark.sql.functions._
+    purchaseClickJoin(feed, how)
+      .select(coalesce(col("user_id"), col("c_user_id")).as("user_id"),
+        col("p_event_id"), col("c_event_id"),
+        unix_micros(col("p_ts")).as("p_ts_us"),
+        unix_micros(col("c_ts")).as("c_ts_us"),
+        col("p_value"), col("c_value"))
   }
 
   /** Watermarked stream-stream interval join (§2.9's last canonical
@@ -687,7 +708,7 @@ object StreamingQ {
       | AND epoch_us(c.ts) >= epoch_us(p.ts) - 7200000000
       | AND epoch_us(c.ts) <= epoch_us(p.ts)""".stripMargin,
     "watermarked stream-stream interval join (§2.9 attribution band)") { (s, dir) =>
-    joinStream(s, dir).select(
+    streamOnce("stream-join", s, dir)(bandPairs("inner")).select(
       col("user_id"), col("p_event_id"), col("c_event_id"),
       col("p_ts_us"), col("c_ts_us"), col("p_value"), col("c_value"))
   }
@@ -696,8 +717,8 @@ object StreamingQ {
     * values distinct-user estimate via the native mergeable aggregate. */
   private def kmvStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    streamOnce("stream-kmv", spark, dir) { sess =>
-      StreamingFeed.eventsStream(sess, dir, glob = "events.parquet").toDF()
+    streamOnce("stream-kmv", spark, dir) { feed =>
+      feed.events.toDF()
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n_events"),
@@ -753,18 +774,28 @@ object StreamingQ {
       col("bucket_start"), col("n_events"), col("kmv_users"))
   }
 
-  private def hllStream(spark: SparkSession, dir: String): DataFrame = {
+  /** The tumbling-hour HLL register stream shared by q167 (one-shot)
+    * and q184 (checkpoint restart): exact-integer S-sum, zero-register
+    * count and the fixed-order raw estimate off each closed window's
+    * register array. */
+  private def hllFrame(feed: Feed): DataFrame = {
     import org.apache.spark.sql.functions._
-    streamOnce("stream-hll", spark, dir) { sess =>
-      hllDerived(StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")
-        .toDF()
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n_events"),
-          graft.functions.Hll.registers(
-            graft.ops.Text.baseHash(col("user_id").cast("string")), 10)
-            .as("regs")))
-    }
+    feed.events.toDF()
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n_events"),
+        graft.functions.Hll.registers(
+          graft.ops.Text.baseHash(col("user_id").cast("string")), 10)
+          .as("regs"))
+      .select(unix_timestamp(col("window.start")).as("bucket_start"),
+        col("n_events"),
+        expr("cast(size(filter(regs, r -> r = 0)) as bigint)").as("v_zero"),
+        expr("aggregate(regs, cast(0 as bigint)," +
+          " (acc, r) -> acc + shiftleft(cast(1 as bigint), 51 - r))")
+          .as("s_sum"),
+        ((lit(0.7213) / (lit(1.0) + lit(1.079) / lit(1024.0)))
+          * (lit(1048576.0) * lit(2.251799813685248e15))
+          / col("s_sum")).as("hll_raw"))
   }
 
   /** Shared by q167 (one-shot) and q184 (checkpoint restart): DuckDB
@@ -824,37 +855,9 @@ object StreamingQ {
     hllOracleSql,
     "streaming tumbling-window HLL registers + raw estimate (native mergeable agg)") {
     (s, dir) =>
-      hllStream(s, dir).select(col("bucket_start"), col("n_events"),
-        col("v_zero"), col("s_sum"), col("hll_raw"))
-  }
-
-  /** The post-agg projection both the one-shot (q167) and restarted
-    * (q184) HLL streams share: exact-integer S-sum, zero-register count
-    * and the fixed-order raw estimate off the register array. */
-  private def hllDerived(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    df.select(unix_timestamp(col("window.start")).as("bucket_start"),
-      col("n_events"),
-      expr("cast(size(filter(regs, r -> r = 0)) as bigint)").as("v_zero"),
-      expr("aggregate(regs, cast(0 as bigint)," +
-        " (acc, r) -> acc + shiftleft(cast(1 as bigint), 51 - r))")
-        .as("s_sum"),
-      ((lit(0.7213) / (lit(1.0) + lit(1.079) / lit(1024.0)))
-        * (lit(1048576.0) * lit(2.251799813685248e15))
-        / col("s_sum")).as("hll_raw"))
-  }
-
-  private def hllRestartStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    streamRestart("hll-restart", spark, dir) { (sess, watch) =>
-      hllDerived(StreamingFeed.eventsStream(sess, watch).toDF()
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n_events"),
-          graft.functions.Hll.registers(
-            graft.ops.Text.baseHash(col("user_id").cast("string")), 10)
-            .as("regs")))
-    }
+      streamOnce("stream-hll", s, dir)(hllFrame)
+        .select(col("bucket_start"), col("n_events"),
+          col("v_zero"), col("s_sum"), col("hll_raw"))
   }
 
   /** Checkpoint restart of the HLL register buffer — closing the
@@ -874,40 +877,9 @@ object StreamingQ {
     hllOracleSql,
     "checkpoint restart mid-feed of HLL register sketch state") {
     (s, dir) =>
-      hllRestartStream(s, dir).select(col("bucket_start"), col("n_events"),
-        col("v_zero"), col("s_sum"), col("hll_raw"))
-  }
-
-  /** q90's join with LEFT OUTER semantics: purchases with no click in
-    * the band survive as null-extended rows. */
-  private def outerJoinStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    // state-store count sized to the join state — see fullJoinStream;
-    // applied via streamOnce's session clone, never the shared conf
-    streamOnce("stream-outer-join", spark, dir, shufflePartitions = 8) { sess =>
-      val purchases = StreamingFeed
-        .eventsStream(sess, dir, glob = "events.parquet").toDF()
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_event_id"), col("user_id"),
-          col("value").as("p_value"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val clicks = StreamingFeed
-        .eventsStream(sess, dir, glob = "events.parquet").toDF()
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("c_event_id"),
-          col("user_id").as("c_user_id"),
-          col("value").as("c_value"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      purchases.join(clicks,
-        col("user_id") === col("c_user_id") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 2 HOURS") &&
-          col("c_ts") <= col("p_ts"),
-        "leftOuter")
-        .select(col("user_id"), col("p_event_id"), col("c_event_id"),
-          unix_micros(col("p_ts")).as("p_ts_us"),
-          unix_micros(col("c_ts")).as("c_ts_us"),
-          col("p_value"), col("c_value"))
-    }
+      streamRestart("hll-restart", s, dir)(hllFrame)
+        .select(col("bucket_start"), col("n_events"),
+          col("v_zero"), col("s_sum"), col("hll_raw"))
   }
 
   /** Watermarked stream-stream LEFT OUTER interval join — the eviction-
@@ -964,7 +936,7 @@ object StreamingQ {
       |          AND epoch_us(c.ts) >= epoch_us(p.ts) - 7200000000
       |          AND epoch_us(c.ts) <= epoch_us(p.ts))""".stripMargin,
     "watermarked stream-stream LEFT OUTER interval join (eviction-time nulls)") { (s, dir) =>
-    outerJoinStream(s, dir).select(
+    streamOnce("stream-outer-join", s, dir)(bandPairs("leftOuter")).select(
       col("user_id"), col("p_event_id"), col("c_event_id"),
       col("p_ts_us"), col("c_ts_us"), col("p_value"), col("c_value"))
   }
@@ -984,38 +956,7 @@ object StreamingQ {
     * checkpointing is the configuration that survives state ≫ heap at
     * 100 TB, and pinning it here keeps both bundled providers exercised
     * (every other streaming query uses the default HDFS-backed store). */
-  /** The two-sided watermarked FULL OUTER interval join plan, built
-    * against whatever source directory/glob it is handed — shared by
-    * q100 (one-shot drain) and q118 (checkpoint restart). */
-  private def fullOuterJoinPlan(sess: SparkSession, dir: String,
-      glob: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val purchases = StreamingFeed
-      .eventsStream(sess, dir, glob = glob).toDF()
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_event_id"), col("user_id"),
-        col("value").as("p_value"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    val clicks = StreamingFeed
-      .eventsStream(sess, dir, glob = glob).toDF()
-      .filter(col("event_type") === "click")
-      .select(col("event_id").as("c_event_id"),
-        col("user_id").as("c_user_id"),
-        col("value").as("c_value"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    purchases.join(clicks,
-      col("user_id") === col("c_user_id") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 2 HOURS") &&
-        col("c_ts") <= col("p_ts"),
-      "fullOuter")
-      .select(coalesce(col("user_id"), col("c_user_id")).as("user_id"),
-        col("p_event_id"), col("c_event_id"),
-        unix_micros(col("p_ts")).as("p_ts_us"),
-        unix_micros(col("c_ts")).as("c_ts_us"),
-        col("p_value"), col("c_value"))
-  }
-
-  private val RocksDbConf = Map(
+  private[graft] val RocksDbConf = Map(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     // r12: commit uploads the per-batch changelog instead of a full
@@ -1025,15 +966,6 @@ object StreamingQ {
     // exercises end to end
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
       "true")
-
-  private def fullJoinStream(spark: SparkSession, dir: String): DataFrame = {
-    // state-store count sized to the state, not the CPU count (measured
-    // at sf0.1: 32 partitions → 24 s fixed cost, 8 → ~1/4 of that);
-    // both overrides ride streamOnce's session clone, never shared conf
-    streamOnce("stream-full-join", spark, dir, shufflePartitions = 4,
-      extraConfs = RocksDbConf)(
-      sess => fullOuterJoinPlan(sess, dir, "events.parquet"))
-  }
 
   /** Watermarked stream-stream FULL OUTER interval join — both eviction
     * directions under one gate. Purchases evict (and null-emit if
@@ -1098,7 +1030,10 @@ object StreamingQ {
     "q100_stream_full_join",
     fullJoinOracleSql,
     "watermarked stream-stream FULL OUTER interval join (both eviction offsets)") { (s, dir) =>
-    fullJoinStream(s, dir).select(
+    // state-store count sized to the state, not the CPU count (measured
+    // at sf0.1: 32 partitions → 24 s fixed cost, 8 → ~1/4 of that)
+    streamOnce("stream-full-join", s, dir, shufflePartitions = 4,
+      extraConfs = RocksDbConf)(bandPairs("fullOuter")).select(
       col("user_id"), col("p_event_id"), col("c_event_id"),
       col("p_ts_us"), col("c_ts_us"), col("p_value"), col("c_value"))
   }
@@ -1124,8 +1059,7 @@ object StreamingQ {
     "checkpoint restart mid-feed of the RocksDB full-outer join state") {
     (s, dir) =>
       streamRestart("full-join-restart", s, dir, shufflePartitions = 4,
-        extraConfs = RocksDbConf)(
-        (sess, watch) => fullOuterJoinPlan(sess, watch, "*.parquet"))
+        extraConfs = RocksDbConf)(bandPairs("fullOuter"))
         .select(col("user_id"), col("p_event_id"), col("c_event_id"),
           col("p_ts_us"), col("c_ts_us"), col("p_value"), col("c_value"))
   }
@@ -1167,11 +1101,8 @@ object StreamingQ {
     "streaming MinHash-signature near-dup collapse at ingest (dedup family x §2.9)") { (s, dir) =>
     import org.apache.spark.sql.functions._
     import graft.ops.Text
-    // state is a few thousand signature keys: 8 state stores, same
-    // right-sizing rationale as the join family (fixed per-store cost
-    // dominates at fixture scale); rides streamOnce's session clone
-    streamOnce("stream-sig-dedup", s, dir, shufflePartitions = 8) { sess =>
-      StreamingFeed.fileSource(sess, dir, "documents.parquet")
+    streamOnce("stream-sig-dedup", s, dir) { feed =>
+      StreamingFeed.fileSource(feed.sess, dir, "documents.parquet")
         .select(col("doc_id"), Text.tokens(col("text")).as("t"))
         .filter(size(col("t")) >= 3)
         .select(Text.signatureKey(col("t"), 3, 12).as("sig_key"))
@@ -1231,8 +1162,8 @@ object StreamingQ {
       "streaming per-window KMV-values sketches + batch overlap algebra (q102 x q96)") {
       (s, dir) =>
         import org.apache.spark.sql.functions._
-        val sketches = streamOnce("stream-kmv-overlap", s, dir) { sess =>
-          StreamingFeed.eventsStream(sess, dir, glob = "events.parquet").toDF()
+        val sketches = streamOnce("stream-kmv-overlap", s, dir) { feed =>
+          feed.events.toDF()
             .withWatermark("ts", "10 minutes")
             .groupBy(window(col("ts"), "1 day"), col("event_type"))
             .agg(graft.functions.KmvValues.values(
@@ -1263,18 +1194,17 @@ object StreamingQ {
   }
 
   /** Tumbling-hour CMS sketches folded incrementally by the stream:
-    * per closed window, one depth-4 × width-256 counter matrix. */
-  private def cmsStream(spark: SparkSession, dir: String): DataFrame = {
+    * per closed window, one depth-4 × width-256 counter matrix. Shared
+    * by q112 (one-shot) and q127 (checkpoint restart). */
+  private def cmsFrame(feed: Feed): DataFrame = {
     import org.apache.spark.sql.functions._
-    streamOnce("stream-cms", spark, dir) { sess =>
-      StreamingFeed.eventsStream(sess, dir, glob = "events.parquet").toDF()
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n_events"),
-          graft.functions.CmsCounts.counts(col("user_id"), 4, 256).as("cms"))
-        .select(unix_timestamp(col("window.start")).as("bucket_start"),
-          col("n_events"), col("cms"))
-    }
+    feed.events.toDF()
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n_events"),
+        graft.functions.CmsCounts.counts(col("user_id"), 4, 256).as("cms"))
+      .select(unix_timestamp(col("window.start")).as("bucket_start"),
+        col("n_events"), col("cms"))
   }
 
   /** Streaming per-window frequency sketch: the Count-Min family (q108)
@@ -1344,13 +1274,13 @@ object StreamingQ {
     "q112_stream_cms",
     cmsOracleSql,
     "streaming tumbling-window Count-Min sketch, probed offline per key") {
-    (s, dir) => cmsProbe(s, dir, cmsStream(s, dir))
+    (s, dir) => cmsProbe(s, dir, streamOnce("stream-cms", s, dir)(cmsFrame))
   }
 
   private def mgStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    streamOnce("stream-mg", spark, dir) { sess =>
-      StreamingFeed.eventsStream(sess, dir, glob = "events.parquet").toDF()
+    streamOnce("stream-mg", spark, dir) { feed =>
+      feed.events.toDF()
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n_window"),
@@ -1415,19 +1345,6 @@ object StreamingQ {
           col("n_window"))
   }
 
-  private def cmsRestartStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    streamRestart("cms-restart", spark, dir) { (sess, watch) =>
-      StreamingFeed.eventsStream(sess, watch).toDF()
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n_events"),
-          graft.functions.CmsCounts.counts(col("user_id"), 4, 256).as("cms"))
-        .select(unix_timestamp(col("window.start")).as("bucket_start"),
-          col("n_events"), col("cms"))
-    }
-  }
-
   /** Checkpoint restart of SKETCH state — the fourth and last state
     * kind under the restart gate (q117: keyed typed fold, q118: RocksDB
     * symmetric join, q121: merging session windows, THIS: a
@@ -1444,7 +1361,8 @@ object StreamingQ {
     "q127_stream_cms_restart",
     cmsOracleSql,
     "checkpoint restart mid-feed of TypedImperativeAggregate sketch state") {
-    (s, dir) => cmsProbe(s, dir, cmsRestartStream(s, dir))
+    (s, dir) =>
+      cmsProbe(s, dir, streamRestart("cms-restart", s, dir)(cmsFrame))
   }
 
   /** Ingest-time corpus gate — the streaming twin of q116's front half,
@@ -1513,9 +1431,8 @@ object StreamingQ {
     (s, dir) =>
       import org.apache.spark.sql.functions._
       import graft.ops.Text
-      val admitted = streamOnce("stream-ingest-gate", s, dir,
-        shufflePartitions = 8) { sess =>
-        StreamingFeed.fileSource(sess, dir, "documents.parquet")
+      val admitted = streamOnce("stream-ingest-gate", s, dir) { feed =>
+        StreamingFeed.fileSource(feed.sess, dir, "documents.parquet")
           .select(col("text"), Text.tokens(col("text")).as("toks"),
             length(regexp_replace(col("text"), "[^.,!?;:]", "")).as("np"))
           .filter(size(col("toks")) >= 5 &&
@@ -1547,12 +1464,10 @@ object StreamingQ {
   }
 
   /** The streaming anomaly scorer: custom ring-buffer state on
-    * flatMapGroupsWithState (see [[graft.streaming.StreamingAnomaly]]). */
-  private def anomalyStream(spark: SparkSession, dir: String): DataFrame =
-    streamOnce("stream-anomaly", spark, dir) { sess =>
-      graft.streaming.StreamingAnomaly(
-        StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")).toDF()
-    }
+    * flatMapGroupsWithState (see [[graft.streaming.StreamingAnomaly]]).
+    * Shared by q145 (one-shot) and q159 (checkpoint restart). */
+  private def anomalyFrame(feed: Feed): DataFrame =
+    graft.streaming.StreamingAnomaly(feed.events).toDF()
 
   /** Streaming trailing-window z-score anomaly detection — q133's
     * incremental twin on CUSTOM state (where q80 is the built-in windowed
@@ -1595,18 +1510,16 @@ object StreamingQ {
       |      (SELECT ((MAX(epoch_us(ts)) // 1000) - 600000) * 1000 FROM events)""".stripMargin,
     "streaming z-score anomaly detection on ring-buffer state (§2.9 x q133)") {
     (s, dir) =>
-      anomalyStream(s, dir).select(
+      streamOnce("stream-anomaly", s, dir)(anomalyFrame).select(
         col("bucket_start"), col("event_type"), col("n"),
         col("mean"), col("std"), col("z"), col("is_anomaly"))
   }
 
   /** The per-key infinite-history EWMA fold (custom buffered-fold state,
-    * see [[graft.streaming.StreamingEwma]]). */
-  private def ewmaStream(spark: SparkSession, dir: String): DataFrame =
-    streamOnce("stream-ewma", spark, dir) { sess =>
-      graft.streaming.StreamingEwma(
-        StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")).toDF()
-    }
+    * see [[graft.streaming.StreamingEwma]]). Shared by q188 (one-shot)
+    * and q191 (checkpoint restart). */
+  private def ewmaFrame(feed: Feed): DataFrame =
+    graft.streaming.StreamingEwma(feed.events).toDF()
 
   /** Streaming infinite-history EWMA — the stateful twin of the batch
     * q187, and the inverse trade: the batch spelling truncates at 32
@@ -1641,15 +1554,9 @@ object StreamingQ {
       |      (SELECT (MAX(epoch_us(ts)) // 1000) - 600000 FROM events)""".stripMargin,
     "streaming exact infinite-history EWMA on buffered-fold state (q187's twin)") {
     (s, dir) =>
-      ewmaStream(s, dir).select(
+      streamOnce("stream-ewma", s, dir)(ewmaFrame).select(
         col("user_id"), col("event_id"), col("rn"), col("value"), col("ewma"))
   }
-
-  private def ewmaRestartStream(spark: SparkSession, dir: String): DataFrame =
-    streamRestart("ewma-restart", spark, dir) { (sess, watch) =>
-      graft.streaming.StreamingEwma(
-        StreamingFeed.eventsStream(sess, watch)).toDF()
-    }
 
   /** Checkpoint restart of the buffered-fold EWMA state — the sixth
     * state shape under the restart gate, and the one the others don't
@@ -1665,7 +1572,7 @@ object StreamingQ {
     q188StreamEwma.oracle.get,
     "checkpoint restart mid-feed of the buffered-fold EWMA state") {
     (s, dir) =>
-      ewmaRestartStream(s, dir).select(
+      streamRestart("ewma-restart", s, dir)(ewmaFrame).select(
         col("user_id"), col("event_id"), col("rn"), col("value"), col("ewma"))
   }
 
@@ -1683,26 +1590,23 @@ object StreamingQ {
     q145StreamAnomaly.oracle.get,
     "checkpoint restart of ring-buffer + armed-timeout anomaly state") {
     (s, dir) =>
-      streamRestart("anomaly-restart", s, dir) { (sess, watch) =>
-        graft.streaming.StreamingAnomaly(
-          StreamingFeed.eventsStream(sess, watch)).toDF()
-      }.select(col("bucket_start"), col("event_type"), col("n"),
-        col("mean"), col("std"), col("z"), col("is_anomaly"))
+      streamRestart("anomaly-restart", s, dir)(anomalyFrame)
+        .select(col("bucket_start"), col("event_type"), col("n"),
+          col("mean"), col("std"), col("z"), col("is_anomaly"))
   }
 
   /** The stream-static PIT enrichment plan: purchases stream against the
     * batch-built SCD2 dimension with the validity range as a residual. */
   private def pitEnrichStream(spark: SparkSession, dir: String): DataFrame =
-    streamOnce("stream-pit", spark, dir) { sess =>
+    streamOnce("stream-pit", spark, dir) { feed =>
       import org.apache.spark.sql.functions._
       // the dimension is q162's SCD2 output, built batch-side once at
       // stream start (the standard stream-static shape: the static plan
       // re-executes per micro-batch; AvailableNow here runs one batch)
-      val dim = Relational.q162Scd2.run(sess, dir)
+      val dim = Relational.q162Scd2.run(feed.sess, dir)
         .select(col("user_id").as("d_user"), col("state"),
           col("valid_from_us"), col("valid_to_us"), col("version"))
-      StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")
-        .toDF()
+      feed.events.toDF()
         .filter(col("event_type") === "purchase")
         .withColumn("tus", unix_micros(col("ts")))
         .join(dim,
@@ -1819,14 +1723,17 @@ object StreamingQ {
       |  WHERE p.user_id = c.user_id
       |    AND c.ts_us >= p.ts_us - 7200000000 AND c.ts_us <= p.ts_us)""".stripMargin
 
+  /** The capped join ([[graft.streaming.StreamingCappedJoin]]), shared
+    * by q201 (one-shot) and q213 (checkpoint restart). */
+  private def cappedJoinFrame(feed: Feed): DataFrame =
+    graft.streaming.StreamingCappedJoin(feed.events)
+
   val q201CappedStreamJoin: Q = Q.sql(
     "q201_capped_stream_join",
     cappedJoinOracle,
     "per-(user,hour)-capped stream-stream interval join: skew-safe q100") {
     (s, dir) =>
-      streamOnce("stream-capped-join", s, dir, shufflePartitions = 8)(
-        sess => graft.streaming.StreamingCappedJoin(
-          StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")))
+      streamOnce("stream-capped-join", s, dir)(cappedJoinFrame)
         .select(col("user_id"), col("p_event_id"), col("c_event_id"),
           col("p_ts_us"), col("c_ts_us"), col("p_value"), col("c_value"))
   }
@@ -1847,11 +1754,9 @@ object StreamingQ {
     cappedJoinOracle,
     "q201's capped-join state recovered across a mid-feed restart") {
     (s, dir) =>
-      streamRestart("capped-join-restart", s, dir, shufflePartitions = 8) {
-        (sess, watch) => graft.streaming.StreamingCappedJoin(
-          StreamingFeed.eventsStream(sess, watch))
-      }.select(col("user_id"), col("p_event_id"), col("c_event_id"),
-        col("p_ts_us"), col("c_ts_us"), col("p_value"), col("c_value"))
+      streamRestart("capped-join-restart", s, dir)(cappedJoinFrame)
+        .select(col("user_id"), col("p_event_id"), col("c_event_id"),
+          col("p_ts_us"), col("c_ts_us"), col("p_value"), col("c_value"))
   }
 
   /** Exactly-once FILE-SINK semantics under restart — the sink-side
@@ -1879,8 +1784,8 @@ object StreamingQ {
     "exactly-once file sink: torn commit forces a replay; manifest dedupes") {
     (s, dir) =>
       streamRestart("sink-exactly-once", s, dir, tearSinkCommit = true) {
-        (sess, watch) =>
-          StreamingFeed.eventsStream(sess, watch).toDF()
+        feed =>
+          feed.events.toDF()
             .filter(col("value") >= 20.0)
             .select(col("event_id"), col("user_id"), col("event_type"),
               col("value"), (col("value") * 1.5).as("boosted"),
@@ -1935,8 +1840,8 @@ object StreamingQ {
     "streaming tumbling-window deterministic bottom-k quantiles (mergeable sample)") {
     (s, dir) =>
       import org.apache.spark.sql.functions._
-      streamOnce("stream-bottomk", s, dir) { sess =>
-        val agg = StreamingFeed.eventsStream(sess, dir, glob = "events.parquet").toDF()
+      streamOnce("stream-bottomk", s, dir) { feed =>
+        val agg = feed.events.toDF()
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("n_events"),
@@ -1995,10 +1900,10 @@ object StreamingQ {
     "per-hour streaming reliability-decile counters under the watermark") {
     (s, dir) =>
       import org.apache.spark.sql.functions._
-      streamOnce("stream-calibration", s, dir) { sess =>
+      streamOnce("stream-calibration", s, dir) { feed =>
         val vc = floor(col("value") * 100).cast("long")
         val pm = floor(lit(1000) * vc / (vc + 5000)).cast("long")
-        StreamingFeed.eventsStream(sess, dir, glob = "events.parquet").toDF()
+        feed.events.toDF()
           .where(col("event_type").isin("purchase", "click") &&
             col("value").isNotNull)
           .withWatermark("ts", "10 minutes")
@@ -2077,9 +1982,8 @@ object StreamingQ {
     streamBootstrapOracle,
     "per-hour streaming Poisson-bootstrap replicas of mean purchase value") {
     (s, dir) =>
-      explodeBootstrap(streamOnce("stream-bootstrap", s, dir) { sess =>
-        bootstrapStreamFrame(sess, dir, glob = "events.parquet")
-      })
+      explodeBootstrap(
+        streamOnce("stream-bootstrap", s, dir)(bootstrapStreamFrame))
   }
 
   // ---------------------------------------------------------------- q252
@@ -2130,8 +2034,8 @@ object StreamingQ {
     "per-window event-type counts vs the reference: live chi-square terms") {
     (s, dir) =>
       import org.apache.spark.sql.functions._
-      val counts = streamOnce("stream-drift", s, dir) { sess =>
-        StreamingFeed.eventsStream(sess, dir, glob = "events.parquet").toDF()
+      val counts = streamOnce("stream-drift", s, dir) { feed =>
+        feed.events.toDF()
           .withWatermark("ts", "10 minutes")
           .groupBy(window(col("ts"), "6 hours"), col("event_type"))
           .agg(count(lit(1)).as("o"))
@@ -2156,10 +2060,9 @@ object StreamingQ {
   }
 
   // ---------------------------------------------------------------- q255
-  /** q245's streaming frame, parameterized over the scaffold (one-shot
-    * vs two-incarnation) so the restart gate runs the IDENTICAL plan. */
-  private def bootstrapStreamFrame(sess: SparkSession, src: String,
-      glob: String = "*.parquet"): DataFrame = {
+  /** q245's streaming frame, shared with the restart gate q255 so both
+    * run the IDENTICAL plan. */
+  private def bootstrapStreamFrame(feed: Feed): DataFrame = {
     import org.apache.spark.sql.functions._
     def w(b: Int) = {
       val h = graft.ops.Text.baseHash(
@@ -2170,7 +2073,7 @@ object StreamingQ {
     val aggs = (0 until StreamBootstrapReplicas).flatMap { b =>
       Seq(sum(w(b)).as(s"n_$b"), sum(w(b) * col("cents")).as(s"s_$b"))
     }
-    StreamingFeed.eventsStream(sess, src, glob).toDF()
+    feed.events.toDF()
       .where(col("event_type") === "purchase" && col("value").isNotNull)
       .withWatermark("ts", "10 minutes")
       .select(col("ts"), col("event_id"),
@@ -2212,8 +2115,7 @@ object StreamingQ {
     "checkpoint restart mid-feed of the 16-accumulator bootstrap state") {
     (s, dir) =>
       explodeBootstrap(
-        streamRestart("bootstrap-restart", s, dir)(
-          (sess, watch) => bootstrapStreamFrame(sess, watch)))
+        streamRestart("bootstrap-restart", s, dir)(bootstrapStreamFrame))
   }
 
   // ---------------------------------------------------------------- q263
@@ -2258,8 +2160,8 @@ object StreamingQ {
       import org.apache.spark.sql.functions._
       streamRestart("late-drop", s, dir,
         splitPred = Some(pmod(col("user_id"), lit(2)) === 0)) {
-        (sess, watch) =>
-          StreamingFeed.eventsStream(sess, watch).toDF()
+        feed =>
+          feed.events.toDF()
             .withWatermark("ts", "10 minutes")
             .groupBy(window(col("ts"), "1 hour"))
             .agg(count(lit(1)).as("n_events"))
@@ -2267,6 +2169,11 @@ object StreamingQ {
               col("n_events").cast("long").as("n_events"))
       }
   }
+
+  /** The token-bucket admission fold, shared by q269 (one-shot) and
+    * q270 (checkpoint restart). */
+  private def tokenBucketFrame(feed: Feed): DataFrame =
+    graft.streaming.StreamingTokenBucket(feed.events).toDF()
 
   // ---------------------------------------------------------------- q269
   /** Streaming token-bucket rate limiting (see
@@ -2309,11 +2216,9 @@ object StreamingQ {
       .stripMargin,
     "per-user token-bucket admission decisions on exact integer state") {
     (s, dir) =>
-      streamOnce("stream-token-bucket", s, dir) { sess =>
-        graft.streaming.StreamingTokenBucket(
-          StreamingFeed.eventsStream(sess, dir, glob = "events.parquet")).toDF()
-      }.select(col("user_id"), col("event_id"), col("rn"), col("allowed"),
-        col("tokens_after"))
+      streamOnce("stream-token-bucket", s, dir)(tokenBucketFrame)
+        .select(col("user_id"), col("event_id"), col("rn"), col("allowed"),
+          col("tokens_after"))
   }
 
   // ---------------------------------------------------------------- q270
@@ -2332,11 +2237,9 @@ object StreamingQ {
     q269TokenBucket.oracle.get,
     "checkpoint restart mid-feed of the token-bucket admission state") {
     (s, dir) =>
-      streamRestart("token-bucket-restart", s, dir) { (sess, watch) =>
-        graft.streaming.StreamingTokenBucket(
-          StreamingFeed.eventsStream(sess, watch)).toDF()
-      }.select(col("user_id"), col("event_id"), col("rn"), col("allowed"),
-        col("tokens_after"))
+      streamRestart("token-bucket-restart", s, dir)(tokenBucketFrame)
+        .select(col("user_id"), col("event_id"), col("rn"), col("allowed"),
+          col("tokens_after"))
   }
 
   /** foreachBatch invocation ledger for [[q282MergeSinkRestart]] — the
@@ -2364,11 +2267,11 @@ object StreamingQ {
     import org.apache.spark.sql.functions._
     val path = graft.SessionCache.onceStrong(spark, s"stream#$dir#merge-sink") {
       import java.nio.file.{Files, Paths}
-      val sess = drainSession(spark)
       val tmp = graft.Scratch.tempDir("graft-merge-sink-").toString
       val watch = s"$tmp/watch"
       val tableDir = s"$tmp/table"
       Files.createDirectories(Paths.get(watch))
+      val feed = Feed.watched(drainSession(spark), watch)
       val inv = mergeSinkInvocations.computeIfAbsent(tableDir,
         _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
       val (slice1, slice2) = stagedHalves(spark, dir, None)
@@ -2376,7 +2279,7 @@ object StreamingQ {
         Files.copy(Paths.get(src), Paths.get(s"$watch/$name.parquet"))
       def drain(tearAfterSinkWrite: Boolean): Unit = {
         @volatile var torn = false
-        val agg = StreamingFeed.eventsStream(sess, watch).toDF()
+        val agg = feed.events.toDF()
           .filter(col("event_type") === "purchase")
           .groupBy(col("user_id"))
           .agg(count(lit(1)).cast("long").as("n_purchases"),
@@ -2476,12 +2379,8 @@ object StreamingQ {
     * `≤ p_ts` can still arrive), so unlike q279 the oracle carries the
     * single-feed watermark cutoff explicitly — the trailing 10 min of
     * purchases are honestly undecided when the stream ends. */
-  private def semiBucketStream(spark: SparkSession, dir: String): DataFrame =
-    streamOnce("stream-semi-buckets", spark, dir) { sess =>
-      graft.streaming.StreamingSemiBuckets(
-        StreamingFeed.eventsStream(sess, dir, glob = "events.parquet"))
-        .toDF()
-    }
+  private def semiBucketsFrame(feed: Feed): DataFrame =
+    graft.streaming.StreamingSemiBuckets(feed.events).toDF()
 
   val q288SemiBuckets: Q = Q.sql(
     "q288_semi_buckets",
@@ -2501,8 +2400,9 @@ object StreamingQ {
       |       FROM events WHERE event_type IN ('purchase', 'click'))""".stripMargin,
     "exact interval semi join on bucket envelopes: skew-safe by state shape") {
     (s, dir) =>
-      semiBucketStream(s, dir).select(col("user_id"), col("p_event_id"),
-        col("p_ts_us"), col("p_value"))
+      streamOnce("stream-semi-buckets", s, dir)(semiBucketsFrame)
+        .select(col("user_id"), col("p_event_id"), col("p_ts_us"),
+          col("p_value"))
   }
 
   // ---------------------------------------------------------------- q289
@@ -2516,32 +2416,14 @@ object StreamingQ {
     * q117's two-incarnation scaffold: the feed is cut at its ranked
     * midpoint, incarnation 1 drains the front half and dies,
     * incarnation 2 resumes envelopes + buffer from the checkpoint. */
-  private def semiBucketsRestart(spark: SparkSession, dir: String): DataFrame =
-    streamRestart("semi-buckets-restart", spark, dir) { (sess, watch) =>
-      graft.streaming.StreamingSemiBuckets(
-        StreamingFeed.eventsStream(sess, watch)).toDF()
-    }
-
   val q289SemiRestart: Q = Q.sql(
     "q289_semi_restart",
-    """SELECT CAST(p.user_id AS BIGINT) AS user_id,
-      |  CAST(p.event_id AS BIGINT) AS p_event_id,
-      |  CAST(epoch_us(p.ts) AS BIGINT) AS p_ts_us,
-      |  p.value AS p_value
-      |FROM events p
-      |WHERE p.event_type = 'purchase'
-      |  AND EXISTS (SELECT 1 FROM events c
-      |    WHERE c.event_type = 'click'
-      |      AND c.user_id = p.user_id
-      |      AND epoch_us(c.ts) >= epoch_us(p.ts) - 7200000000
-      |      AND epoch_us(c.ts) <= epoch_us(p.ts))
-      |  AND (epoch_us(p.ts) // 1000) <
-      |      (SELECT (MAX(epoch_us(ts)) // 1000) - 600000
-      |       FROM events WHERE event_type IN ('purchase', 'click'))""".stripMargin,
+    q288SemiBuckets.oracle.get,
     "checkpoint restart mid-feed of the bucket-envelope semi join state") {
     (s, dir) =>
-      semiBucketsRestart(s, dir).select(col("user_id"), col("p_event_id"),
-        col("p_ts_us"), col("p_value"))
+      streamRestart("semi-buckets-restart", s, dir)(semiBucketsFrame)
+        .select(col("user_id"), col("p_event_id"), col("p_ts_us"),
+          col("p_value"))
   }
 
   // ---------------------------------------------------------------- q279
@@ -2573,31 +2455,11 @@ object StreamingQ {
     * despite linear output. A user copying operators copies q288
     * first; copy this one only for unskewed corpora, or with q201's
     * per-(user, hour) cap in front. */
-  private def semiJoinStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    streamOnce("stream-semi-join", spark, dir, shufflePartitions = 8) { sess =>
-      val purchases = StreamingFeed
-        .eventsStream(sess, dir, glob = "events.parquet").toDF()
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_event_id"), col("user_id"),
-          col("value").as("p_value"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "10 minutes")
-      val clicks = StreamingFeed
-        .eventsStream(sess, dir, glob = "events.parquet").toDF()
-        .filter(col("event_type") === "click")
-        .select(col("event_id").as("c_event_id"),
-          col("user_id").as("c_user_id"),
-          col("ts").as("c_ts"))
-        .withWatermark("c_ts", "10 minutes")
-      purchases.join(clicks,
-        col("user_id") === col("c_user_id") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 2 HOURS") &&
-          col("c_ts") <= col("p_ts"),
-        "leftSemi")
-        .select(col("user_id"), col("p_event_id"),
-          unix_micros(col("p_ts")).as("p_ts_us"), col("p_value"))
-    }
-  }
+  private[graft] def semiJoinFrame(feed: Feed): DataFrame =
+    purchaseClickJoin(feed, "leftSemi")
+      .select(col("user_id"), col("p_event_id"),
+        org.apache.spark.sql.functions.unix_micros(col("p_ts")).as("p_ts_us"),
+        col("p_value"))
 
   val q279StreamSemiJoin: Q = Q.sql(
     "q279_stream_semi_join",
@@ -2614,8 +2476,9 @@ object StreamingQ {
       |      AND epoch_us(c.ts) <= epoch_us(p.ts))""".stripMargin,
     "watermarked stream-stream LEFT SEMI interval join (exists-once)") {
     (s, dir) =>
-      semiJoinStream(s, dir).select(col("user_id"), col("p_event_id"),
-        col("p_ts_us"), col("p_value"))
+      streamOnce("stream-semi-join", s, dir)(semiJoinFrame)
+        .select(col("user_id"), col("p_event_id"), col("p_ts_us"),
+          col("p_value"))
   }
 
   val all: Seq[Q] = Seq(

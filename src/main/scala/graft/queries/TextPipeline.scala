@@ -1574,11 +1574,12 @@ object TextPipeline {
     * substitution is the documented price of the cross-engine gate.
     *
     * Scale shape: the "trained model" is the 1024-row bucket-ratio
-    * frame — built by two partial-agg groupBys over token buckets and a
-    * 1-row totals broadcast, then itself BROADCAST against the token
-    * stream (model state never touches the driver). Scoring is one
-    * per-doc partial-agg groupBy. At 100 TB the model is still 1024
-    * rows: the corpus passes stay embarrassingly parallel. */
+    * frame — built by one partial-agg groupBy over token buckets that
+    * counts source and target together, with the totals as global
+    * window sums over those ≤ 1024 rows — then itself BROADCAST
+    * against the token stream (model state never touches the driver).
+    * Scoring is one per-doc partial-agg groupBy. At 100 TB the model is
+    * still 1024 rows: the corpus passes stay embarrassingly parallel. */
   val q110ImportanceScore: Q = Q.sql(
     "q110_importance_score",
     """WITH tk AS (
@@ -1617,16 +1618,16 @@ object TextPipeline {
         .filter(length(col("t")) > 0)
         .select(col("doc_id"), col("lang"),
           (Text.baseHash(lower(col("t"))) % 1024).as("f"))
-      val src = toks.groupBy("f").agg(count(lit(1)).as("cnt_s"))
-      val tgt = toks.filter(col("lang") === "en")
-        .groupBy("f").agg(count(lit(1)).as("cnt_t"))
-      val tot = toks.agg(count(lit(1)).as("n_s"),
-        count(when(col("lang") === "en", lit(1))).as("n_t"))
-      val ratio = src.join(tgt, Seq("f"), "left")
-        .crossJoin(broadcast(tot))
+      // one corpus pass counts both distributions per bucket; the
+      // totals are window sums over those ≤ 1024 bucket rows
+      val all = Window.partitionBy()
+      val ratio = toks.groupBy("f")
+        .agg(count(lit(1)).as("cnt_s"),
+          count(when(col("lang") === "en", lit(1))).as("cnt_t"))
         .select(col("f"),
-          ((coalesce(col("cnt_t"), lit(0L)) + 1).cast("double")
-            / (col("n_t") + 1024) * (col("n_s") + 1024)
+          ((col("cnt_t") + 1).cast("double")
+            / (sum(col("cnt_t")).over(all) + 1024)
+            * (sum(col("cnt_s")).over(all) + 1024)
             / (col("cnt_s") + 1)).as("r"))
       toks.join(broadcast(ratio), Seq("f"))
         .groupBy("doc_id", "lang")

@@ -26,8 +26,7 @@ object StreamCostProbe {
     // session warm-up so run 1 isn't billed codegen/parquet init
     spark.read.parquet(s"$dir/region.parquet").count()
     // a fresh drain clone per drain, as `StreamingQ.streamOnce` builds one
-    def events = graft.streaming.StreamingFeed.eventsStream(
-      StreamingQ.drainSession(spark), dir, glob = "events.parquet")
+    def events = StreamingQ.Feed.oneShot(StreamingQ.drainSession(spark), dir).events
 
     def drain(tag: String)(df: DataFrame): Unit = {
       val t0 = System.nanoTime()

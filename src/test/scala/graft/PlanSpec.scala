@@ -186,6 +186,21 @@ class PlanSpec extends AnyFunSuite {
       s"expected the explode above FlatMapGroupsWithState:\n$p")
   }
 
+  test("q279: only c_user_id and c_ts of the click side reach the semi join") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val sess = queries.StreamingQ.drainSession(spark)
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // a streaming frame refuses batch planning, so run the session's
+    // optimizer over its analyzed plan, as each micro-batch does
+    val p = sess.sessionState.optimizer.execute(queries.StreamingQ.semiJoinFrame(
+      queries.StreamingQ.Feed.oneShot(sess, dir)).queryExecution.analyzed)
+    val semis = p.collect { case j: Join if j.joinType == LeftSemi => j }
+    assert(semis.size == 1, s"expected one LeftSemi join:\n$p")
+    assert(semis.head.right.output.map(_.name).toSet == Set("c_user_id", "c_ts"),
+      s"click side carries more than the join keys:\n$p")
+  }
+
   test("q79: top-3 terms per doc uses the WindowGroupLimit pushdown") {
     val p = plan("q79_tfidf")
     assert(p.contains("WindowGroupLimit"), s"top-k not pushed into window:\n$p")

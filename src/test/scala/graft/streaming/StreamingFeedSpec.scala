@@ -138,4 +138,20 @@ class StreamingFeedSpec extends AnyFunSuite {
       s"row count ${got.length} != ${want.length} — duplicated or lost rows on restart")
     assert(got.toSet == want.toSet)
   }
+
+  test("lint: StreamingQ opens the events feed once and joins purchases to clicks once") {
+    var root = Paths.get(sys.props.getOrElse("user.dir", ".")).toAbsolutePath
+    while (root != null && !Files.exists(root.resolve("build.sbt")))
+      root = root.getParent
+    assert(root != null, s"no build.sbt found walking up from ${sys.props("user.dir")}")
+    val src = Files.readString(
+      root.resolve("src/main/scala/graft/queries/StreamingQ.scala"))
+    def count(re: String): Int = re.r.findAllMatchIn(src).size
+    // the scaffolds' Feed is the one place a drain's events feed is opened
+    assert(count("""StreamingFeed\s*\.\s*eventsStream\(""") == 1,
+      "events feed opened outside StreamingQ.Feed")
+    // one purchase–click interval join builder serves every join query
+    assert(count("""\.join\(\s*clicks\b""") == 1,
+      "stream-stream join over the click side written more than once")
+  }
 }
