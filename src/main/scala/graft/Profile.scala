@@ -6,6 +6,10 @@ package graft
   *
   * Usage: runMain graft.Profile <sfDir>
   *
+  * Every phase is timed through [[Force]], so frames that are not cached
+  * (`stintPlusMinus`, `playerPlusMinus`, `reboundLinks`, `timeline`)
+  * compute all their columns instead of what a pruned `.count()` keeps.
+  *
   * Shuffle fan-out must scale with the data, not the thread count: at a
   * pinned 32 partitions q116 at 1000× outgrew an 8 GiB heap, and a
   * blanket 512 made the iteration-scale stages crawl at 100×. Scaling
@@ -47,18 +51,18 @@ object Profile {
     }
 
     val p = queries.Domain.pipeline(spark, sfDir)
-    time("periods (cache fill)")(p.periods.count())
-    time("lineupStints (cache fill)")(p.lineupStints.count())
-    time("playerStints (cache fill)")(p.playerStints.count())
-    time("attributedEvents (cache fill)")(p.attributedEvents.count())
-    time("stintPlusMinus")(p.stintPlusMinus.count())
-    time("scoreChain")(p.scoreChain.count())
-    time("q62 playerPlusMinus")(p.playerPlusMinus.count())
-    time("reboundLinks")(p.reboundLinks.count())
-    time("timeline")(p.timeline.count())
-    time("pyg build + edges count")(queries.Domain.pyg(spark, sfDir)._2.count())
-    time("pyg nodes count (cached)")(queries.Domain.pyg(spark, sfDir)._1.count())
-    time("q64 re-count (all cached)")(queries.Domain.pyg(spark, sfDir)._2.count())
+    time("periods (cache fill)")(Force(p.periods))
+    time("lineupStints (cache fill)")(Force(p.lineupStints))
+    time("playerStints (cache fill)")(Force(p.playerStints))
+    time("attributedEvents (cache fill)")(Force(p.attributedEvents))
+    time("stintPlusMinus")(Force(p.stintPlusMinus))
+    time("scoreChain")(Force(p.scoreChain))
+    time("q62 playerPlusMinus")(Force(p.playerPlusMinus))
+    time("reboundLinks")(Force(p.reboundLinks))
+    time("timeline")(Force(p.timeline))
+    time("pyg build + edges")(Force(queries.Domain.pyg(spark, sfDir)._2))
+    time("pyg nodes (cached)")(Force(queries.Domain.pyg(spark, sfDir)._1))
+    time("q64 again (all cached)")(Force(queries.Domain.pyg(spark, sfDir)._2))
     spark.stop()
   }
 }

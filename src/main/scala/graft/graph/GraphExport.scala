@@ -33,11 +33,14 @@ object GraphExport {
 
   /** Dense ids for MANY node types in one pass: sort the unioned node
     * table by (type, naturalKey), zipWithIndex once, then subtract each
-    * type's first global index (a tiny broadcast-joined offset table).
-    * Same per-type 0..n-1 contiguous ids as calling [[denseIds]] per
-    * type, but one sort + one zipWithIndex + one 10-row aggregate
-    * instead of 2 jobs per type — the difference between ~30 and ~4
-    * Spark jobs when an export carries ten node types.
+    * type's first global index. The offsets are one row per type, so
+    * they are collected and subtracted through a literal CASE, not
+    * joined: a broadcast join keyed on the type string would pin a
+    * 32 MB hash-map page inside the leaf's plan for 10 rows. Same
+    * per-type 0..n-1 contiguous ids as calling [[denseIds]] per type,
+    * but one sort + one zipWithIndex + one 10-row aggregate instead of
+    * 2 jobs per type — the difference between ~30 and ~4 Spark jobs
+    * when an export carries ten node types.
     *
     * The returned frame is an already-materialized cache leaf
     * (`GraftBridge.cacheLeaf`; callers scan it at least twice — src +
@@ -52,12 +55,14 @@ object GraphExport {
     // `.rdd` + `createDataFrame` paid
     val zipped = org.apache.spark.sql.GraftBridge
       .zipWithIndexColumn(sorted, "__gidx").cache()
-    val offsets = zipped.groupBy(col(typeCol))
-      .agg(min(col("__gidx")).as("__off"))
+    val offset = zipped.groupBy(col(typeCol)).agg(min(col("__gidx")))
+      .collect()
+      .foldLeft(lit(null).cast("long")) { (other, r) =>
+        when(col(typeCol) === lit(r.get(0)), r.getLong(1)).otherwise(other) }
     val out = org.apache.spark.sql.GraftBridge.cacheLeaf(
-      zipped.join(broadcast(offsets), Seq(typeCol))
-        .withColumn("dense_id", col("__gidx") - col("__off"))
-        .drop("__gidx", "__off"))
+      zipped.filter(col(typeCol).isNotNull) // an untyped row gets no id
+        .withColumn("dense_id", col("__gidx") - offset)
+        .drop("__gidx"))
     out.count() // fill the result cache while the zip intermediate is warm
     zipped.unpersist()
     out

@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.nba.{Edges, GamePipeline, Stints}
-import graft.ops.TimeKernel
+import graft.ops.{LongKeyJoin, TimeKernel}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftBridge.cacheLeaf
 import org.apache.spark.sql.expressions.Window
@@ -29,8 +29,10 @@ import org.apache.spark.sql.functions._
   *     is_made]`, constant `[1.0]` for game/team/lineup/player.
   *
   * Scale shape: every edge set is an equi-join or a single window; dense
-  * ids are zipWithIndex per node type ([[GraphExport.denseIds]]); the
-  * final COO translation is two hash joins against the node table.
+  * ids are one zipWithIndex over all node types
+  * ([[GraphExport.denseIdsByType]]); the final COO translation is two
+  * hash joins against the node table, each on one hashed long key
+  * ([[graft.ops.LongKeyJoin]]).
   */
 object PyGExport {
 
@@ -223,9 +225,9 @@ object PyGExport {
 
     // ps -> period: membership routed through the stint's period
     val stintPeriod = stints.select(col("stint_id"), periodId.as("period_id"))
-    val psPeriodEdges = rel("in_period", "player_stint", "period", ps
-      .select(col("player_stint_id").as("src"), explode(col("stint_ids")).as("stint_id"))
-      .join(stintPeriod, Seq("stint_id"))
+    val psPeriodEdges = rel("in_period", "player_stint", "period", LongKeyJoin(ps
+      .select(col("player_stint_id").as("src"), explode(col("stint_ids")).as("stint_id")),
+        stintPeriod, Seq("stint_id"), "inner", guard = "period_id")
       .select(col("src"), col("period_id").as("dst")))
 
     // Branch-level set semantics replace the former GLOBAL distinct over
@@ -258,10 +260,14 @@ object PyGExport {
       col("dense_id").as("dst_idx"))
     // cached: the COO frame is the product of the whole edge assembly —
     // three consumers (edge export, node-feature query, BFS analytics)
-    // each re-deriving it would pay the full union+distinct+join chain
-    val coo = cacheLeaf(allEdges
-      .join(src, Seq("src_type", "src_id"))
-      .join(dst, Seq("dst_type", "dst_id"))
+    // each re-deriving it would pay the full union+distinct+join chain.
+    // The (type, id) string lookups, like psPeriodEdges' stint_id join,
+    // go through LongKeyJoin: broadcast on their natural keys, each would
+    // pin a 32 MB hash-map page for as long as this leaf lives
+    val withSrc = LongKeyJoin(allEdges, src, Seq("src_type", "src_id"), "inner",
+      guard = "src_idx")
+    val coo = cacheLeaf(LongKeyJoin(withSrc, dst, Seq("dst_type", "dst_id"), "inner",
+        guard = "dst_idx")
       .select(col("rel_type"), col("src_type"), col("dst_type"),
         col("src_id"), col("dst_id"), col("src_idx"), col("dst_idx")))
     (nodes, coo)

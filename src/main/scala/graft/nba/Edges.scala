@@ -1,5 +1,6 @@
 package graft.nba
 
+import graft.ops.LongKeyJoin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,8 +16,9 @@ import org.apache.spark.sql.functions._
   * stint (J9) where it has one.
   *
   * Scale shape: no per-relation joins — one explode + one 3-key
-  * equi-join (game, person, lineup-stint), shuffling each candidate row
-  * once. Fallback-vs-strict is data, not control flow.
+  * equi-join (game, person, lineup-stint) through a single hashed long
+  * key ([[graft.ops.LongKeyJoin]]), shuffling each candidate row once.
+  * Fallback-vs-strict is data, not control flow.
   *
   * Fix-not-port (§2.11 spirit): the reference's LOST_JUMPBALL resolves
   * the loser against the WINNER's lineup stint (game.py:245-246), which
@@ -73,16 +75,13 @@ object Edges {
       .select(col("game_id"), col("action_id"), col("c.*"))
 
     val membership = playerStints.select(
-      col("game_id"), col("person_id").as("m_person"),
-      col("player_stint_id"), explode(col("stint_ids")).as("m_ls"))
+      col("game_id"), col("person_id").as("actor"),
+      col("player_stint_id"), explode(col("stint_ids")).as("side_stint"))
 
-    tall
-      .join(membership,
-        tall("game_id") === membership("game_id") &&
-          tall("actor") === membership("m_person") &&
-          tall("side_stint") === membership("m_ls"),
-        "left_outer")
-      .select(tall("game_id"), col("rel_type"),
+    // the PyG export caches these edges: a composite build key would pin a page
+    LongKeyJoin(tall, membership, Seq("game_id", "actor", "side_stint"),
+        "left_outer", guard = "player_stint_id")
+      .select(col("game_id"), col("rel_type"),
         coalesce(col("player_stint_id"),
           when(col("fb"), col("side_stint"))).as("src_id"),
         when(col("player_stint_id").isNotNull, "player_stint")

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.graph.Superstep
+import graft.ops.LongKeyJoin
 import graft.nba.{GameFeed, GamePipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1093,7 +1094,8 @@ object Domain {
     val co = graft.SessionCache.once(s, s"domain#$dir#lpa-co") {
       val a = mem.select(col("stint_id"), col("person_id").as("src"))
       val b = mem.select(col("stint_id"), col("person_id").as("dst"))
-      a.join(b, Seq("stint_id"))
+      // cached for the session: a string build key would pin a page
+      LongKeyJoin(a, b, Seq("stint_id"), "inner", guard = "dst")
         .filter(col("src") =!= col("dst"))
         .groupBy(col("src"), col("dst"))
         .agg(count(lit(1)).as("w"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.ops.{Text, Vectors}
+import graft.ops.{LongKeyJoin, Text, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1378,7 +1378,8 @@ object Embeddings {
         col("vec_id").as("dst"), col("embedding").as("eb"))
       val wk = Window.partitionBy(col("src"))
         .orderBy(col("cosine").desc, col("dst"))
-      val g = a.join(b, Seq("label", "j", "shard"))
+      // cached for the session: a three-int build key would pin a page
+      val g = LongKeyJoin(a, b, Seq("label", "j", "shard"), "inner", guard = "dst")
         .filter(col("dst") =!= col("src"))
         .select(col("src"), col("dst"),
           Vectors.cosine(col("ea"), col("eb")).as("cosine"))
@@ -1611,11 +1612,11 @@ object Embeddings {
     * family (q31/q122/q125): at 100 TB this is the map-only pass that
     * shrinks every distance computation 4× before any index build.
     *
-    * Both engines fold the 64 signed terms LEFT-ASSOCIATIVELY (Spark
-    * `reduceLeft` over constant-signed columns ≡ DuckDB `list_reduce`),
-    * so the double sums are bit-identical; /4 = /√16 is the exact
-    * power-of-two JL scale. Spark's matrix is 1,024 compile-time
-    * constants — zero per-row hashing; zero shuffle anywhere. */
+    * Both engines fold the 64 signed terms LEFT-ASSOCIATIVELY, starting
+    * from the first term (Spark `aggregate` ≡ DuckDB's seedless
+    * `list_reduce`), so the double sums are bit-identical; /4 = /√16 is
+    * the exact power-of-two JL scale. Spark's matrix is a 64 × 16
+    * constant sign array — zero per-row hashing; zero shuffle anywhere. */
   private def jlSign(i: Int, j: Int): Boolean = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val hex = md.digest(s"jl|$i|$j".getBytes("UTF-8"))
@@ -1623,17 +1624,22 @@ object Embeddings {
     hex.charAt(0) < '8'
   }
 
-  /** The 16 JL components of a 64-dim embedding column — constant-signed
-    * left-associated sums, matching the oracle's `list_reduce` fold. */
+  /** `jlSigns(i - 1)(j - 1)` is ±1.0 by [[jlSign]]`(i, j)`. */
+  private lazy val jlSigns: Seq[Seq[Double]] =
+    (1 to 64).map(i => (1 to 16).map(j => if (jlSign(i, j)) 1.0 else -1.0))
+
+  /** The 16 JL components of a 64-dim embedding column, as ONE fold over
+    * the embedding: each element becomes its row of 16 signed terms
+    * (`x * ±1.0` is exactly `±x`), and `aggregate` adds the rows
+    * element-wise from the first one on — per component the oracle's
+    * left-associated `list_reduce`. A 1,024-term expression tree here
+    * outgrows Janino's 64 KB method limit and drops the stage out of
+    * whole-stage codegen. */
   private def jlProject(e: Column): Column = {
-    val ys = (1 to 16).map { j =>
-      val terms = (1 to 64).map { i =>
-        val t = element_at(e, i).cast("double")
-        if (jlSign(i, j)) t else -t
-      }
-      terms.reduceLeft(_ + _) / lit(4.0)
-    }
-    array(ys: _*)
+    val rows = zip_with(slice(e, 2, 63), typedLit(jlSigns.tail),
+      (x, s) => transform(s, _ * x.cast("double")))
+    val first = transform(typedLit(jlSigns.head), _ * element_at(e, 1).cast("double"))
+    transform(aggregate(rows, first, (acc, r) => zip_with(acc, r, _ + _)), _ / 4.0)
   }
 
   val q222JlProjection: Q = {

@@ -36,7 +36,15 @@ object GraftBridge {
     * (the [[graft.SessionCache]] entries): `unpersist()` on the leaf
     * releases nothing, and a leaf over an uncached entry would refill
     * blocks that no cache entry tracks. Frames that are unpersisted
-    * later keep a plain `.cache()`. */
+    * later keep a plain `.cache()`.
+    *
+    * A broadcast inside the leaf's plan lives as long as the leaf: the
+    * cache entry's physical plan holds the built relation. A build side
+    * keyed on anything other than one integral column is an
+    * `UnsafeHashedRelation`, which pins a full `spark.buffer.pageSize`
+    * page (32 MB on a 4-core, 4 GB driver) however few its rows; join
+    * such keys through [[graft.ops.LongKeyJoin]], or collect a tiny
+    * side and apply it as literals. */
   def cacheLeaf(df: DataFrame): DataFrame = {
     val ds = df.cache().asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{AsOf, Chains, Sessionize, TimeKernel}
+import graft.ops.{AsOf, Chains, LongKeyJoin, Sessionize, TimeKernel}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -125,5 +125,36 @@ class OpsSpec extends AnyFunSuite {
     val got = df.select(TimeKernel.sentinelToNull(col("v")).as("v"))
       .as[Option[Long]].collect().toSet
     assert(got == Set(None, Some(42L)))
+  }
+
+  test("LongKeyJoin equals the === join; its build side keys on one bigint") {
+    val l = Seq[(Option[String], Option[Long], Int)](
+      (Some("a"), Some(1L), 1), (Some("a"), Some(2L), 2), (Some("b"), Some(1L), 3),
+      (None, Some(1L), 4), (Some("a"), None, 5), (Some("c"), Some(9L), 6))
+      .toDF("s", "n", "lv")
+    val r = Seq[(Option[String], Option[Long], String)](
+      (Some("a"), Some(1L), "x"), (Some("a"), Some(1L), "y"), (Some("b"), Some(1L), "z"),
+      (Some("a"), Some(2L), "w"), (None, Some(1L), "null s"), (Some("a"), None, "null n"))
+      .toDF("s", "n", "rv")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (keys <- Seq(Seq("s"), Seq("s", "n")); how <- Seq("inner", "left_outer")) {
+      val got = LongKeyJoin(l, r, keys, how, guard = "rv")
+      val want = l.join(r, keys, how)
+      assert(got.columns.toSeq == want.columns.toSeq, s"$keys $how")
+      assert(rows(got) == rows(want), s"$keys $how")
+      assert(rows(got).nonEmpty)
+
+      Force(got)
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+      import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+      object walk extends AdaptiveSparkPlanHelper
+      val builds = walk.collect(got.queryExecution.executedPlan) {
+        case j: BroadcastHashJoinExec =>
+          (if (j.buildSide == BuildLeft) j.leftKeys else j.rightKeys)
+            .map(_.dataType.simpleString)
+      }
+      assert(builds == Seq(Seq("bigint")), s"$keys $how build keys: $builds")
+    }
   }
 }
