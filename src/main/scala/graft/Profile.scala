@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Phase profiler for the domain pipeline + PyG export — breaks the
   * bench's heavy lines (q60/q61/q64) into their constituent actions so
   * optimization targets measurements, not guesses.
@@ -7,8 +10,15 @@ package graft
   * Usage: runMain graft.Profile <sfDir>
   *
   * Every phase is timed through [[Force]], so frames that are not cached
-  * (`stintPlusMinus`, `playerPlusMinus`, `reboundLinks`, `timeline`)
-  * compute all their columns instead of what a pruned `.count()` keeps.
+  * (`reboundLinks`, `timeline`) compute all their columns instead of what
+  * a pruned `.count()` keeps.
+  *
+  * Each phase line also names the generated classes Janino compiled
+  * during the phase (`classes`, the count delta of
+  * `CodegenMetrics.METRIC_COMPILATION_TIME`) and their compile time
+  * (`compile`, the delta of `CodeGenerator.compileTime`; the metric's own
+  * histogram is a sampled reservoir, so its values do not sum exactly).
+  * Compile-cache hits compile nothing and count in neither.
   *
   * Shuffle fan-out must scale with the data, not the thread count: at a
   * pinned 32 partitions q116 at 1000× outgrew an 8 GiB heap, and a
@@ -24,13 +34,17 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = Session.build()
     val sc = spark.sparkContext
+    def classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def time(label: String)(f: => Long): Unit = {
       val j0 = sc.statusTracker.getJobIdsForGroup(null).length
+      val (c0, ns0) = (classes, CodeGenerator.compileTime)
       val t0 = System.nanoTime()
       val n = f
       val dt = (System.nanoTime() - t0) / 1e9
       val jobs = sc.statusTracker.getJobIdsForGroup(null).length - j0
-      println(f"[profile] $label%-34s ${dt}%7.2fs  rows=$n%-9d jobs=$jobs")
+      val compileMs = (CodeGenerator.compileTime - ns0) / 1000000
+      println(f"[profile] $label%-34s ${dt}%7.2fs  rows=$n%-9d jobs=$jobs%-4d " +
+        f"classes=${classes - c0}%-4d compile=${compileMs}ms")
     }
     // warm up
     spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -55,9 +69,9 @@ object Profile {
     time("lineupStints (cache fill)")(Force(p.lineupStints))
     time("playerStints (cache fill)")(Force(p.playerStints))
     time("attributedEvents (cache fill)")(Force(p.attributedEvents))
-    time("stintPlusMinus")(Force(p.stintPlusMinus))
-    time("scoreChain")(Force(p.scoreChain))
-    time("q62 playerPlusMinus")(Force(p.playerPlusMinus))
+    time("stintPlusMinus (cache fill)")(Force(p.stintPlusMinus))
+    time("scoreChain (cache fill)")(Force(p.scoreChain))
+    time("playerPlusMinus (cache fill)")(Force(p.playerPlusMinus))
     time("reboundLinks")(Force(p.reboundLinks))
     time("timeline")(Force(p.timeline))
     time("pyg build + edges")(Force(queries.Domain.pyg(spark, sfDir)._2))

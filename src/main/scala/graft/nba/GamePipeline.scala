@@ -68,10 +68,13 @@ object GamePipeline {
 
     // 3. scores + plus-minus (A6/W7 windows, A7/A8 roll-ups)
     // chain is consumed by the score query, the season invariant and the
-    // streaming twin's oracle — cache the 1-row-per-score frame
+    // streaming twin's oracle — cache the 1-row-per-score frame.
+    // Stint plus-minus feeds q60, q63, the player roll-up and the SQL
+    // surface, player plus-minus feeds q62: cached, a warm re-query is one
+    // scan of the leaf instead of the aggregate and its joins again.
     val chain = cacheLeaf(Scores.scoreChain(attributed, gameTeams))
-    val stintPm = Scores.stintPlusMinus(attributed, lineupStints)
-    val playerPm = Scores.playerPlusMinus(playerStints, stintPm)
+    val stintPm = cacheLeaf(Scores.stintPlusMinus(attributed, lineupStints))
+    val playerPm = cacheLeaf(Scores.playerPlusMinus(playerStints, stintPm))
 
     Result(
       periods = periods,

@@ -1,5 +1,6 @@
 package graft.nba
 
+import graft.ops.LongKeyJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,19 +51,26 @@ object Scores {
   /** Per-lineup-stint plus-minus (A7/A8): each scoring event lands in one
     * stint per side (as-of attribution done upstream — events must carry
     * `lineup_stint_id` and `opp_lineup_stint_id`); points-for accrue to
-    * the scorer's stint, points-against to the opponent stint on court. */
+    * the scorer's stint, points-against to the opponent stint on court.
+    *
+    * One aggregate: every scoring row yields a (stint, for, 0) entry for
+    * its own stint and a (stint, 0, against) entry for the opponent's, so
+    * one `groupBy` sums both columns and one left join brings them back
+    * to the stints. The join keys on the string `stint_id`, so it goes
+    * through [[graft.ops.LongKeyJoin]]: the result is a cache leaf, and a
+    * string-keyed broadcast would pin a hash-map page for its lifetime. */
   def stintPlusMinus(attributedScores: DataFrame, lineupStints: DataFrame): DataFrame = {
-    val forPts = attributedScores
-      .filter(col("points") > 0 && col("lineup_stint_id").isNotNull)
-      .groupBy(col("lineup_stint_id").as("stint_id"))
-      .agg(sum(col("points")).as("pts_for"))
-    val againstPts = attributedScores
-      .filter(col("points") > 0 && col("opp_lineup_stint_id").isNotNull)
-      .groupBy(col("opp_lineup_stint_id").as("stint_id"))
-      .agg(sum(col("points")).as("pts_against"))
-    lineupStints
-      .join(forPts, Seq("stint_id"), "left_outer")
-      .join(againstPts, Seq("stint_id"), "left_outer")
+    val pts = attributedScores
+      .filter(col("points") > 0)
+      .select(explode(array(
+        struct(col("lineup_stint_id").as("stint_id"),
+          col("points").as("pts_for"), lit(0).as("pts_against")),
+        struct(col("opp_lineup_stint_id").as("stint_id"),
+          lit(0).as("pts_for"), col("points").as("pts_against")))).as("e"))
+      .filter(col("e.stint_id").isNotNull)
+      .groupBy(col("e.stint_id").as("stint_id"))
+      .agg(sum(col("e.pts_for")).as("pts_for"), sum(col("e.pts_against")).as("pts_against"))
+    LongKeyJoin(lineupStints, pts, Seq("stint_id"), "left_outer", guard = "pts_for")
       .withColumn("pts_for", coalesce(col("pts_for"), lit(0L)))
       .withColumn("pts_against", coalesce(col("pts_against"), lit(0L)))
       .withColumn("plus_minus", col("pts_for") - col("pts_against"))
@@ -70,12 +78,14 @@ object Scores {
 
   /** Player-stint plus-minus: the hierarchical roll-up (A8,
     * game.py:797-808) — a player's run accrues the ± of every lineup
-    * stint it spans. */
+    * stint it spans. Also a cache leaf, so it too joins on the string
+    * `stint_id` through [[graft.ops.LongKeyJoin]]. */
   def playerPlusMinus(playerStints: DataFrame, stintPlusMinus: DataFrame): DataFrame = {
-    playerStints
+    val spans = playerStints
       .select(col("game_id"), col("team_id"), col("person_id"),
         col("player_stint_id"), explode(col("stint_ids")).as("stint_id"))
-      .join(stintPlusMinus.select(col("stint_id"), col("plus_minus")), Seq("stint_id"))
+    LongKeyJoin(spans, stintPlusMinus.select(col("stint_id"), col("plus_minus")),
+        Seq("stint_id"), "inner", guard = "plus_minus")
       .groupBy(col("game_id"), col("team_id"), col("person_id"), col("player_stint_id"))
       .agg(sum(col("plus_minus")).as("plus_minus"))
   }

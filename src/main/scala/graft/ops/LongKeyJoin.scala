@@ -25,12 +25,15 @@ import org.apache.spark.sql.functions._
   *    the query fails loudly. A `left_outer` miss passes the guard. */
 object LongKeyJoin {
 
-  private val Key = "__lkj"
+  private val LKey = "__lkj"
+  private val RKey = "__rkj"
+  private def renamed(c: String) = s"__r_$c"
+  /** The column named `c`, even when the name holds a dot or a backtick. */
+  private def ref(c: String): Column = col(s"`${c.replace("`", "``")}`")
 
   /** Null when any column is null, else the 64-bit hash of all of them. */
-  private def longKey(df: DataFrame, keys: Seq[String]): Column =
-    when(keys.map(k => df(k).isNotNull).reduce(_ && _),
-      xxhash64(keys.map(df(_)): _*))
+  private def longKey(keys: Seq[String]): Column =
+    when(keys.map(ref(_).isNotNull).reduce(_ && _), xxhash64(keys.map(ref): _*))
 
   def apply(left: DataFrame, right: DataFrame, keys: Seq[String],
       how: String, guard: String): DataFrame = {
@@ -40,18 +43,23 @@ object LongKeyJoin {
     // xxhash64 hashes the value's type, so an int never meets a long
     keys.foreach(k => require(left.schema(k).dataType == right.schema(k).dataType,
       s"key $k: ${left.schema(k).dataType} vs ${right.schema(k).dataType}"))
-    val rk = keys.map(k => s"__r_$k")
-    val l = left.withColumn(Key, longKey(left, keys))
-    val r0 = keys.zip(rk).foldLeft(right) { case (df, (k, rn)) => df.withColumnRenamed(k, rn) }
-    val r = r0.withColumn(Key, longKey(r0, rk))
-    val collided = r(rk.head).isNotNull &&
-      !keys.zip(rk).map { case (k, rn) => l(k) === r(rn) }.reduce(_ && _)
-    val out = keys.map(l(_)) ++ left.columns.filterNot(keys.contains).map(l(_)) ++
+    // Every right column gets a fresh name, so the join output resolves by
+    // name alone. Column references bound to either input frame would not
+    // survive when both sides carry the same attributes (a self-join, or
+    // two frames derived from one cache leaf): Spark re-instances one side
+    // and rejects the stale reference as ambiguous.
+    val l = left.withColumn(LKey, longKey(keys))
+    val r = right.select(right.columns.map(c => right(c).as(renamed(c))): _*)
+      .withColumn(RKey, longKey(keys.map(renamed)))
+    val collided = ref(renamed(keys.head)).isNotNull &&
+      !keys.map(k => ref(k) === ref(renamed(k))).reduce(_ && _)
+    val out = (keys ++ left.columns.filterNot(keys.contains)).map(ref) ++
       right.columns.filterNot(keys.contains).map { c =>
-        if (c != guard) r(c)
+        if (c != guard) ref(renamed(c)).as(c)
         else when(collided, raise_error(lit(
-          s"LongKeyJoin: xxhash64 collision on (${keys.mkString(", ")})"))).otherwise(r(c)).as(c)
+          s"LongKeyJoin: xxhash64 collision on (${keys.mkString(", ")})")))
+          .otherwise(ref(renamed(c))).as(c)
       }
-    l.join(r, l(Key) === r(Key), how).select(out: _*)
+    l.join(r, col(LKey) === col(RKey), how).select(out: _*)
   }
 }

@@ -1438,12 +1438,17 @@ object Embeddings {
         .union(knn.select(col("dst").as("src"), col("src").as("dst")))
         .distinct()
       val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("d"))
-      val cn = adj.select(col("src").as("a"), col("dst").as("b"))
+      val wedges = adj.select(col("src").as("a"), col("dst").as("b"))
         .join(adj.select(col("src").as("b"), col("dst").as("c")), Seq("b"))
         .filter(col("c") > col("a"))
         .select(col("a"), col("c"))
-        .join(adj.select(col("src").as("a"), col("dst").as("c")),
-          Seq("a", "c"), "left_anti")
+      // drop linked pairs. An anti-join on (a, c) would build a 32 MB
+      // page per run (a two-long broadcast key); the long-keyed left join
+      // keeps the wedges whose `linked` marker found no edge: same rows.
+      val cn = LongKeyJoin(wedges,
+          adj.select(col("src").as("a"), col("dst").as("c"), lit(true).as("linked")),
+          Seq("a", "c"), "left_outer", guard = "linked")
+        .filter(col("linked").isNull)
         .groupBy(col("a"), col("c")).agg(count(lit(1)).as("common"))
         .filter(col("common") >= 2)
       val wp = Window.partitionBy(col("a"))

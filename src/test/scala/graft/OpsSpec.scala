@@ -127,6 +127,20 @@ class OpsSpec extends AnyFunSuite {
     assert(got == Set(None, Some(42L)))
   }
 
+  test("LongKeyJoin joins two sides that share attributes, as a self-join does") {
+    // a dotted name must not read as a struct field
+    val l = Seq(("a", 1L, 1), ("a", 2L, 2), ("b", 1L, 3), ("c", 9L, 4)).toDF("s", "n", "l.v")
+    // both sides carry l's `s` and `n`: Spark re-instances the right one
+    val r = l.filter(col("`l.v`") < 4).select(col("s"), col("n"), (col("`l.v`") * 10).as("rv"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (keys <- Seq(Seq("s"), Seq("s", "n")); how <- Seq("inner", "left_outer")) {
+      val got = LongKeyJoin(l, r, keys, how, guard = "rv")
+      val want = l.join(r, keys, how)
+      assert(got.columns.toSeq == want.columns.toSeq, s"$keys $how")
+      assert(rows(got) == rows(want), s"$keys $how")
+    }
+  }
+
   test("LongKeyJoin equals the === join; its build side keys on one bigint") {
     val l = Seq[(Option[String], Option[Long], Int)](
       (Some("a"), Some(1L), 1), (Some("a"), Some(2L), 2), (Some("b"), Some(1L), 3),

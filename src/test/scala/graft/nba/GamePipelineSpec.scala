@@ -2,6 +2,7 @@ package graft.nba
 
 import graft.SparkTestSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden tests of the domain engine on the hand-built fixture game
@@ -111,6 +112,39 @@ class GamePipelineSpec extends AnyFunSuite {
     assert(homeSum == 1L && awaySum == -1L)
   }
 
+  test("stint plus-minus: points for and against per stint, both bigint") {
+    val pm = result.stintPlusMinus.select("team_id", "start_clock", "pts_for", "pts_against")
+    assert(pm.schema("pts_for").dataType == LongType && pm.schema("pts_against").dataType == LongType)
+    val byKey = pm.collect().map(r => (r.getLong(0), r.getDouble(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    // home 2 (t60) | away 2 (t200), away FT 1 (t280)
+    assert(byKey((Fixture.home, 0.0)) == ((2L, 3L)))
+    // home 3 (t400), home 2 (t800) | away 2 (t700)
+    assert(byKey((Fixture.home, 300.0)) == ((5L, 2L)))
+    // home 2 (t1300) | away 3 (t950)
+    assert(byKey((Fixture.home, 900.0)) == ((2L, 3L)))
+    assert(byKey((Fixture.away, 0.0)) == ((3L, 5L)))
+    assert(byKey((Fixture.away, 600.0)) == ((5L, 4L)))
+  }
+
+  test("stint plus-minus: one-sided, pointless and unattributed stints") {
+    import spark.implicits._
+    val stints = Seq("a", "b", "c", "d").toDF("stint_id")
+    val scores = Seq[(Int, Option[String], Option[String])](
+      (2, Some("a"), Some("b")), (3, Some("a"), Some("b")),
+      (0, Some("c"), Some("b")), // not a scoring row
+      (1, None, Some("b")))      // its own side on no stint: counts only against b
+      .toDF("points", "lineup_stint_id", "opp_lineup_stint_id")
+    val pm = Scores.stintPlusMinus(scores, stints)
+    assert(Seq("pts_for", "pts_against", "plus_minus").forall(c => pm.schema(c).dataType == LongType))
+    val got = pm.collect().map(r => r.getAs[String]("stint_id") ->
+      Seq("pts_for", "pts_against", "plus_minus").map(c => Option(r.getAs[java.lang.Long](c)))).toMap
+    assert(got == Map(
+      "a" -> Seq(Some(5L), Some(0L), Some(5L)),
+      "b" -> Seq(Some(0L), Some(6L), Some(-6L)), // only points against
+      "c" -> Seq(Some(0L), Some(0L), Some(0L)),  // a non-scoring row only
+      "d" -> Seq(Some(0L), Some(0L), Some(0L)))) // no rows at all
+  }
+
   test("player plus-minus rolls up lineup stints") {
     val pm = result.playerPlusMinus
       .select("person_id", "plus_minus").collect()
@@ -168,7 +202,8 @@ class GamePipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     Seq("periods" -> result.periods, "lineupStints" -> result.lineupStints,
       "playerStints" -> result.playerStints, "attributedEvents" -> result.attributedEvents,
-      "scoreChain" -> result.scoreChain).foreach { case (name, df) =>
+      "scoreChain" -> result.scoreChain, "stintPlusMinus" -> result.stintPlusMinus,
+      "playerPlusMinus" -> result.playerPlusMinus).foreach { case (name, df) =>
       val root = df.queryExecution.analyzed
       assert(root.isInstanceOf[InMemoryRelation], s"$name analyzes to\n${root.treeString}")
     }
