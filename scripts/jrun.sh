@@ -1,11 +1,17 @@
 #!/bin/bash
 # Direct-java runner for graft mains: same JVM flags as build.sbt's fork,
 # but no sbt lock — lets Explain/Profile/Bench run while sbt test runs.
+# It runs the classes of the checkout it sits in, so two checkouts can be
+# profiled side by side. The classpath is cached per checkout in
+# target/jrun-classpath.txt (the first run writes it through sbt, which
+# also compiles); recompile with sbt before rerunning after a source edit.
 # Usage: scripts/jrun.sh <MainClass> [args...]   (env passes through)
 set -euo pipefail
-CP_FILE=${CP_FILE:-/tmp/cp.txt}
+REPO=$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)
+CP_FILE=${CP_FILE:-$REPO/target/jrun-classpath.txt}
 if [ ! -s "$CP_FILE" ]; then
-  (cd /root/repo && sbt -batch 'export Compile/fullClasspath' 2>/dev/null | tail -1 > "$CP_FILE")
+  mkdir -p "$(dirname "$CP_FILE")"
+  (cd "$REPO" && sbt -batch 'export Compile/fullClasspath' 2>/dev/null | tail -1 > "$CP_FILE")
 fi
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

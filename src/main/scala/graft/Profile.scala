@@ -13,12 +13,18 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * (`reboundLinks`, `timeline`) compute all their columns instead of what
   * a pruned `.count()` keeps.
   *
-  * Each phase line also names the generated classes Janino compiled
+  * Each phase line also names the Spark jobs it started (`jobs`, a
+  * `SparkListener.onJobStart` count; the UI status store keeps only
+  * `spark.ui.retainedJobs` jobs, so a delta of its job ids under-reads
+  * once a long run evicts), the generated classes Janino compiled
   * during the phase (`classes`, the count delta of
   * `CodegenMetrics.METRIC_COMPILATION_TIME`) and their compile time
   * (`compile`, the delta of `CodeGenerator.compileTime`; the metric's own
   * histogram is a sampled reservoir, so its values do not sum exactly).
-  * Compile-cache hits compile nothing and count in neither.
+  * Compile-cache hits compile nothing and count in neither. The
+  * `pipeline plan` line times `Domain.pipeline` alone: planning the
+  * pipeline's cache leaves, which `cache()` does eagerly, before any of
+  * them is filled.
   *
   * Shuffle fan-out must scale with the data, not the thread count: at a
   * pinned 32 partitions q116 at 1000× outgrew an 8 GiB heap, and a
@@ -35,16 +41,22 @@ object Profile {
     val spark = Session.build()
     val sc = spark.sparkContext
     def classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def time(label: String)(f: => Long): Unit = {
-      val j0 = sc.statusTracker.getJobIdsForGroup(null).length
+    val jobsStarted = new java.util.concurrent.atomic.AtomicInteger
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobsStarted.incrementAndGet()
+    })
+    def time[A](label: String)(f: => A): A = {
+      val j0 = jobsStarted.get
       val (c0, ns0) = (classes, CodeGenerator.compileTime)
       val t0 = System.nanoTime()
-      val n = f
+      val out = f
       val dt = (System.nanoTime() - t0) / 1e9
-      val jobs = sc.statusTracker.getJobIdsForGroup(null).length - j0
+      val rows = out match { case n: Long => n.toString; case _ => "-" }
       val compileMs = (CodeGenerator.compileTime - ns0) / 1000000
-      println(f"[profile] $label%-34s ${dt}%7.2fs  rows=$n%-9d jobs=$jobs%-4d " +
+      println(f"[profile] $label%-34s ${dt}%7.2fs  rows=$rows%-9s jobs=${jobsStarted.get - j0}%-4d " +
         f"classes=${classes - c0}%-4d compile=${compileMs}ms")
+      out
     }
     // warm up
     spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -64,7 +76,7 @@ object Profile {
       return
     }
 
-    val p = queries.Domain.pipeline(spark, sfDir)
+    val p = time("pipeline plan (9 leaves)")(queries.Domain.pipeline(spark, sfDir))
     time("periods (cache fill)")(Force(p.periods))
     time("lineupStints (cache fill)")(Force(p.lineupStints))
     time("playerStints (cache fill)")(Force(p.playerStints))

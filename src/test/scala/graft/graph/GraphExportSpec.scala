@@ -2,6 +2,7 @@ package graft.graph
 
 import graft.SparkTestSession
 import graft.nba.{Fixture, GamePipeline}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,6 +85,93 @@ class GraphExportSpec extends AnyFunSuite {
     expected.foreach { case (gid, idx) =>
       assert(depths(gid) == idx, s"vertex $gid depth ${depths(gid)} != stint_index $idx")
     }
+  }
+
+  private lazy val pyg = PyGExport.build(result, Fixture.gameTeams(spark))
+
+  private def relCounts(coo: DataFrame): Map[String, Long] =
+    coo.groupBy("rel_type", "src_type", "dst_type").count().collect()
+      .map(r => s"${r.getString(0)}:${r.getString(1)}->${r.getString(2)}" -> r.getLong(3))
+      .toMap
+
+  test("PyG export contents on the fixture: node sets, dense ids, per-relation edges") {
+    val (nodes, coo) = pyg
+    val perType = nodes.groupBy("node_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perType == Map("game" -> 1L, "team" -> 2L, "period" -> 2L, "lineup" -> 5L,
+      "player" -> 13L, "lineup_stint" -> 5L, "player_stint" -> 14L, "foul" -> 1L,
+      "shot" -> 10L, "freethrow" -> 2L))
+    assert(nodes.select("node_type", "node_id").distinct().count() == nodes.count(),
+      "a (node_type, node_id) pair appears twice")
+
+    // dense ids are 0..n-1 within each type
+    nodes.groupBy("node_type")
+      .agg(min("dense_id"), max("dense_id"), countDistinct("dense_id"), count(lit(1)))
+      .collect().foreach { r =>
+        assert(r.getLong(1) == 0L && r.getLong(2) == r.getLong(4) - 1 &&
+          r.getLong(3) == r.getLong(4), s"${r.getString(0)} ids: $r")
+      }
+
+    // action nodes are exactly the actions acted on by a resolved player
+    // stint: COMMITTED_FOUL heads the fouls, TOOK_SHOT the shots and free
+    // throws (split by is_freethrow)
+    val strict = graft.nba.Edges.actorEdges(result.attributedEvents, result.playerStints)
+      .filter(col("src_kind") === "player_stint")
+      .join(result.attributedEvents.select(col("action_id").as("dst_action_id"),
+        col("is_freethrow")), Seq("dst_action_id"))
+    def heads(rel: String, ft: Option[Boolean]) = strict
+      .filter(col("rel_type") === rel &&
+        ft.fold(lit(true))(f => col("is_freethrow") === f))
+      .select(col("dst_action_id").cast("string")).distinct()
+      .collect().map(_.getString(0)).toSet
+    def ids(tpe: String) = nodes.filter(col("node_type") === tpe)
+      .select("node_id").collect().map(_.getString(0)).toSet
+    assert(ids("foul") == heads("COMMITTED_FOUL", None))
+    assert(ids("shot") == heads("TOOK_SHOT", Some(false)))
+    assert(ids("freethrow") == heads("TOOK_SHOT", Some(true)))
+
+    // the fixture has no lineup that returns, so no same-lineup `next`
+    assert(relCounts(coo) == Map(
+      "played_home:team->game" -> 1L, "played_away:team->game" -> 1L,
+      "in_game:period->game" -> 2L,
+      "on_court:lineup->lineup_stint" -> 5L, "in_period:lineup_stint->period" -> 5L,
+      "on_court_next:lineup_stint->lineup_stint" -> 3L,
+      "has_lineup:team->lineup" -> 5L, "member_of:player->lineup" -> 25L,
+      "on_court:player->player_stint" -> 14L,
+      "next:player_stint->player_stint" -> 1L,
+      "on_court_with:player_stint->lineup_stint" -> 25L,
+      "in_period:player_stint->period" -> 18L,
+      "committed_foul:player_stint->foul" -> 1L, "drew_foul:player_stint->foul" -> 1L,
+      "assisted:player_stint->shot" -> 2L, "blocked:player_stint->shot" -> 1L,
+      "took_shot:player_stint->shot" -> 10L, "took_shot:player_stint->freethrow" -> 2L,
+      "caused:foul->freethrow" -> 2L))
+    assert(coo.select("rel_type", "src_id", "dst_id").distinct().count() == coo.count(),
+      "a (rel_type, src_id, dst_id) edge appears twice")
+  }
+
+  test("PyG export on the derived sf0.001 feed: per-type node and per-relation edge counts") {
+    val (nodes, coo) = graft.queries.Domain.pyg(spark, "/root/testdata/sf0.001")
+    assert(nodes.groupBy("node_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap == Map(
+      "game" -> 15L, "team" -> 4L, "period" -> 75L, "lineup" -> 40L, "player" -> 40L,
+      "lineup_stint" -> 229L, "player_stint" -> 349L, "foul" -> 73L, "shot" -> 201L,
+      "freethrow" -> 138L))
+    assert(relCounts(coo) == Map(
+      "played_home:team->game" -> 15L, "played_away:team->game" -> 15L,
+      "in_game:period->game" -> 75L,
+      "on_court:lineup->lineup_stint" -> 229L, "in_period:lineup_stint->period" -> 229L,
+      "next:lineup_stint->lineup_stint" -> 9L,
+      "on_court_next:lineup_stint->lineup_stint" -> 199L,
+      "has_lineup:team->lineup" -> 40L, "member_of:player->lineup" -> 200L,
+      "on_court:player->player_stint" -> 349L,
+      "next:player_stint->player_stint" -> 64L,
+      "on_court_with:player_stint->lineup_stint" -> 1145L,
+      "in_period:player_stint->period" -> 673L,
+      "committed_foul:player_stint->foul" -> 73L, "drew_foul:player_stint->foul" -> 33L,
+      "assisted:player_stint->shot" -> 9L, "blocked:player_stint->shot" -> 18L,
+      "took_shot:player_stint->shot" -> 201L, "took_shot:player_stint->freethrow" -> 138L,
+      "caused:foul->freethrow" -> 66L))
+    assert(coo.select("rel_type", "src_id", "dst_id").distinct().count() == coo.count())
   }
 
   test("PyG export: nodes/coo sit on InMemoryRelation leaves; q64/q69 plans stay small") {
