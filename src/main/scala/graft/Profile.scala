@@ -24,7 +24,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * Compile-cache hits compile nothing and count in neither. The
   * `pipeline plan` line times `Domain.pipeline` alone: planning the
   * pipeline's cache leaves, which `cache()` does eagerly, before any of
-  * them is filled.
+  * them is filled (player plus-minus is planned at its first use).
   *
   * Shuffle fan-out must scale with the data, not the thread count: at a
   * pinned 32 partitions q116 at 1000× outgrew an 8 GiB heap, and a
@@ -76,7 +76,7 @@ object Profile {
       return
     }
 
-    val p = time("pipeline plan (9 leaves)")(queries.Domain.pipeline(spark, sfDir))
+    val p = time("pipeline plan (8 leaves)")(queries.Domain.pipeline(spark, sfDir))
     time("periods (cache fill)")(Force(p.periods))
     time("lineupStints (cache fill)")(Force(p.lineupStints))
     time("playerStints (cache fill)")(Force(p.playerStints))

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -12,8 +13,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * `(src_idx, dst_idx)` edge frames, and an in-engine GraphX `Graph` for
   * traversal analytics (BASELINE.json approach).
   *
-  * Dense ids use `zipWithIndex` (two lightweight Spark jobs, no
-  * single-partition window) over a deterministic natural-key sort —
+  * Dense ids are positions in a deterministic natural-key sort
+  * (`zipWithIndex`, or a per-partition count for many types at once; no
+  * single-partition window) —
   * SURVEY §7.4.5's stability requirement — so the export scales to
   * billion-node graphs and re-runs reproduce identical ids.
   */
@@ -32,55 +34,65 @@ object GraphExport {
   }
 
   /** Dense ids for MANY node types in one pass: sort the unioned node
-    * table by (type, naturalKey), zipWithIndex once, then subtract each
-    * type's first global index. The offsets are one row per type, so
-    * they are collected and subtracted through a literal CASE, not
-    * joined: a broadcast join keyed on the type string would pin a
-    * 32 MB hash-map page inside the leaf's plan for 10 rows. Same
-    * per-type 0..n-1 contiguous ids as calling [[denseIds]] per type,
-    * but one sort + one zipWithIndex + one 10-row aggregate instead of
-    * 2 jobs per type — the difference between ~30 and ~4 Spark jobs
-    * when an export carries ten node types.
+    * table by (type, naturalKey), then one job counts each partition's
+    * rows and notes where each type begins in it. Prefix sums of the
+    * counts give every row its global position, and a row's dense id is
+    * that position minus its type's first position. The per-type
+    * offsets (one per type) travel in the closure: a broadcast join
+    * keyed on the type string would pin a 32 MB hash-map page inside the
+    * leaf's plan for 10 rows. Same per-type 0..n-1 contiguous ids as
+    * calling [[denseIds]] per type, but one sort and two jobs over it
+    * instead of 2 jobs per type. Both jobs read the one sorted RDD, so
+    * the sort's shuffle is written once.
     *
     * The returned frame is an already-materialized cache leaf
     * (`GraftBridge.cacheLeaf`; callers scan it at least twice — src +
     * dst side of every COO translation). Its cache lives as long as the
-    * session's cache does: `unpersist()` on the leaf releases nothing.
-    * The zipWithIndex intermediate is unpersisted before returning, so
-    * no other storage outlives the call. */
+    * session's cache does: `unpersist()` on the leaf releases nothing. */
   def denseIdsByType(df: DataFrame, typeCol: String, orderCols: Seq[String]): DataFrame = {
-    val sorted = df.orderBy((typeCol +: orderCols).map(col): _*)
-    // internal-row zip (r11): skips the catalyst→Row→catalyst double
-    // conversion of every node row (feature arrays included) that
-    // `.rdd` + `createDataFrame` paid
-    val zipped = org.apache.spark.sql.GraftBridge
-      .zipWithIndexColumn(sorted, "__gidx").cache()
-    val offset = zipped.groupBy(col(typeCol)).agg(min(col("__gidx")))
-      .collect()
-      .foldLeft(lit(null).cast("long")) { (other, r) =>
-        when(col(typeCol) === lit(r.get(0)), r.getLong(1)).otherwise(other) }
+    val sorted = df.filter(col(typeCol).isNotNull) // an untyped row gets no id
+      .orderBy((typeCol +: orderCols).map(col): _*)
+    val t = sorted.schema.fieldIndex(typeCol)
+    val dt = sorted.schema(t).dataType
+    val typeOf = (r: InternalRow) => CatalystTypeConverters.convertToScala(r.get(t, dt), dt)
+    // per partition: its row count and the (type, local index) of each type's first row
+    val parts = sorted.queryExecution.toRdd.mapPartitions { rows =>
+      val starts = scala.collection.mutable.ArrayBuffer.empty[(Any, Long)]
+      var n = 0L
+      rows.foreach { r =>
+        val v = typeOf(r)
+        if (starts.isEmpty || starts.last._1 != v) starts += v -> n
+        n += 1
+      }
+      Iterator(n -> starts.toSeq)
+    }.collect()
+    val base = parts.map(_._1).scanLeft(0L)(_ + _)
+    val first = parts.zip(base).toSeq
+      .flatMap { case ((_, starts), b) => starts.map { case (v, i) => v -> (b + i) } }
+      .groupMapReduce(_._1)(_._2)(math.min)
     val out = org.apache.spark.sql.GraftBridge.cacheLeaf(
-      zipped.filter(col(typeCol).isNotNull) // an untyped row gets no id
-        .withColumn("dense_id", col("__gidx") - offset)
-        .drop("__gidx"))
-    out.count() // fill the result cache while the zip intermediate is warm
-    zipped.unpersist()
+      org.apache.spark.sql.GraftBridge.withLongColumn(sorted, "dense_id") { p =>
+        var pos = base(p) - 1
+        r => { pos += 1; pos - first(typeOf(r)) }
+      })
+    graft.Force(out)
     out
   }
 
   /** The SQL spelling of [[denseIdsByType]]: one per-type `row_number`
-    * window, no RDD round-trip. Identical ids by construction. Tried per
-    * the round-5 review and MEASURED WORSE end-to-end, so it is kept only
-    * as the reference the zipWithIndex path is tested against. Numbers
-    * (q64 full build, tmpfs, local[32]): at sf0.1 the dense-id stage
+    * window, no RDD pass. Identical ids by construction. It MEASURED
+    * WORSE end-to-end, so it is kept only as the reference the
+    * sort-and-count path is tested against. Numbers (against that path's
+    * former zipWithIndex spelling, which shares its range sort; q64 full
+    * build, tmpfs, local[32]): at sf0.1 the dense-id stage
     * ties (4.4 s both) but the whole build degrades 19.1 s → 38.5 s; at
     * 10× sf0.1 the stage wins (11.4 s → 9.0 s) yet the build still loses
     * (73.5 s → 83.6 s). Two reasons: each node TYPE serializes through
-    * one window reducer (zipWithIndex's range sort parallelizes within a
-    * type), and the window-cached frame is partitioned on the 10-value
-    * type key, which collapses the parallelism of every downstream COO
-    * join that scans it. zipWithIndex remains the measured AND the
-    * billion-node design. */
+    * one window reducer (the range sort parallelizes within a type), and
+    * the window-cached frame is partitioned on the 10-value type key,
+    * which collapses the parallelism of every downstream COO join that
+    * scans it. The range sort remains the measured AND the billion-node
+    * design. */
   private[graph] def denseIdsByTypeWindow(
       df: DataFrame, typeCol: String, orderCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -1,8 +1,8 @@
 package graft.graph
 
-import graft.nba.{Edges, GamePipeline, Stints}
+import graft.nba.{Edges, GamePipeline}
 import graft.ops.{LongKeyJoin, TimeKernel}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge.cacheLeaf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,9 +28,20 @@ import org.apache.spark.sql.functions._
   *     x, y, dist, is_2pt, is_3pt, is_made]`, freethrow `[global_clock, local_clock,
   *     is_made]`, constant `[1.0]` for game/team/lineup/player.
   *
-  * Scale shape: every edge set is an equi-join or a single window; dense
-  * ids are one zipWithIndex over all node types
-  * ([[GraphExport.denseIdsByType]]); the final COO translation is two
+  * Plan shape: one pass per source frame. Each pass explodes a source
+  * row into typed structs — its node rows for the node table, its edge
+  * rows for the edge union — so a source is scanned once per table, not
+  * once per type or relation. The node table is five passes: one dedup
+  * over the game feed and the lineup stints (the types with the constant
+  * feature), then lineup stints, periods, player stints and the strict
+  * actor edges. The edge union is six: game feed, periods, one dedup over
+  * the lineup stints and the player-stint periods, player stints, strict
+  * actor edges, caused. Every codegen stage, exchange and aggregate a
+  * pass adds is planned and compiled once per export, so the pass count
+  * is what a cold export pays.
+  *
+  * Dense ids come from one sort of all node types and a per-partition
+  * count ([[GraphExport.denseIdsByType]]); the COO translation is two
   * hash joins against the node table, each on one hashed long key
   * ([[graft.ops.LongKeyJoin]]).
   */
@@ -40,236 +51,176 @@ object PyGExport {
     * edges = (rel_type, src_type, dst_type, src_id, dst_id, src_idx,
     * dst_idx). */
   def build(p: GamePipeline.Result, gameTeams: DataFrame): (DataFrame, DataFrame) = {
-    val stints = p.lineupStints
-    val ps = p.playerStints
-    val ev = p.attributedEvents
-
-    // Caching rule: `actor` and `coo` live as long as the export (a
-    // SessionCache entry), so they are cache leaves
-    // (GraftBridge.cacheLeaf) — every branch below analyzes one
-    // InMemoryRelation node, not the pipeline DAG behind it. `nodeInput`
-    // is unpersisted once the dense ids exist, so it keeps a plain
-    // `.cache()`.
-    //
-    // materialized eagerly: this frame feeds ~8 relation branches of one
-    // final plan — a lazy cache would be recomputed concurrently by each
-    // branch before any of them manages to populate it
-    val actor = cacheLeaf(Edges.actorEdges(ev, ps)
-      .filter(col("src_kind") === "player_stint"))
-    actor.count()
-
-    // exported action-node sets: only actions with a resolved PlayerStint
-    // actor (manager:519-653 query heads)
-    def actedOn(rel: String) = actor.filter(col("rel_type") === rel)
-      .select(col("dst_action_id").as("action_id")).distinct()
-    val foulNodes = ev.filter(col("action_type") === "foul")
-      .join(actedOn("COMMITTED_FOUL"), Seq("action_id"), "left_semi")
-    val tookShot = actedOn("TOOK_SHOT")
-    val shotNodes = ev.filter(col("is_shot"))
-      .join(tookShot, Seq("action_id"), "left_semi")
-    val ftNodes = ev.filter(col("is_freethrow"))
-      .join(tookShot, Seq("action_id"), "left_semi")
-
-    val one = array(lit(1.0))
-    def actionFeats(df: DataFrame, extra: Seq[org.apache.spark.sql.Column]) =
-      df.select(col("action_id").cast("string").as("node_id"),
-        array(Seq(col("global_clock"), TimeKernel.localClock(col("global_clock"))) ++
-          extra: _*).as("feats"),
-        col("action_id").as("__ord"))
-
-    // (node_type, node_id, feats, __ord) — __ord keeps numeric key types
-    // ordering numerically before ids become strings
-    val nodeParts: Seq[(String, DataFrame)] = Seq(
-      "game" -> gameTeams.select(col("game_id").cast("string").as("node_id"),
-        one.as("feats"), col("game_id").cast("double").as("__ord")),
-      "team" -> gameTeams
-        .select(explode(array(col("home_team_id"), col("away_team_id"))).as("t"))
-        .distinct()
-        .select(col("t").cast("string").as("node_id"), one.as("feats"),
-          col("t").cast("double").as("__ord")),
-      "period" -> p.periods.select(col("period_id").as("node_id"),
-        array(col("period").cast("double")).as("feats"), lit(0.0).as("__ord")),
-      "lineup" -> stints.select(col("lineup_id")).distinct()
-        .select(col("lineup_id").as("node_id"), one.as("feats"), lit(0.0).as("__ord")),
-      "player" -> stints
-        .select(explode(col("player_ids")).as("person_id")).distinct()
-        .select(col("person_id").cast("string").as("node_id"), one.as("feats"),
-          col("person_id").cast("double").as("__ord")),
-      "lineup_stint" -> stints.select(col("stint_id").as("node_id"),
-        array(col("start_clock"), TimeKernel.localClock(col("start_clock")),
-          col("end_clock") - col("start_clock")).as("feats"),
-        lit(0.0).as("__ord")),
-      "player_stint" -> ps.select(col("player_stint_id").as("node_id"),
-        array(col("start_clock"), TimeKernel.localClock(col("start_clock")),
-          col("end_clock") - col("start_clock")).as("feats"),
-        lit(0.0).as("__ord")),
-      "foul" -> actionFeats(foulNodes, Nil)
-        .select(col("node_id"), col("feats"), col("__ord").cast("double").as("__ord")),
-      "shot" -> actionFeats(shotNodes, Seq(col("x"), col("y"), col("dist"),
-        when(col("action_type") === "2pt", 1.0).otherwise(0.0),
-        when(col("action_type") === "3pt", 1.0).otherwise(0.0),
-        when(col("is_made"), 1.0).otherwise(0.0)))
-        .select(col("node_id"), col("feats"), col("__ord").cast("double").as("__ord")),
-      "freethrow" -> actionFeats(ftNodes,
-        Seq(when(col("is_made"), 1.0).otherwise(0.0)))
-        .select(col("node_id"), col("feats"), col("__ord").cast("double").as("__ord")))
-
-    // one sort + one zipWithIndex for ALL ten types (not 2 jobs per
-    // type); denseIdsByType returns a cached, already-materialized frame
-    // (and releases its zipWithIndex intermediate), so the COO
-    // translation's two scans (src + dst side) both hit the cache.
-    // The unioned input is cached first: the global orderBy inside
-    // denseIdsByType evaluates its child TWICE (range-partitioner
-    // sampling pass + sort pass), and this child is a 10-branch union
-    // with several joins — worth computing once
-    val nodeInput = nodeParts
-      .map { case (tpe, df) => df.withColumn("node_type", lit(tpe)) }
-      .reduce(_ unionByName _).cache()
+    // `actor`, `nodes` and `coo` live as long as the export (a
+    // SessionCache entry), so they are cache leaves (GraftBridge.cacheLeaf)
+    val actor = strictActorEdges(p)
     val nodes = GraphExport.denseIdsByType(
-      nodeInput, "node_type", Seq("__ord", "node_id"))
+      nodeRows(p, gameTeams, actor), "node_type", Seq("__ord", "node_id"))
       .select(col("node_type"), col("node_id"), col("dense_id"), col("feats"))
-    nodeInput.unpersist() // denseIdsByType materialized its result above
-
-    // ---- edge relations (natural keys; COO translation below) ----
-    // Lean assembly: every branch is map-only over a cached frame where
-    // possible; set-semantics dedup happens ONCE on the unioned edge list
-    // (all 19 relations are set-shaped); and the exported-node-set
-    // restrictions (drew/assisted/blocked/caused only into exported
-    // foul/shot/freethrow nodes) are enforced by the final INNER joins
-    // against the node table — no per-relation semi-joins.
-    def rel(relType: String, srcType: String, dstType: String,
-        df: DataFrame): DataFrame =
-      df.select(lit(relType).as("rel_type"), lit(srcType).as("src_type"),
-        lit(dstType).as("dst_type"),
-        col("src").cast("string").as("src_id"), col("dst").cast("string").as("dst_id"))
-
-    def edgeSt(relType: String, srcType: String, dstType: String,
-        src: org.apache.spark.sql.Column, dst: org.apache.spark.sql.Column) =
-      struct(lit(relType).as("rel_type"), lit(srcType).as("src_type"),
-        lit(dstType).as("dst_type"), src.cast("string").as("src_id"),
-        dst.cast("string").as("dst_id"))
-
-    // stint-sourced relations split by DEDUP NEED (r11, guide §2.3/§2.4):
-    // the four stint_id-keyed relations are duplicate-free by
-    // construction (one stint row ⇒ one edge each), so they bypass the
-    // set-dedup shuffle entirely; only has_lineup/member_of (repeated
-    // across stints of the same lineup) pay a distinct — over their own
-    // small key space, not the full 363k-row edge union.
-    val wLineup = Window.partitionBy(col("game_id"), col("lineup_id"))
-      .orderBy(col("start_clock"))
-    val wCourt = Window.partitionBy(col("game_id"), col("team_id"))
-      .orderBy(col("stint_index"))
-    val periodId = concat_ws("_", col("game_id"),
-      TimeKernel.periodOfClock(col("start_clock")))
-    val stintEdges = stints
-      .withColumn("next_same_lineup", lead(col("stint_id"), 1).over(wLineup))
-      .withColumn("next_on_court", lead(col("stint_id"), 1).over(wCourt))
-      .select(explode(array(
-          edgeSt("on_court", "lineup", "lineup_stint", col("lineup_id"), col("stint_id")),
-          edgeSt("in_period", "lineup_stint", "period", col("stint_id"), periodId),
-          edgeSt("next", "lineup_stint", "lineup_stint",
-            col("stint_id"), col("next_same_lineup")),
-          edgeSt("on_court_next", "lineup_stint", "lineup_stint",
-            col("stint_id"), col("next_on_court")))).as("e"))
-      .select(col("e.*"))
-      .filter(col("dst_id").isNotNull)
-    val stintMembershipEdges = stints
-      .select(explode(concat(
-        array(edgeSt("has_lineup", "team", "lineup",
-          col("team_id"), col("lineup_id"))),
-        transform(col("player_ids"), p =>
-          edgeSt("member_of", "player", "lineup", p, col("lineup_id"))))).as("e"))
-      .select(col("e.*"))
-      .filter(col("dst_id").isNotNull)
-      .distinct()
-
-    // player-stint-sourced relations: one window lead + membership explode
-    val wPlayer = Window.partitionBy(col("game_id"), col("person_id"))
-      .orderBy(col("start_clock"))
-    val psEdges = ps
-      .withColumn("next_ps", lead(col("player_stint_id"), 1).over(wPlayer))
-      .select(explode(concat(
-        array(
-          edgeSt("on_court", "player", "player_stint",
-            col("person_id"), col("player_stint_id")),
-          edgeSt("next", "player_stint", "player_stint",
-            col("player_stint_id"), col("next_ps"))),
-        transform(col("stint_ids"), ls =>
-          edgeSt("on_court_with", "player_stint", "lineup_stint",
-            col("player_stint_id"), ls)))).as("e"))
-      .select(col("e.*"))
-      .filter(col("dst_id").isNotNull)
-
-    // actor-sourced relations: rel_type renamed by a when-chain — 4
-    // relations, 1 branch (took_shot needs the shot/freethrow split, so
-    // it keeps its own small join)
-    val actorEdges = actor
-      .filter(col("rel_type").isin("COMMITTED_FOUL", "DREW_FOUL", "ASSISTED", "BLOCKED"))
-      .select(
-        when(col("rel_type") === "COMMITTED_FOUL", "committed_foul")
-          .when(col("rel_type") === "DREW_FOUL", "drew_foul")
-          .when(col("rel_type") === "ASSISTED", "assisted")
-          .otherwise(lit("blocked")).as("rel_type"),
-        lit("player_stint").as("src_type"),
-        when(col("rel_type").isin("COMMITTED_FOUL", "DREW_FOUL"), "foul")
-          .otherwise(lit("shot")).as("dst_type"),
-        col("src_id"),
-        col("dst_action_id").cast("string").as("dst_id"))
-
-    val tookShotEdges = actor.filter(col("rel_type") === "TOOK_SHOT")
-      .join(ev.select(col("action_id").as("dst_action_id"), col("is_freethrow")),
-        Seq("dst_action_id"))
-      .select(lit("took_shot").as("rel_type"), lit("player_stint").as("src_type"),
-        when(col("is_freethrow"), "freethrow").otherwise(lit("shot")).as("dst_type"),
-        col("src_id"), col("dst_action_id").cast("string").as("dst_id"))
-
-    // ps -> period: membership routed through the stint's period
-    val stintPeriod = stints.select(col("stint_id"), periodId.as("period_id"))
-    val psPeriodEdges = rel("in_period", "player_stint", "period", LongKeyJoin(ps
-      .select(col("player_stint_id").as("src"), explode(col("stint_ids")).as("stint_id")),
-        stintPeriod, Seq("stint_id"), "inner", guard = "period_id")
-      .select(col("src"), col("period_id").as("dst")))
-
-    // Branch-level set semantics replace the former GLOBAL distinct over
-    // the whole edge union: every (rel_type, src_type, dst_type) combo
-    // comes from exactly one branch, so union-all of internally-distinct
-    // branches IS the distinct union — and the duplicate-free branches
-    // (unique stint_id / player_stint_id / period_id / game row per edge
-    // by construction) never enter a dedup shuffle at all. Dup-capable
-    // branches (membership fan-outs, action-actor resolutions) keep
-    // their own distinct over a far smaller frame.
-    val edges: Seq[DataFrame] = Seq(
-      gameTeams.select(explode(array(
-        edgeSt("played_home", "team", "game", col("home_team_id"), col("game_id")),
-        edgeSt("played_away", "team", "game", col("away_team_id"), col("game_id"))))
-        .as("e")).select(col("e.*")),
-      rel("in_game", "period", "game", p.periods
-        .select(col("period_id").as("src"), col("game_id").as("dst"))),
-      stintEdges, stintMembershipEdges, psEdges,
-      psPeriodEdges.distinct(), actorEdges.distinct(), tookShotEdges.distinct(),
-      rel("caused", "foul", "freethrow",
-        Edges.caused(ev)
-          .select(col("src_action_id").as("src"), col("dst_action_id").as("dst")))
-        .distinct())
 
     val idx = nodes.select(col("node_type"), col("node_id"), col("dense_id"))
-    val allEdges = edges.reduce(_ unionByName _)
     val src = idx.select(col("node_type").as("src_type"), col("node_id").as("src_id"),
       col("dense_id").as("src_idx"))
     val dst = idx.select(col("node_type").as("dst_type"), col("node_id").as("dst_id"),
       col("dense_id").as("dst_idx"))
-    // cached: the COO frame is the product of the whole edge assembly —
-    // three consumers (edge export, node-feature query, BFS analytics)
-    // each re-deriving it would pay the full union+distinct+join chain.
-    // The (type, id) string lookups, like psPeriodEdges' stint_id join,
-    // go through LongKeyJoin: broadcast on their natural keys, each would
-    // pin a 32 MB hash-map page for as long as this leaf lives
-    val withSrc = LongKeyJoin(allEdges, src, Seq("src_type", "src_id"), "inner",
-      guard = "src_idx")
+    // Cached: three consumers (edge export, node-feature query, BFS
+    // analytics) read it. The inner joins against the node table also
+    // enforce the exported-node restrictions (drew/assisted/blocked/
+    // caused only into exported foul/shot/freethrow nodes). The
+    // (type, id) string lookups go through LongKeyJoin: broadcast on
+    // their natural keys, each would pin a 32 MB hash-map page for as
+    // long as this leaf lives.
+    val withSrc = LongKeyJoin(edgeRows(p, gameTeams, actor), src,
+      Seq("src_type", "src_id"), "inner", guard = "src_idx")
     val coo = cacheLeaf(LongKeyJoin(withSrc, dst, Seq("dst_type", "dst_id"), "inner",
         guard = "dst_idx")
       .select(col("rel_type"), col("src_type"), col("dst_type"),
         col("src_id"), col("dst_id"), col("src_idx"), col("dst_idx")))
     (nodes, coo)
+  }
+
+  /** Actor edges resolved to a player stint (the exporter's query heads),
+    * each carrying its action's node type (`action_kind`: foul, shot or
+    * freethrow; null for other actions) and feature vector (`action_feats`),
+    * so the action nodes and the five action relations are map-only
+    * passes over this leaf. The node table's dense-id sort fills it; the
+    * edge union, planned after, reads it. */
+  private[graph] def strictActorEdges(p: GamePipeline.Result): DataFrame = {
+    val clocks = Seq(col("global_clock"), TimeKernel.localClock(col("global_clock")))
+    val made = when(col("is_made"), 1.0).otherwise(0.0)
+    val kind = when(col("action_type") === "foul", "foul")
+      .when(col("is_shot"), "shot")
+      .when(col("is_freethrow"), "freethrow")
+    val feats = when(col("action_type") === "foul", array(clocks: _*))
+      .when(col("is_shot"), array(clocks ++ Seq(col("x"), col("y"), col("dist"),
+        when(col("action_type") === "2pt", 1.0).otherwise(0.0),
+        when(col("action_type") === "3pt", 1.0).otherwise(0.0), made): _*))
+      .when(col("is_freethrow"), array(clocks :+ made: _*))
+    val ev = p.attributedEvents
+      .withColumn("action_kind", kind).withColumn("action_feats", feats)
+    cacheLeaf(Edges.actorEdges(ev, p.playerStints, carry = Seq("action_kind", "action_feats"))
+      .filter(col("src_kind") === "player_stint"))
+  }
+
+  /** (node_type, node_id, feats, __ord): one pass per source. `__ord`
+    * orders numeric keys numerically before ids become strings. */
+  private[graph] def nodeRows(p: GamePipeline.Result, gameTeams: DataFrame,
+      actor: DataFrame): DataFrame = {
+    def key(tpe: String, id: Column, ord: Column) =
+      struct(lit(tpe).as("node_type"), id.cast("string").as("node_id"),
+        ord.cast("double").as("__ord"))
+    def node(tpe: Column, id: Column, feats: Column, ord: Column) =
+      struct(tpe.as("node_type"), id.cast("string").as("node_id"),
+        feats.as("feats"), ord.cast("double").as("__ord"))
+    def rows(df: DataFrame, nodes: Column) =
+      df.select(explode(nodes).as("n")).select(col("n.*"))
+    val stintFeats = array(col("start_clock"), TimeKernel.localClock(col("start_clock")),
+      col("end_clock") - col("start_clock"))
+    Seq(
+      // games, teams, lineups and players carry the constant feature and
+      // repeat (a team plays several games, a lineup and a player span
+      // several stints): one dedup over their keys
+      rows(gameTeams, array(key("game", col("game_id"), col("game_id")),
+          key("team", col("home_team_id"), col("home_team_id")),
+          key("team", col("away_team_id"), col("away_team_id"))))
+        .unionByName(rows(p.lineupStints, concat(
+          array(key("lineup", col("lineup_id"), lit(0.0))),
+          transform(col("player_ids"), pid => key("player", pid, pid)))))
+        .distinct().withColumn("feats", array(lit(1.0))),
+      rows(p.lineupStints, array(node(lit("lineup_stint"), col("stint_id"), stintFeats,
+        lit(0.0)))),
+      rows(p.periods, array(node(lit("period"), col("period_id"),
+        array(col("period").cast("double")), lit(0.0)))),
+      rows(p.playerStints, array(node(lit("player_stint"), col("player_stint_id"),
+        stintFeats, lit(0.0)))),
+      // COMMITTED_FOUL heads the foul nodes, TOOK_SHOT the shot and
+      // freethrow nodes; each action has at most one such edge
+      rows(actor.filter(col("rel_type").isin("COMMITTED_FOUL", "TOOK_SHOT")),
+        array(node(col("action_kind"), col("dst_action_id"), col("action_feats"),
+          col("dst_action_id")))))
+      .reduce(_ unionByName _)
+  }
+
+  /** (rel_type, src_type, dst_type, src_id, dst_id) on natural keys: one
+    * pass per source. Every (rel_type, src_type, dst_type) comes from one
+    * pass, so the union is distinct when each pass is: the passes whose
+    * rows repeat (membership fan-outs, periods reached through several
+    * stints) share one dedup, the rest are duplicate-free by construction
+    * (one stint, player stint, period, game or action row per edge). */
+  private[graph] def edgeRows(p: GamePipeline.Result, gameTeams: DataFrame,
+      actor: DataFrame): DataFrame = {
+    def typedEdge(relType: Column, srcType: String, dstType: Column,
+        src: Column, dst: Column) =
+      struct(relType.as("rel_type"), lit(srcType).as("src_type"),
+        dstType.as("dst_type"), src.cast("string").as("src_id"),
+        dst.cast("string").as("dst_id"))
+    def edge(relType: String, srcType: String, dstType: String,
+        src: Column, dst: Column) = typedEdge(lit(relType), srcType, lit(dstType), src, dst)
+    def rows(df: DataFrame, edges: Column) =
+      df.select(explode(edges).as("e")).select(col("e.*"))
+        .filter(col("dst_id").isNotNull)
+
+    val stints = p.lineupStints
+    val ps = p.playerStints
+    val periodId = concat_ws("_", col("game_id"),
+      TimeKernel.periodOfClock(col("start_clock")))
+    val wLineup = Window.partitionBy(col("game_id"), col("lineup_id"))
+      .orderBy(col("start_clock"))
+    // The court-order and player-run chains need no window: a stint id is
+    // game_team_index and a player stint id game_person_run
+    // (graft.nba.Stints), both numbered consecutively, so the next link
+    // is the id one up. A chain's last link names an id no node has, and
+    // the COO lookup's inner join drops it.
+    val nextOnCourt = TimeKernel.compositeKey(col("game_id"), col("team_id"),
+      col("stint_index") + 1)
+    val nextRun = TimeKernel.compositeKey(col("game_id"), col("person_id"),
+      col("run_id") + 1)
+    // ps -> period: membership routed through the stint's period
+    val psPeriods = LongKeyJoin(
+      ps.select(col("player_stint_id"), explode(col("stint_ids")).as("stint_id")),
+      stints.select(col("stint_id"), periodId.as("period_id")),
+      Seq("stint_id"), "inner", guard = "period_id")
+
+    Seq(
+      rows(gameTeams, array(
+        edge("played_home", "team", "game", col("home_team_id"), col("game_id")),
+        edge("played_away", "team", "game", col("away_team_id"), col("game_id")))),
+      rows(p.periods, array(
+        edge("in_game", "period", "game", col("period_id"), col("game_id")))),
+      // has_lineup/member_of repeat across the stints of one lineup, and
+      // a player stint spans several stints of one period: these two
+      // passes share one dedup
+      rows(stints.withColumn("next_same_lineup", lead(col("stint_id"), 1).over(wLineup)),
+        concat(array(
+          edge("on_court", "lineup", "lineup_stint", col("lineup_id"), col("stint_id")),
+          edge("in_period", "lineup_stint", "period", col("stint_id"), periodId),
+          edge("next", "lineup_stint", "lineup_stint",
+            col("stint_id"), col("next_same_lineup")),
+          edge("on_court_next", "lineup_stint", "lineup_stint", col("stint_id"), nextOnCourt),
+          edge("has_lineup", "team", "lineup", col("team_id"), col("lineup_id"))),
+          transform(col("player_ids"), pid =>
+            edge("member_of", "player", "lineup", pid, col("lineup_id")))))
+        .unionByName(rows(psPeriods, array(edge("in_period", "player_stint", "period",
+          col("player_stint_id"), col("period_id")))))
+        .distinct(),
+      rows(ps,
+        concat(array(
+          edge("on_court", "player", "player_stint",
+            col("person_id"), col("player_stint_id")),
+          edge("next", "player_stint", "player_stint", col("player_stint_id"), nextRun)),
+          transform(col("stint_ids"), ls =>
+            edge("on_court_with", "player_stint", "lineup_stint",
+              col("player_stint_id"), ls)))),
+      // the action's kind is the edge's dst type: fouls for
+      // committed/drew_foul, shots for assisted/blocked, shot or
+      // freethrow for took_shot
+      rows(actor.filter(col("rel_type").isin(
+          "COMMITTED_FOUL", "DREW_FOUL", "ASSISTED", "BLOCKED", "TOOK_SHOT")),
+        array(typedEdge(lower(col("rel_type")), "player_stint", col("action_kind"),
+          col("src_id"), col("dst_action_id")))),
+      // one foul per free throw
+      rows(Edges.caused(p.attributedEvents), array(edge("caused", "foul", "freethrow",
+        col("src_action_id"), col("dst_action_id")))))
+      .reduce(_ unionByName _)
   }
 }

@@ -30,10 +30,12 @@ object Edges {
       rel: String, filter: Column, person: Column, stint: Column,
       fallback: Boolean)
 
-  /** (rel_type, src_id, dst_action_id, src_kind) for the 13 actor
-    * relations. `events` must be the attributed stream (carrying
-    * `lineup_stint_id` / `opp_lineup_stint_id`). */
-  def actorEdges(events: DataFrame, playerStints: DataFrame): DataFrame = {
+  /** (game_id, rel_type, src_id, src_kind, dst_action_id) for the 13
+    * actor relations, then the `carry` columns of each edge's action.
+    * `events` must be the attributed stream (carrying `lineup_stint_id` /
+    * `opp_lineup_stint_id`). */
+  def actorEdges(events: DataFrame, playerStints: DataFrame,
+      carry: Seq[String] = Nil): DataFrame = {
     val t = col("action_type")
     val ls = col("lineup_stint_id")
     val ols = col("opp_lineup_stint_id")
@@ -69,10 +71,10 @@ object Edges {
         s.stint.as("side_stint"), lit(s.fallback).as("fb"))))
 
     val tall = events
-      .select(col("game_id"), col("action_id"),
-        explode(array(candidates: _*)).as("c"))
+      .select(Seq(col("game_id"), col("action_id")) ++ carry.map(col) :+
+        explode(array(candidates: _*)).as("c"): _*)
       .filter(col("c").isNotNull)
-      .select(col("game_id"), col("action_id"), col("c.*"))
+      .select(Seq(col("game_id"), col("action_id"), col("c.*")) ++ carry.map(col): _*)
 
     val membership = playerStints.select(
       col("game_id"), col("person_id").as("actor"),
@@ -81,12 +83,12 @@ object Edges {
     // the PyG export caches these edges: a composite build key would pin a page
     LongKeyJoin(tall, membership, Seq("game_id", "actor", "side_stint"),
         "left_outer", guard = "player_stint_id")
-      .select(col("game_id"), col("rel_type"),
+      .select(Seq(col("game_id"), col("rel_type"),
         coalesce(col("player_stint_id"),
           when(col("fb"), col("side_stint"))).as("src_id"),
         when(col("player_stint_id").isNotNull, "player_stint")
           .otherwise(lit("lineup_stint")).as("src_kind"),
-        col("action_id").as("dst_action_id"))
+        col("action_id").as("dst_action_id")) ++ carry.map(col): _*)
       .filter(col("src_id").isNotNull)
   }
 
@@ -107,14 +109,18 @@ object Edges {
       .filter(col("action_type") === "foul" || col("is_freethrow"))
       .select(col("game_id"), col("global_clock"), col("action_id"),
         (col("action_type") === "foul").as("is_foul"))
-    val clockW = Window.partitionBy(col("game_id"), col("global_clock"))
-    val runW = clockW.orderBy(col("action_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // one select, so both frames are one Window operator
+    val byId = Window.partitionBy(col("game_id"), col("global_clock"))
+      .orderBy(col("action_id"))
+    val foulId = when(col("is_foul"), col("action_id"))
     rows
-      .withColumn("prev_foul",
-        last(when(col("is_foul"), col("action_id")), ignoreNulls = true).over(runW))
-      .withColumn("first_foul",
-        min(when(col("is_foul"), col("action_id"))).over(clockW))
+      .select(col("*"),
+        last(foulId, ignoreNulls = true)
+          .over(byId.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+          .as("prev_foul"),
+        min(foulId)
+          .over(byId.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+          .as("first_foul"))
       .filter(!col("is_foul"))
       .select(col("game_id"), lit("CAUSED").as("rel_type"),
         coalesce(col("prev_foul"), col("first_foul")).as("src_action_id"),

@@ -19,9 +19,13 @@ object GamePipeline {
       attributedEvents: DataFrame,
       scoreChain: DataFrame,
       stintPlusMinus: DataFrame,
-      playerPlusMinus: DataFrame,
       reboundLinks: DataFrame,
-      timeline: DataFrame)
+      timeline: DataFrame) {
+    /** Planned on first use: `cache()` plans a leaf eagerly, and only q62
+      * and the SQL surface read this one. */
+    lazy val playerPlusMinus: DataFrame =
+      cacheLeaf(Scores.playerPlusMinus(playerStints, stintPlusMinus))
+  }
 
   def run(
       spark: SparkSession,
@@ -70,11 +74,11 @@ object GamePipeline {
     // chain is consumed by the score query, the season invariant and the
     // streaming twin's oracle — cache the 1-row-per-score frame.
     // Stint plus-minus feeds q60, q63, the player roll-up and the SQL
-    // surface, player plus-minus feeds q62: cached, a warm re-query is one
-    // scan of the leaf instead of the aggregate and its joins again.
+    // surface, player plus-minus (a lazy Result member) feeds q62: cached,
+    // a warm re-query is one scan of the leaf instead of the aggregate and
+    // its joins again.
     val chain = cacheLeaf(Scores.scoreChain(attributed, gameTeams))
     val stintPm = cacheLeaf(Scores.stintPlusMinus(attributed, lineupStints))
-    val playerPm = cacheLeaf(Scores.playerPlusMinus(playerStints, stintPm))
 
     Result(
       periods = periods,
@@ -83,7 +87,6 @@ object GamePipeline {
       attributedEvents = attributed,
       scoreChain = chain,
       stintPlusMinus = stintPm,
-      playerPlusMinus = playerPm,
       reboundLinks = Events.reboundOf(events),
       timeline = Events.timeline(events))
   }

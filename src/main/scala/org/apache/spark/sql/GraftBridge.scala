@@ -53,28 +53,28 @@ object GraftBridge {
     dataset(spark, entry.cachedRepresentation.withOutput(ds.queryExecution.analyzed.output))
   }
 
-  /** `zipWithIndex` without the external-Row round trip: the input plan's
-    * `toRdd` (UnsafeRow) is zipped and re-wrapped via
+  /** `df` plus one non-null long column, computed per partition over
+    * the query's internal rows: `f(partitionIndex)` gives the function
+    * applied to each row of that partition, in order. No external-Row
+    * round trip: the input plan's `toRdd` (UnsafeRow) is re-wrapped via
     * `internalCreateDataFrame` (`private[sql]`), skipping both the
     * catalyst→Row and Row→catalyst per-row conversions that
     * `df.rdd`/`createDataFrame` pay — measurable on wide rows (the PyG
     * node table carries feature arrays through its dense-id sort).
     * UnsafeRows are buffer-reused per partition, hence the `copy()`. */
-  def zipWithIndexColumn(df: DataFrame, idxCol: String): DataFrame = {
+  def withLongColumn(df: DataFrame, name: String)(
+      f: Int => org.apache.spark.sql.catalyst.InternalRow => Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val spark = ds.sparkSession
     val schema = org.apache.spark.sql.types.StructType(df.schema.fields :+
-      org.apache.spark.sql.types.StructField(idxCol,
+      org.apache.spark.sql.types.StructField(name,
         org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = ds.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
-      it.map { case (r, i) =>
-        new org.apache.spark.sql.catalyst.expressions.JoinedRow(
-          r.copy(),
-          org.apache.spark.sql.catalyst.InternalRow(i))
-          : org.apache.spark.sql.catalyst.InternalRow
-      }
+    val rdd = ds.queryExecution.toRdd.mapPartitionsWithIndex { (p, it) =>
+      val g = f(p)
+      it.map(r => new org.apache.spark.sql.catalyst.expressions.JoinedRow(
+        r.copy(), InternalRow(g(r))): InternalRow)
     }
-    spark.internalCreateDataFrame(rdd, schema)
+    ds.sparkSession.internalCreateDataFrame(rdd, schema)
   }
 
   /** For a cached Dataset held behind a [[java.lang.ref.SoftReference]]

@@ -174,6 +174,37 @@ class GraphExportSpec extends AnyFunSuite {
     assert(coo.select("rel_type", "src_id", "dst_id").distinct().count() == coo.count())
   }
 
+  test("PyG export plan shape: one pass per source, six exchanges in the coo leaf") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Union}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val gameTeams = Fixture.gameTeams(spark)
+    val actor = PyGExport.strictActorEdges(result)
+    // the inputs of every Union: the passes, plus the two sources that
+    // share one dedup
+    def unionInputs(df: DataFrame) = df.queryExecution.optimizedPlan
+      .collect { case u: Union => u.children.size }.sum
+    def dedups(df: DataFrame) = df.queryExecution.optimizedPlan
+      .collect { case a: Aggregate => a }.size
+    val nodeRows = PyGExport.nodeRows(result, gameTeams, actor)
+    val edgeRows = PyGExport.edgeRows(result, gameTeams, actor)
+    assert(unionInputs(nodeRows) <= 7, nodeRows.queryExecution.optimizedPlan.treeString)
+    assert(unionInputs(edgeRows) <= 8, edgeRows.queryExecution.optimizedPlan.treeString)
+    assert(dedups(nodeRows) <= 1 && dedups(edgeRows) <= 1)
+
+    // the coo leaf's cached plan: the lineup window, the edge dedup and
+    // the caused window shuffle; the stint-period lookup and the two COO
+    // lookups broadcast
+    val (_, coo) = pyg
+    graft.Force(coo)
+    val cached = coo.queryExecution.analyzed.asInstanceOf[InMemoryRelation]
+      .cacheBuilder.cachedPlan
+    object stages extends AdaptiveSparkPlanHelper
+    val exchanges = stages.collect(cached) { case e: Exchange => e.nodeName }
+    assert(exchanges.size <= 6, exchanges.mkString("\n") + "\n" + cached.treeString)
+  }
+
   test("PyG export: nodes/coo sit on InMemoryRelation leaves; q64/q69 plans stay small") {
     import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
