@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One registered engine query: a Spark program over the testdata tables
-  * plus (when SQL-expressible) an equivalent DuckDB oracle query. The
-  * driver hash-compares both at sf0.01 (BASELINE.md correctness contract).
+  * plus an equivalent DuckDB oracle query. The driver hash-compares both
+  * at sf0.01 (BASELINE.md correctness contract).
   *
   * Determinism rules every query follows so Spark and DuckDB hash-match:
   *   - every output column is explicitly aliased, same name both sides;
@@ -19,15 +19,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
+    oracle: String,
     doc: String = "")
 
 object Q {
   def sql(name: String, oracle: String, doc: String = "")(
       run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, Some(oracle), doc)
-
-  def rowsOnly(name: String, doc: String = "")(
-      run: (SparkSession, String) => DataFrame): Q =
-    Q(name, run, None, doc)
+    Q(name, run, oracle, doc)
 }

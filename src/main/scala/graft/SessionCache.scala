@@ -26,8 +26,8 @@ import org.apache.spark.sql.SparkSession
   *    through a [[java.lang.ref.SoftReference]] ([[once]]). Soft, not
   *    weak, deliberately: a weakly-held frame is cleared at the first
   *    GC after the query that used it returns, and a rebuild is NOT
-  *    free — plans holding a `LogicalRDD` (the `zipWithIndex` dense-id
-  *    exports, the typed game pipeline) never canonicalize equal to
+  *    free — plans holding a `LogicalRDD` (the PyG export's dense
+  *    ids, the typed game pipeline) never canonicalize equal to
   *    their previous incarnation, so the session `CacheManager` cannot
   *    resurrect the materialized data and the whole build re-runs (a
   *    measured 3.7 s → 15 s regression on the BFS query when this was

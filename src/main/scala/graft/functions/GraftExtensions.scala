@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.types.IntegerType
 
 /** `SparkSessionExtensions` hook registering graft's native Catalyst
-  * expressions as SQL functions, so the pure-SQL surface
-  * ([[graft.SqlSurface]]) reaches them exactly like the DataFrame one:
+  * expressions as SQL functions, so `spark.sql` reaches them exactly
+  * like the DataFrame API does:
   *
   * {{{
   *   SELECT kmv_estimate(h, 16) FROM hashes        -- mergeable KMV sketch

@@ -3,7 +3,8 @@ package graft.graph
 import graft.nba.{Edges, GamePipeline}
 import graft.ops.{LongKeyJoin, TimeKernel}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.GraftBridge.cacheLeaf
+import org.apache.spark.sql.GraftBridge.{cacheLeaf, withLongColumn}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,7 +42,7 @@ import org.apache.spark.sql.functions._
   * is what a cold export pays.
   *
   * Dense ids come from one sort of all node types and a per-partition
-  * count ([[GraphExport.denseIdsByType]]); the COO translation is two
+  * count ([[denseIdsByType]]); the COO translation is two
   * hash joins against the node table, each on one hashed long key
   * ([[graft.ops.LongKeyJoin]]).
   */
@@ -54,7 +55,7 @@ object PyGExport {
     // `actor`, `nodes` and `coo` live as long as the export (a
     // SessionCache entry), so they are cache leaves (GraftBridge.cacheLeaf)
     val actor = strictActorEdges(p)
-    val nodes = GraphExport.denseIdsByType(
+    val nodes = denseIdsByType(
       nodeRows(p, gameTeams, actor), "node_type", Seq("__ord", "node_id"))
       .select(col("node_type"), col("node_id"), col("dense_id"), col("feats"))
 
@@ -77,6 +78,53 @@ object PyGExport {
       .select(col("rel_type"), col("src_type"), col("dst_type"),
         col("src_id"), col("dst_id"), col("src_idx"), col("dst_idx")))
     (nodes, coo)
+  }
+
+  /** Dense ids 0..n-1 per node type, in one pass over all types: sort
+    * the node table by (type, orderCols), then one job counts each
+    * partition's rows and notes where each type begins in it. Prefix
+    * sums of the counts give every row its global position, and a row's
+    * dense id is that position minus its type's first position. The sort
+    * makes the ids deterministic: same input, same ids (SURVEY §7.4.5's
+    * stability requirement), and no single-partition window, so the
+    * export scales past one reducer per type. The per-type offsets (one
+    * per type) travel in the closure: a broadcast join keyed on the type
+    * string would pin a 32 MB hash-map page inside the leaf's plan for 10
+    * rows. Both jobs read the one sorted RDD, so the sort's shuffle is
+    * written once.
+    *
+    * The returned frame is an already-materialized cache leaf
+    * (`GraftBridge.cacheLeaf`; callers scan it at least twice — src +
+    * dst side of every COO translation). Its cache lives as long as the
+    * session's cache does: `unpersist()` on the leaf releases nothing. */
+  private[graph] def denseIdsByType(df: DataFrame, typeCol: String,
+      orderCols: Seq[String]): DataFrame = {
+    val sorted = df.filter(col(typeCol).isNotNull) // an untyped row gets no id
+      .orderBy((typeCol +: orderCols).map(col): _*)
+    val t = sorted.schema.fieldIndex(typeCol)
+    val dt = sorted.schema(t).dataType
+    val typeOf = (r: InternalRow) => CatalystTypeConverters.convertToScala(r.get(t, dt), dt)
+    // per partition: its row count and the (type, local index) of each type's first row
+    val parts = sorted.queryExecution.toRdd.mapPartitions { rows =>
+      val starts = scala.collection.mutable.ArrayBuffer.empty[(Any, Long)]
+      var n = 0L
+      rows.foreach { r =>
+        val v = typeOf(r)
+        if (starts.isEmpty || starts.last._1 != v) starts += v -> n
+        n += 1
+      }
+      Iterator(n -> starts.toSeq)
+    }.collect()
+    val base = parts.map(_._1).scanLeft(0L)(_ + _)
+    val first = parts.zip(base).toSeq
+      .flatMap { case ((_, starts), b) => starts.map { case (v, i) => v -> (b + i) } }
+      .groupMapReduce(_._1)(_._2)(math.min)
+    val out = cacheLeaf(withLongColumn(sorted, "dense_id") { p =>
+      var pos = base(p) - 1
+      r => { pos += 1; pos - first(typeOf(r)) }
+    })
+    graft.Force(out)
+    out
   }
 
   /** Actor edges resolved to a player stint (the exporter's query heads),

@@ -1,18 +1,13 @@
 package graft.graph
 
-import org.apache.spark.graphx.{EdgeDirection, Graph, VertexId}
+import org.apache.spark.graphx.{EdgeDirection, Graph}
 
-/** GraphX traversal analytics over the engine's linked-list chains — the
-  * in-engine form of the reference's "doubly-linked list of events"
-  * navigation (`/root/reference/docs/index.md:119-122`).
+/** GraphX traversal analytics over the exported hetero graph — the
+  * in-engine form of the reference's graph navigation
+  * (`/root/reference/docs/index.md:119-122`).
   */
 object Traversals {
 
-  /** Distance of every vertex from a chain head (in-degree 0) along
-    * directed NEXT edges, via Pregel: chain heads start at 0, successors
-    * converge to head-distance. Linear chains converge in chain-length
-    * supersteps; on a 1000-executor cluster each superstep is one
-    * partitioned join — no driver-side iteration over elements. */
   /** Multi-source BFS hop depth via Pregel, edges treated as UNDIRECTED:
     * vertices satisfying `isSource` start at 0, everything else converges
     * to its minimum hop distance. Each stored edge carries messages both
@@ -40,20 +35,5 @@ object Traversals {
         fwd ++ bwd
       },
       math.min)
-  }
-
-  def chainDepth[V: scala.reflect.ClassTag](graph: Graph[V, String]): Graph[Long, String] = {
-    val inDeg = graph.inDegrees
-    val init: Graph[Long, String] = graph
-      .outerJoinVertices(inDeg) { (_, _, d) => d.getOrElse(0) }
-      .mapVertices((_, d) => if (d == 0) 0L else Long.MaxValue)
-    init.pregel(Long.MaxValue, activeDirection = EdgeDirection.Out)(
-      (_, cur, incoming) => math.min(cur, incoming),
-      triplet =>
-        if (triplet.srcAttr != Long.MaxValue &&
-            triplet.srcAttr + 1 < triplet.dstAttr)
-          Iterator((triplet.dstId, triplet.srcAttr + 1))
-        else Iterator.empty,
-      (a, b) => math.min(a, b))
   }
 }

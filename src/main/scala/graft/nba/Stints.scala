@@ -159,17 +159,6 @@ object Stints {
         TimeKernel.compositeKey(col("game_id"), col("person_id"), col("run_id")))
   }
 
-  /** The `ON_COURT_NEXT` / stint `NEXT` chains (reference W1,
-    * `game.py:127-129, 184-205`) with their clock-delta edge property. */
-  def stintChains(lineupStints: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("game_id"), col("team_id")).orderBy(col("stint_index"))
-    lineupStints.select(
-      col("game_id"), col("team_id"), col("stint_id"),
-      lead(col("stint_id"), 1).over(w).as("next_stint_id"),
-      (lead(col("start_clock"), 1).over(w) - col("start_clock")).as("clock_delta"))
-      .filter(col("next_stint_id").isNotNull)
-  }
-
   /** Extract the substitution stream from raw PBP (reference F2 filter,
     * `src/managers/game.py:84-87`): `sub_type` in/out → is_in. */
   def subEvents(spark: SparkSession, pbp: Dataset[PbpAction]): Dataset[SubEvent] = {

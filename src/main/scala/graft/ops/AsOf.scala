@@ -98,27 +98,4 @@ object AsOf {
       .select(col("__ev.*") +:
         payload.map(c => when(inTol, col(s"__f_$c")).as(c)): _*)
   }
-
-  /** The direct equi+range interval join (J5 as literally written in the
-    * reference): events matched to state intervals `[start, end)` on equal
-    * keys. Catalyst plans this as a hash/sort-merge join on `keys` with the
-    * band as a post-join filter — correct, and fine when intervals tile
-    * time (each event matches exactly one interval). Kept as the simple
-    * formulation and as a cross-check of [[join]] in tests.
-    */
-  def intervalJoin(
-      events: DataFrame,
-      intervals: DataFrame,
-      keys: Seq[String],
-      eventTime: String,
-      startCol: String,
-      endCol: String): DataFrame = {
-    val renamed = keys.foldLeft(intervals)((d, k) => d.withColumnRenamed(k, s"__ik_$k"))
-    val cond = keys
-      .map(k => events(k) === renamed(s"__ik_$k"))
-      .reduce(_ && _) &&
-      events(eventTime) >= renamed(startCol) &&
-      events(eventTime) < renamed(endCol)
-    events.join(renamed, cond, "inner").drop(keys.map(k => s"__ik_$k"): _*)
-  }
 }

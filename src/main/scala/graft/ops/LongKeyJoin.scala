@@ -49,7 +49,7 @@ object LongKeyJoin {
     // two frames derived from one cache leaf): Spark re-instances one side
     // and rejects the stale reference as ambiguous.
     val l = left.withColumn(LKey, longKey(keys))
-    val r = right.select(right.columns.map(c => right(c).as(renamed(c))): _*)
+    val r = right.select(right.columns.toIndexedSeq.map(c => right(c).as(renamed(c))): _*)
       .withColumn(RKey, longKey(keys.map(renamed)))
     val collided = ref(renamed(keys.head)).isNotNull &&
       !keys.map(k => ref(k) === ref(renamed(k))).reduce(_ && _)

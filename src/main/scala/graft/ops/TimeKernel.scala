@@ -3,8 +3,8 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Scalar time/clock kernel (reference §2.8): ISO-8601 game-clock parsing,
-  * OT-aware clock math and sentinel handling, as pure column expressions —
+/** Scalar time/clock kernel (reference §2.8): ISO-8601 game-clock parsing
+  * and OT-aware clock math, as pure column expressions —
   * fully codegen'd by Catalyst, zero UDFs.
   */
 object TimeKernel {
@@ -45,11 +45,6 @@ object TimeKernel {
   /** Seconds into the containing period (the reference's `local_clock`). */
   def localClock(clock: Column): Column =
     clock - periodStartOffset(periodOfClock(clock))
-
-  /** Sentinel `-1` → real null (reference F10: `fillna(-1)` at
-    * `/root/reference/src/fetcher.py:115` undone at
-    * `src/managers/game.py:222-258`). */
-  def sentinelToNull(c: Column): Column = when(c === -1, lit(null)).otherwise(c)
 
   /** Composite string key by `_`-concatenation (reference §1.4 id builders,
     * e.g. `game.py:17`, `game.py:213-215`). */

@@ -925,7 +925,8 @@ object Domain {
       val types = Seq("game", "team", "period", "lineup", "player",
         "lineup_stint", "player_stint", "foul", "shot", "freethrow")
       val ti = types.zipWithIndex.toMap
-      val off = graft.graph.GraphExport.TypeOffset
+      // global vertex id = type index * 2^40 + dense id: types never collide
+      val off = 1L << 40
       val vs = nodes.select(col("node_type"), col("node_id"), col("dense_id"))
         .rdd.map { r =>
           (ti(r.getString(0)).toLong * off + r.getLong(2)) ->

@@ -22,7 +22,7 @@ object Embeddings {
 
   /** DuckDB-side dot product matching [[Vectors.dot]] bit-for-bit:
     * cast-to-double products, strict left fold. */
-  private def duckDot(a: String, b: String, dim: Int = 64): String =
+  private def duckDot(a: String, b: String, dim: Int): String =
     s"list_reduce([CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE) for i in range(1, ${dim + 1})], (x, y) -> x + y)"
   private def duckCos(a: String, b: String, dim: Int = 64): String =
     s"${duckDot(a, b, dim)} / (sqrt(${duckDot(a, a, dim)}) * sqrt(${duckDot(b, b, dim)}))"
@@ -1152,9 +1152,9 @@ object Embeddings {
   val q155RankFusion: Q = Q.sql(
     "q155_rank_fusion",
     s"""WITH a AS (
-       |${q30CosineTopK.oracle.get}
+       |${q30CosineTopK.oracle}
        |), b AS (
-       |${q92QuantizedAnn.oracle.get}
+       |${q92QuantizedAnn.oracle}
        |), f AS (
        |  SELECT COALESCE(a.query_id, b.query_id) AS query_id,
        |    COALESCE(a.neighbor_id, b.neighbor_id) AS neighbor_id,

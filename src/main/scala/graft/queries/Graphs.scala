@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.graph.Superstep
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
+import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,9 +49,6 @@ object Graphs {
     val nation = Tables(s, dir, "nation")
     val customer = Tables(s, dir, "customer")
     val supplier = Tables(s, dir, "supplier")
-    val vertices = nation
-      .select(col("n_nationkey").cast("long"), col("n_name"))
-      .rdd.map(r => (r.getLong(0): VertexId, r.getString(1)))
     val custEdges = customer
       .select(col("c_custkey"), col("c_nationkey").cast("long"))
       .rdd.map(r => Edge(1000000000000L + r.getLong(0), r.getLong(1), "IN_NATION"))

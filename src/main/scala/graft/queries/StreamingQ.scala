@@ -1569,7 +1569,7 @@ object StreamingQ {
     * against q188's UNCHANGED oracle. */
   val q191StreamEwmaRestart: Q = Q.sql(
     "q191_stream_ewma_restart",
-    q188StreamEwma.oracle.get,
+    q188StreamEwma.oracle,
     "checkpoint restart mid-feed of the buffered-fold EWMA state") {
     (s, dir) =>
       streamRestart("ewma-restart", s, dir)(ewmaFrame).select(
@@ -1587,7 +1587,7 @@ object StreamingQ {
     * invisible in the output. */
   val q159StreamAnomalyRestart: Q = Q.sql(
     "q159_stream_anomaly_restart",
-    q145StreamAnomaly.oracle.get,
+    q145StreamAnomaly.oracle,
     "checkpoint restart of ring-buffer + armed-timeout anomaly state") {
     (s, dir) =>
       streamRestart("anomaly-restart", s, dir)(anomalyFrame)
@@ -2234,7 +2234,7 @@ object StreamingQ {
     * q269's oracle verbatim. */
   val q270TokenBucketRestart: Q = Q.sql(
     "q270_token_bucket_restart",
-    q269TokenBucket.oracle.get,
+    q269TokenBucket.oracle,
     "checkpoint restart mid-feed of the token-bucket admission state") {
     (s, dir) =>
       streamRestart("token-bucket-restart", s, dir)(tokenBucketFrame)
@@ -2418,7 +2418,7 @@ object StreamingQ {
     * incarnation 2 resumes envelopes + buffer from the checkpoint. */
   val q289SemiRestart: Q = Q.sql(
     "q289_semi_restart",
-    q288SemiBuckets.oracle.get,
+    q288SemiBuckets.oracle,
     "checkpoint restart mid-feed of the bucket-envelope semi join state") {
     (s, dir) =>
       streamRestart("semi-buckets-restart", s, dir)(semiBucketsFrame)

@@ -4346,7 +4346,7 @@ object TextPipeline {
         size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
       val tot = tok.agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("n_tokens")).cast("long").as("n_tokens_tot"))
-      val thr = (50 to 90 by 10).map(lit(_)).toArray
+      val thr = (50 to 90 by 10).map(lit(_))
       mj.join(tok, Seq("doc_id"))
         .crossJoin(broadcast(tot))
         .select(col("maxj"), col("n_tokens"), col("n_tokens_tot"),

@@ -81,10 +81,10 @@ object GraftBridge {
     * (see [[graft.SessionCache]]): a cleanup that evicts the dataset's
     * `InMemoryRelation` from the session `CacheManager` AFTER the soft
     * ref has been GC-cleared. Needed because non-canonicalizing plans
-    * (`LogicalRDD` from `zipWithIndex` exports, the typed game pipeline)
-    * never `sameResult`-match their rebuilt incarnation, so without an
-    * explicit eviction each memory-pressure cycle would strand one more
-    * dead `InMemoryRelation` in the CacheManager.
+    * (the `LogicalRDD` of the PyG export's dense ids, the typed game
+    * pipeline) never `sameResult`-match their rebuilt incarnation, so
+    * without an explicit eviction each memory-pressure cycle would strand
+    * one more dead `InMemoryRelation` in the CacheManager.
     *
     * The closure holds the session and logical plan only WEAKLY: a
     * strong plan ref could pin the session (HadoopFsRelation references

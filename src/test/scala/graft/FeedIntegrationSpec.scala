@@ -2,15 +2,14 @@ package graft
 
 import graft.nba.{Fixture, GamePipeline, Model}
 import graft.ops.TimeKernel
-import graft.sources.Sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Raw-feed integration: serialize the fixture game into the reference's
   * wire shape — one JSON document with nested `game.actions`, ISO-8601
-  * count-down clock strings (`"PT11M32.00S"`), periods — then ingest via
-  * `Sources.jsonActions`, reconstruct global clocks with `TimeKernel`
+  * count-down clock strings (`"PT11M32.00S"`), periods — then parse it
+  * with `from_json` + `explode`, reconstruct global clocks with `TimeKernel`
   * (the reference's OT-aware clock math), and run the full pipeline.
   * The stints must equal those computed from the typed fixture directly:
   * the whole ingestion path (S6 + C7 + W4/W2/W3) is closed end-to-end.
@@ -51,7 +50,11 @@ class FeedIntegrationSpec extends AnyFunSuite {
       .add("subType", StringType).add("shotResult", StringType)
       .add("teamId", LongType).add("personId", LongType)
 
-    val parsed = Sources.jsonActions(Seq(json).toDF("json"), "json", schema)
+    val docSchema = new StructType()
+      .add("game", new StructType().add("actions", ArrayType(schema)))
+    val parsed = Seq(json).toDF("json")
+      .select(explode(from_json(col("json"), docSchema)("game")("actions")).as("a"))
+      .select(col("a.*"))
       .withColumn("global_clock",
         TimeKernel.globalClock(col("period"), col("clock")))
 

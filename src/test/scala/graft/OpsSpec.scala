@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.{AsOf, Chains, LongKeyJoin, Sessionize, TimeKernel}
+import graft.ops.{AsOf, LongKeyJoin, Sessionize, TimeKernel}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,7 +64,7 @@ class OpsSpec extends AnyFunSuite {
     val viaAsOf = AsOf.join(events, state.drop("end_t"), Seq("k"), "t", "start_t",
         payload = Seq("st_id"), tieBreak = Seq("st_id"))
       .select("ev_id", "st_id").as[(Long, Long)].collect().toMap
-    val viaInterval = AsOf.intervalJoin(events, state, Seq("k"), "t", "start_t", "end_t")
+    val viaInterval = OpsSpec.intervalJoin(events, state, Seq("k"), "t", "start_t", "end_t")
       .select("ev_id", "st_id").as[(Long, Long)].collect().toMap
     assert(viaAsOf == viaInterval)
     assert(viaAsOf == Map(1L -> 100L, 2L -> 101L, 3L -> 101L, 4L -> 200L))
@@ -79,23 +80,6 @@ class OpsSpec extends AnyFunSuite {
     val got = Sessionize(df, Seq("k"), "t", gapMicros = 30L * 1000000, tieBreak = Seq("id"))
       .select("id", "session_id").as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 1L))
-  }
-
-  test("Chains.next links successors; tail carries nulls") {
-    val df = Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 9L)).toDF("k", "id")
-    val got = Chains.next(df, Seq("k"), Seq("id"), Seq("id"))
-      .select("id", "next_id").as[(Long, Option[Long])].collect().toMap
-    assert(got == Map(1L -> Some(2L), 2L -> Some(3L), 3L -> None, 9L -> None))
-  }
-
-  test("Chains.tile closes intervals with the default end") {
-    val df = Seq((1L, ts("2024-01-01 00:00:00")), (1L, ts("2024-01-01 00:10:00")))
-      .toDF("k", "t")
-    val got = Chains.tile(df, Seq("k"), "t", lit(ts("2024-01-01 01:00:00")))
-      .select("t", "end_time")
-      .as[(java.sql.Timestamp, java.sql.Timestamp)].collect().toMap
-    assert(got(ts("2024-01-01 00:00:00")) == ts("2024-01-01 00:10:00"))
-    assert(got(ts("2024-01-01 00:10:00")) == ts("2024-01-01 01:00:00"))
   }
 
   test("TimeKernel parses ISO clocks and OT math") {
@@ -118,13 +102,6 @@ class OpsSpec extends AnyFunSuite {
       TimeKernel.compositeKey(col("n"), lit("x")).as("ck"))
       .as[(String, String)].collect().head
     assert(got == (("3_5_9", "7_x")))
-  }
-
-  test("TimeKernel sentinel handling") {
-    val df = Seq(-1L, 42L).toDF("v")
-    val got = df.select(TimeKernel.sentinelToNull(col("v")).as("v"))
-      .as[Option[Long]].collect().toSet
-    assert(got == Set(None, Some(42L)))
   }
 
   test("LongKeyJoin joins two sides that share attributes, as a self-join does") {
@@ -170,5 +147,31 @@ class OpsSpec extends AnyFunSuite {
       }
       assert(builds == Seq(Seq("bigint")), s"$keys $how build keys: $builds")
     }
+  }
+}
+
+object OpsSpec {
+
+  /** The direct equi+range interval join (J5 as literally written in the
+    * reference): events matched to state intervals `[start, end)` on equal
+    * keys. Catalyst plans it as a hash/sort-merge join on `keys` with the
+    * band as a post-join filter — correct when intervals tile time (each
+    * event matches exactly one interval), which makes it the reference
+    * `AsOf.join` is checked against.
+    */
+  def intervalJoin(
+      events: DataFrame,
+      intervals: DataFrame,
+      keys: Seq[String],
+      eventTime: String,
+      startCol: String,
+      endCol: String): DataFrame = {
+    val renamed = keys.foldLeft(intervals)((d, k) => d.withColumnRenamed(k, s"__ik_$k"))
+    val cond = keys
+      .map(k => events(k) === renamed(s"__ik_$k"))
+      .reduce(_ && _) &&
+      events(eventTime) >= renamed(startCol) &&
+      events(eventTime) < renamed(endCol)
+    events.join(renamed, cond, "inner").drop(keys.map(k => s"__ik_$k"): _*)
   }
 }

@@ -22,10 +22,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("every registered query carries a non-empty oracle") {
-    // rows-only registration exists as an escape hatch, but the gate's
-    // value is the hash compare — nothing currently ships without one
-    val missing = Registry.all.filter(q =>
-      q.oracle.isEmpty || q.oracle.exists(_.trim.isEmpty)).map(_.name)
+    val missing = Registry.all.filter(_.oracle.trim.isEmpty).map(_.name)
     assert(missing.isEmpty, s"oracle-less queries: ${missing.mkString(", ")}")
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Domain, Graphs, Relational, TextPipeline}
+import graft.queries.{Domain, Graphs, Relational}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.SparkTestSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
