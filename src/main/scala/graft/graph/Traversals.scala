@@ -3,8 +3,8 @@ package graft.graph
 import org.apache.spark.graphx.{EdgeDirection, Graph}
 
 /** GraphX traversal analytics over the exported hetero graph — the
-  * in-engine form of the reference's graph navigation
-  * (`/root/reference/docs/index.md:119-122`).
+  * in-engine form of the reference's graph navigation (its
+  * `docs/index.md:119-122`).
   */
 object Traversals {
 
